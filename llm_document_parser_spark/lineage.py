@@ -110,7 +110,6 @@ def run_with_lineage(
     Returns the job_id.
     """
     job_id = job_id or uuid.uuid4().hex
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
 
     done = completed_buckets(spark, lineage_path, job_id)
     todo = [b for b in range(num_buckets) if b not in done]
@@ -134,6 +133,7 @@ def run_with_lineage(
         # directories and is served from parquet row-group metadata.
         (
             out.write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
             .partitionBy("bucket")
             .parquet(results_path)
         )

@@ -9,7 +9,7 @@ driver loop (reference: src/batch_processor.py:13-69):
     → repartition by xxhash64(url) (+optional salt)       [skew balance]
     → payload_text_udf (Arrow pandas UDF: PDF/HTML/text)  [extract_udfs.py]
     → clean_text (native chain, X2)                       [textclean.py]
-    → document_type (heuristic rules or broadcast model)  [kind.py / ml/]
+    → document_type (heuristic keyword rules)             [kind.py]
     → patterns/contacts/names/entities/features (native)  [operators/*]
     → text_spans (native, from patterns)
     → results schema
@@ -18,10 +18,17 @@ Everything after the single pandas UDF is whole-stage-codegen'd JVM work; the
 reference's 4× spaCy re-parse per document (reference:
 src/document_parser.py:422,444,525,738) collapses into shared native
 subexpressions here.
+
+The column expressions are built once per live ``SparkContext``; see
+``extract_pipeline`` for why.
 """
 
 from __future__ import annotations
 
+import threading
+import weakref
+
+from pyspark import SparkContext
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -84,14 +91,72 @@ def text_spans_col(text: Column, patterns: Column) -> Column:
     return F.filter(spans, lambda s: s["start"] >= 0)
 
 
+_PlanColumns = tuple[Column, list[tuple[str, Column]]]
+
+
+def _plan_columns(use_spacy_ner: bool) -> _PlanColumns:
+    """The plan's column expressions: ``doc_kind`` (applied before the
+    optional repartition) and every later column in ``withColumn`` order.
+    The spaCy path leaves ``entities`` to its own Python stage."""
+    doc_kind = doc_kind_col(F.col("html"))
+    text = F.col("extracted_text")
+    after = [
+        ("raw_text", payload_text_udf(F.col("html"), F.col("doc_kind"))),
+        ("extracted_text", clean_text_col(F.col("raw_text"))),
+        ("document_type", document_type_col(text)),
+        ("patterns", patterns_map(text, F.col("document_type"))),
+        ("contacts", contacts_map(text)),
+        ("names", holder_names_struct(text)),
+        ("features", features_struct(text)),
+        ("text_spans", text_spans_col(text, F.col("patterns"))),
+        ("success", F.length(text) > 0),
+        (
+            "error",
+            F.when(
+                F.length(text) == 0,
+                F.lit("No text could be extracted from the document"),
+            ),
+        ),
+        ("processing_time", F.current_timestamp()),
+    ]
+    if not use_spacy_ner:
+        after.append(("entities", entities_map(text)))
+    return doc_kind, after
+
+
+# SparkContext -> {use_spacy_ner: _plan_columns(...)}. Weak keys: a stopped
+# context's entry goes with it.
+_PLAN_COLUMNS: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+_PLAN_COLUMNS_LOCK = threading.Lock()
+
+
+def _plan_columns_for(sc: SparkContext, use_spacy_ner: bool) -> _PlanColumns:
+    """``_plan_columns(use_spacy_ner)``, built under a lock so concurrent
+    first calls (a stream's ``foreachBatch`` thread and the driver thread)
+    share one build."""
+    with _PLAN_COLUMNS_LOCK:
+        by_mode = _PLAN_COLUMNS.setdefault(sc, {})
+        if use_spacy_ner not in by_mode:
+            by_mode[use_spacy_ner] = _plan_columns(use_spacy_ner)
+        return by_mode[use_spacy_ner]
+
+
 def extract_pipeline(
     pages: DataFrame,
     repartition_to: int | None = None,
-    doc_type_col_fn=document_type_col,
     use_spacy_ner: bool | None = None,
     nlp_factory=None,
 ) -> DataFrame:
     """Build the full extraction plan over a pages DataFrame.
+
+    The column expressions are built once per live ``SparkContext`` and NER
+    mode, then reused: building them costs thousands of py4j round trips
+    of serial driver time, and the lineage runner, the stream and the
+    catalog queries call this once per commit group, micro-batch or
+    query. A ``Column`` is an unresolved, immutable expression, so reuse
+    across queries and threads is safe; the cached columns are applied in
+    the same ``withColumn`` order, so the analyzed and optimized plans are
+    unchanged.
 
     ``repartition_to``: explicit pre-UDF repartition width. At cluster scale
     this is set to ~2-3× total cores; pass None to keep scan partitioning
@@ -111,36 +176,16 @@ def extract_pipeline(
     """
     if use_spacy_ner is None:
         use_spacy_ner = nlp_factory is not None or ner.spacy_model_available()
-    df = pages.withColumn("doc_kind", doc_kind_col(F.col("html")))
+    doc_kind, after = _plan_columns_for(pages.sparkSession.sparkContext, use_spacy_ner)
+
+    df = pages.withColumn("doc_kind", doc_kind)
     if repartition_to:
         df = df.repartition(repartition_to, F.xxhash64("url"))
-
-    df = df.withColumn("raw_text", payload_text_udf(F.col("html"), F.col("doc_kind")))
-    df = df.withColumn("extracted_text", clean_text_col(F.col("raw_text")))
-
-    text = F.col("extracted_text")
-    df = df.withColumn("document_type", doc_type_col_fn(text))
-    df = df.withColumn("patterns", patterns_map(text, F.col("document_type")))
-    df = (
-        df.withColumn("contacts", contacts_map(text))
-        .withColumn("names", holder_names_struct(text))
-        .withColumn("features", features_struct(text))
-        .withColumn("text_spans", text_spans_col(text, F.col("patterns")))
-        .withColumn("success", F.length(text) > 0)
-        .withColumn(
-            "error",
-            F.when(
-                F.length(text) == 0,
-                F.lit("No text could be extracted from the document"),
-            ),
-        )
-        .withColumn("processing_time", F.current_timestamp())
-    )
+    for name, col in after:
+        df = df.withColumn(name, col)
     if use_spacy_ner:
         df = df.select([c for c in RESULT_COLUMNS if c != "entities"])
         df = spacy_entities_stage(
             df, text_col="extracted_text", out_col="entities", nlp_factory=nlp_factory
         )
-    else:
-        df = df.withColumn("entities", entities_map(text))
     return df.select(*RESULT_COLUMNS)

@@ -101,6 +101,20 @@ def test_transform_executes_once_per_group_and_per_bucket_rows(spark, tmp_path):
         assert got[b] == n, f"bucket {b}"
 
 
+def test_run_leaves_session_conf_unchanged(spark, tmp_path):
+    """Dynamic partition overwrite is a per-write option: the caller's
+    session keeps its own overwrite mode for every later write."""
+    key = "spark.sql.sources.partitionOverwriteMode"
+    spark.conf.set(key, "static")  # Spark's default
+    pages = generate_pages(spark, 10, seed=9, partitions=2)
+    run_with_lineage(
+        spark, pages, _transform, str(tmp_path / "results"),
+        str(tmp_path / "lineage"), job_id="conf", num_buckets=4,
+        buckets_per_commit=2,
+    )
+    assert spark.conf.get(key) == "static"
+
+
 def test_completed_buckets_propagates_non_missing_errors(spark, tmp_path):
     """A corrupt lineage table must raise, not masquerade as a fresh job."""
     from pyspark.errors import AnalysisException
