@@ -10,6 +10,8 @@ src/batch_processor.py:58-66) with durable tables:
   overwrite → re-running a bucket replaces, never duplicates);
 * after each bucket group commits, a lineage row
   (job_id, bucket, status, rows, started_at, finished_at, attempt) appends;
+  ``rows`` is observed on the group's write itself (a ``pyspark.sql.Observation``
+  in the write's result stage), so a commit is one data job, no re-read;
 * resume = anti-join the bucket list against completed lineage rows — only
   unfinished buckets are recomputed. Exactly-once appearance comes from the
   deterministic bucket→output-partition mapping, not from coordination.
@@ -26,7 +28,7 @@ import datetime as _dt
 import uuid
 
 from pyspark.errors import AnalysisException
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from .schemas import LINEAGE_SCHEMA
@@ -65,7 +67,7 @@ def completed_buckets(spark: SparkSession, lineage_path: str, job_id: str) -> se
         # Only a missing lineage table means "fresh job"; any other read
         # failure (corrupt footer, permissions, storage blip) must surface —
         # swallowing it would silently trigger a full recompute.
-        if "PATH_NOT_FOUND" in str(e):
+        if e.getCondition() == "PATH_NOT_FOUND":
             return set()
         raise
 
@@ -78,14 +80,19 @@ def _append_lineage(
     started_at: _dt.datetime,
     attempt: int,
 ) -> None:
-    now = _dt.datetime.now()
-    recs = [
-        (job_id, int(b), "completed", int(n), started_at, now, attempt)
+    # One JVM-side VALUES relation: no pickled Python RDD, no Python
+    # workers. Integers are inlined; the job id and timestamps go in as
+    # parameters, converted like createDataFrame converts them.
+    rows = ", ".join(
+        f"(:job_id, {int(b)}L, 'completed', {int(n)}L, :started_at, :finished_at, {int(attempt)}L)"
         for b, n in sorted(bucket_rows.items())
-    ]
-    spark.createDataFrame(recs, LINEAGE_SCHEMA).write.mode("append").parquet(
-        lineage_path
     )
+    names = ", ".join(LINEAGE_SCHEMA.names)
+    recs = spark.sql(
+        f"SELECT * FROM VALUES {rows} AS t({names})",
+        args={"job_id": job_id, "started_at": started_at, "finished_at": _dt.datetime.now()},
+    )
+    recs.coalesce(1).write.mode("append").parquet(lineage_path)
 
 
 def run_with_lineage(
@@ -126,30 +133,24 @@ def run_with_lineage(
         subset = bucketed.filter(F.col("bucket").isin([int(b) for b in group]))
         out = transform(subset.drop("bucket"))
         out = with_bucket(out, num_buckets, key=key)
-        # Write FIRST, then count from the committed partitions: counting the
-        # plan before writing would execute the (pandas-UDF-dominated)
-        # extraction twice per group — 2x the whole job at the 10^12-row
-        # design point. The post-write count prunes to the group's bucket=
-        # directories and is served from parquet row-group metadata.
+        # Count while writing: an observation in the write's result stage
+        # gives the committed rows per bucket (Spark applies a result task's
+        # accumulator updates once per partition, so retries do not
+        # double-count). Counting the plan before writing would execute the
+        # (pandas-UDF-dominated) extraction twice per group, and re-reading
+        # the committed partitions to count them costs more jobs.
+        obs = Observation()
+        out = out.observe(
+            obs, *[F.count_if(F.col("bucket") == b).alias(str(b)) for b in group]
+        )
         (
             out.write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")
             .partitionBy("bucket")
             .parquet(results_path)
         )
-        # pin the schema on the re-read: a FILTERING transform (e.g. the
-        # curation semi-join) can legally commit zero rows for a group, and
-        # an inference read of a data-file-less results dir throws
-        # UNABLE_TO_INFER_SCHEMA instead of returning empty
-        counted = (
-            spark.read.schema(out.schema).parquet(results_path)
-            .filter(F.col("bucket").isin([int(b) for b in group]))
-            .groupBy("bucket")
-            .count()
-            .collect()
-        )
-        bucket_rows = {int(b): 0 for b in group}
-        bucket_rows.update({int(r["bucket"]): int(r["count"]) for r in counted})
+        observed = obs.get
+        bucket_rows = {int(b): int(observed[str(b)]) for b in group}
         _append_lineage(spark, lineage_path, job_id, bucket_rows, started, attempt=1)
     return job_id
 

@@ -18,7 +18,7 @@ timestamps are the norm.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
@@ -48,7 +48,9 @@ def start_extract_stream(
     max_files_per_trigger: int | None = 4,
 ) -> StreamingQuery:
     """readStream → extract_pipeline → parquet sink via foreachBatch, with a
-    per-micro-batch success/fail rollup (A4) written to a metrics table.
+    per-micro-batch success/fail rollup (A4) written to a metrics table. The
+    rollup's counts are observed on the batch's own write, so a batch runs
+    one extraction job and caches nothing.
 
     foreachBatch alone is at-least-once: a crash after a (partial or
     complete) write but before the checkpoint commit replays the batch. The
@@ -64,34 +66,32 @@ def start_extract_stream(
         results = extract_pipeline(batch_df).withColumn(
             "batch_id", F.lit(batch_id).cast("long")
         )
-        results.persist()
-        try:
+        obs = Observation()
+        (
+            results.observe(
+                obs,
+                F.count("*").alias("total"),
+                F.sum(F.when(F.col("success"), 1).otherwise(0)).cast("long").alias("successful"),
+                F.sum(F.when(~F.col("success"), 1).otherwise(0)).cast("long").alias("failed"),
+            )
+            .write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("batch_id")
+            .parquet(results_path)
+        )
+        if metrics_path is not None:
+            counts = obs.get
+            rollup = batch_df.sparkSession.range(1, numPartitions=1).select(
+                F.lit(batch_id).cast("long").alias("batch_id"),
+                *[F.lit(counts[c]).cast("long").alias(c) for c in ("total", "successful", "failed")],
+                F.current_timestamp().alias("finished_at"),
+            )
             (
-                results.write.mode("overwrite")
+                rollup.write.mode("overwrite")
                 .option("partitionOverwriteMode", "dynamic")
                 .partitionBy("batch_id")
-                .parquet(results_path)
+                .parquet(metrics_path)
             )
-            if metrics_path is not None:
-                rollup = results.agg(
-                    F.lit(batch_id).cast("long").alias("batch_id"),
-                    F.count("*").alias("total"),
-                    F.sum(F.when(F.col("success"), 1).otherwise(0))
-                    .cast("long")
-                    .alias("successful"),
-                    F.sum(F.when(~F.col("success"), 1).otherwise(0))
-                    .cast("long")
-                    .alias("failed"),
-                    F.current_timestamp().alias("finished_at"),
-                )
-                (
-                    rollup.write.mode("overwrite")
-                    .option("partitionOverwriteMode", "dynamic")
-                    .partitionBy("batch_id")
-                    .parquet(metrics_path)
-                )
-        finally:
-            results.unpersist()
 
     stream = stream_pages(spark, pages_path, max_files_per_trigger)
     return (

@@ -2,13 +2,20 @@
 
 from __future__ import annotations
 
+from pyspark.sql import functions as F
+
 from llm_document_parser_spark.datagen import generate_pages
 from llm_document_parser_spark.streaming.ingest import start_extract_stream
+
+
+def _persistent_rdds(spark):
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
 
 
 def test_stream_extracts_all_pages_with_metrics(spark, tmp_path):
     pages_path = str(tmp_path / "pages")
     generate_pages(spark, 40, seed=9, partitions=4).write.parquet(pages_path)
+    persisted = _persistent_rdds(spark)
 
     q = start_extract_stream(
         spark,
@@ -29,6 +36,16 @@ def test_stream_extracts_all_pages_with_metrics(spark, tmp_path):
     assert len(rows) >= 2  # throttle forced multiple micro-batches
     assert sum(r["total"] for r in rows) == 40
     assert sum(r["successful"] for r in rows) == 40
+    # each batch's metrics row equals an aggregate over its committed rows
+    want = results.groupBy("batch_id").agg(
+        F.count("*").alias("total"),
+        F.sum(F.col("success").cast("long")).alias("successful"),
+        F.sum((~F.col("success")).cast("long")).alias("failed"),
+    )
+    assert sorted(metrics.drop("finished_at").collect()) == sorted(
+        want.select(*metrics.drop("finished_at").columns).collect()
+    )
+    assert _persistent_rdds(spark) == persisted  # the sink caches nothing
 
 
 def test_stream_restart_is_exactly_once(spark, tmp_path):
