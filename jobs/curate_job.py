@@ -50,6 +50,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import functions as F
 
 from llm_document_parser_spark import lineage
+from llm_document_parser_spark.materialize import storage_scope
 from llm_document_parser_spark.operators import decontaminate, dedup, textstats
 from llm_document_parser_spark.session import get_spark
 
@@ -194,45 +195,47 @@ def run_curation(
     # tiny (id, verdict) table. Deterministic (CC fixpoint is unique), so a
     # committed table from a killed prior attempt is safe to reuse.
     if not (job_id and lineage.success_marker_exists(spark, verdicts_path)):
-        _, labeled = curate(
-            results, id_col=id_col, text_col=text_col, **curate_kwargs
-        )
-        if budget_tokens:
-            from llm_document_parser_spark.operators.sampling import (
-                sample_to_token_budget,
+        # the operators' checkpoints are freed once the verdicts are written
+        with storage_scope():
+            _, labeled = curate(
+                results, id_col=id_col, text_col=text_col, **curate_kwargs
             )
-
-            kept_docs = labeled.filter(F.col("verdict") == "kept")
-            tokens_col = None
-            if tokenizer == "exact":
-                from llm_document_parser_spark.operators.tokenizers import (
-                    exact_token_counts,
+            if budget_tokens:
+                from llm_document_parser_spark.operators.sampling import (
+                    sample_to_token_budget,
                 )
 
-                # raises RuntimeError when tiktoken is absent and no
-                # encoder_factory is injected — by design (see docstring)
-                kept_docs = exact_token_counts(
-                    kept_docs, text_col=text_col, out_col="bpe_tokens",
-                    encoder_factory=encoder_factory,
+                kept_docs = labeled.filter(F.col("verdict") == "kept")
+                tokens_col = None
+                if tokenizer == "exact":
+                    from llm_document_parser_spark.operators.tokenizers import (
+                        exact_token_counts,
+                    )
+
+                    # raises RuntimeError when tiktoken is absent and no
+                    # encoder_factory is injected — by design (see docstring)
+                    kept_docs = exact_token_counts(
+                        kept_docs, text_col=text_col, out_col="bpe_tokens",
+                        encoder_factory=encoder_factory,
+                    )
+                    tokens_col = F.col("bpe_tokens")
+                elif tokenizer != "whitespace":
+                    raise ValueError(f"unknown tokenizer: {tokenizer!r}")
+                in_budget = sample_to_token_budget(
+                    kept_docs,
+                    budget_tokens, group_col=budget_group,
+                    id_col=id_col, text_col=text_col, tokens_col=tokens_col,
+                ).select(id_col, F.lit(True).alias("in_budget"))
+                labeled = labeled.join(in_budget, id_col, "left").withColumn(
+                    "verdict",
+                    F.when(
+                        (F.col("verdict") == "kept") & F.col("in_budget").isNull(),
+                        F.lit("budget_out"),
+                    ).otherwise(F.col("verdict")),
                 )
-                tokens_col = F.col("bpe_tokens")
-            elif tokenizer != "whitespace":
-                raise ValueError(f"unknown tokenizer: {tokenizer!r}")
-            in_budget = sample_to_token_budget(
-                kept_docs,
-                budget_tokens, group_col=budget_group,
-                id_col=id_col, text_col=text_col, tokens_col=tokens_col,
-            ).select(id_col, F.lit(True).alias("in_budget"))
-            labeled = labeled.join(in_budget, id_col, "left").withColumn(
-                "verdict",
-                F.when(
-                    (F.col("verdict") == "kept") & F.col("in_budget").isNull(),
-                    F.lit("budget_out"),
-                ).otherwise(F.col("verdict")),
+            labeled.select(id_col, "verdict").write.mode("overwrite").parquet(
+                verdicts_path
             )
-        labeled.select(id_col, "verdict").write.mode("overwrite").parquet(
-            verdicts_path
-        )
     verdicts = spark.read.parquet(verdicts_path)
     kept_ids = verdicts.filter(F.col("verdict") == "kept").select(id_col)
 

@@ -63,24 +63,6 @@ def iceberg_available() -> bool:
     return any(glob.glob(os.path.join(d, _ICEBERG_JAR_GLOB)) for d in jar_dirs)
 
 
-def iceberg_session_conf(
-    warehouse: str, catalog: str = "local"
-) -> dict[str, str]:
-    """extra_conf for ``session.get_spark`` registering a Hadoop-backed
-    Iceberg catalog. On a real cluster the catalog is usually Glue/REST/Hive;
-    only the ``type`` and its endpoint settings change — table identifiers
-    and every read/write below stay the same."""
-    pfx = f"spark.sql.catalog.{catalog}"
-    return {
-        "spark.sql.extensions": (
-            "org.apache.iceberg.spark.extensions.IcebergSparkSessionExtensions"
-        ),
-        pfx: "org.apache.iceberg.spark.SparkCatalog",
-        f"{pfx}.type": "hadoop",
-        f"{pfx}.warehouse": warehouse,
-    }
-
-
 def is_table_identifier(source: str) -> bool:
     """``catalog.db.table`` vs filesystem/URI path: paths contain a
     separator or scheme (``s3://…``, ``/data/pages``); identifiers are

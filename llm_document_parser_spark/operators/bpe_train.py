@@ -21,8 +21,7 @@ the corpus:
   tie-break: count desc, then pair lexicographic), then one native
   ``F.aggregate`` left-fold re-segments the vocab — zero Python in any
   hot path; the driver holds only the 1-row winner per iteration
-  (same loop discipline as ``links.pagerank``, with periodic
-  ``localCheckpoint`` to truncate the fold lineage).
+  (a checkpoint every few merges truncates the fold lineage).
 * :func:`segment_words` / :func:`encode_tokens`: applying learned merges
   to a corpus re-uses the same trick — segment DISTINCT words once, then
   broadcast-join the segmentation back onto the token stream.
@@ -38,6 +37,12 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from ..materialize import checkpoint, storage_scope
+
+#: learn_bpe checkpoints the vocab table every this many merges, bounding
+#: the fold lineage
+_CHECKPOINT_EVERY = 8
 
 #: lowercase + alpha-runs only: keeps the symbol alphabet closed under
 #: merging and the word table small; callers needing full punctuation
@@ -106,44 +111,39 @@ def learn_bpe(
     words: DataFrame,
     num_merges: int,
     min_pair_count: int = 1,
-    checkpoint_every: int = 8,
 ) -> list[tuple[str, str, int]]:
     """Learn up to ``num_merges`` merge rules from a (word, cnt) table.
 
     Returns [(a, b, pair_count), …] in learned order. Stops early when
-    no pair reaches ``min_pair_count``. The input is materialized with an
-    eager ``localCheckpoint`` before the loop — without it every
-    iteration's argmax re-runs the caller's corpus-scale word-count
-    lineage (measured: 8 merges cost 8 corpus shuffles instead of 1,
-    30.5 s → 3.5 s on the 50k bench corpus). After that, each iteration
-    costs one shuffle over the vocab table only; ``checkpoint_every``
-    bounds the fold-lineage depth exactly like the PageRank loop."""
-    cur = words.select(
-        "word", "cnt", F.split("word", "").alias("syms")
-    ).localCheckpoint(eager=True)
-    ckpts = [cur]  # keep ≤2 live, like the PageRank loop
+    no pair reaches ``min_pair_count``. The input is checkpointed before
+    the loop — without it every iteration's argmax re-runs the caller's
+    corpus-scale word-count lineage (measured: 8 merges cost 8 corpus
+    shuffles instead of 1, 30.5 s → 3.5 s on the 50k bench corpus). After
+    that, each iteration costs one shuffle over the vocab table only, and
+    a checkpoint every ``_CHECKPOINT_EVERY`` merges bounds the fold-lineage
+    depth. The merges are driver-side, so every checkpoint is freed on
+    return."""
     merges: list[tuple[str, str, int]] = []
-    for i in range(num_merges):
-        best = (
-            _pair_counts(cur)
-            .orderBy(F.desc("pair_count"), F.asc("a"), F.asc("b"))
-            .limit(1)
-            .collect()
+    with storage_scope():
+        cur = checkpoint(
+            words.select("word", "cnt", F.split("word", "").alias("syms"))
         )
-        if not best or best[0]["pair_count"] < min_pair_count:
-            break
-        a, b, n = best[0]["a"], best[0]["b"], best[0]["pair_count"]
-        merges.append((a, b, int(n)))
-        cur = cur.withColumn("syms", merge_pair(F.col("syms"), a, b))
-        # no checkpoint after the LAST merge: nothing reads cur again, so
-        # the materialization (vocab x full fold chain) would be wasted
-        if (i + 1) % checkpoint_every == 0 and (i + 1) < num_merges:
-            cur = cur.localCheckpoint(eager=True)
-            ckpts.append(cur)
-            if len(ckpts) > 2:
-                ckpts.pop(0).unpersist()
-    for df in ckpts:
-        df.unpersist()
+        for i in range(num_merges):
+            best = (
+                _pair_counts(cur)
+                .orderBy(F.desc("pair_count"), F.asc("a"), F.asc("b"))
+                .limit(1)
+                .collect()
+            )
+            if not best or best[0]["pair_count"] < min_pair_count:
+                break
+            a, b, n = best[0]["a"], best[0]["b"], best[0]["pair_count"]
+            merges.append((a, b, int(n)))
+            cur = cur.withColumn("syms", merge_pair(F.col("syms"), a, b))
+            # no checkpoint after the LAST merge: nothing reads cur again, so
+            # the materialization (vocab x full fold chain) would be wasted
+            if (i + 1) % _CHECKPOINT_EVERY == 0 and (i + 1) < num_merges:
+                cur = checkpoint(cur)
     return merges
 
 
@@ -155,8 +155,8 @@ def segment_words(
     Builds one nested native fold per merge rule; run it on DISTINCT
     words (vocab-sized), never the raw token stream — then join back
     (:func:`encode_tokens`). For merge lists beyond a few hundred rules
-    split the application into chunks with ``localCheckpoint`` between
-    them to keep the codegen tree bounded."""
+    split the application into chunks with a checkpoint between them to
+    keep the codegen tree bounded."""
     syms = F.split("word", "")
     for a, b, _ in merges:
         syms = merge_pair(syms, a, b)

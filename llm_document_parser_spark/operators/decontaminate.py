@@ -27,6 +27,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..materialize import checkpoint
+
 from .dedup import _exploded_shingles, shingles_col  # noqa: F401 (shingles_col: API compat)
 
 
@@ -115,7 +117,7 @@ def contamination_report(
         # the benchmark gram table is consumed three times on this path
         # (sizing count, bitmap aggregation, final join) — materialize it
         # once; it is benchmark-sized (small by contract), never corpus
-        bench = bench.localCheckpoint(eager=True)
+        bench = checkpoint(bench)
         bench_keys = bench.select(key).distinct()
         bloom = build_seen_bloom(bench_keys, url_col=key, fpp=bloom_fpp)
         doc_ngrams = filter_might_contain(doc_ngrams, bloom, col=key)

@@ -26,6 +26,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..materialize import checkpoint, fixpoint, storage_scope
 from .textstats import tokens_col
 
 # ---------------------------------------------------------------------------
@@ -109,39 +110,6 @@ def _exploded_shingles(
                 for j in range(shingle_k)
             ],
         ).alias("s"),
-    )
-
-
-def minhash_signature(shingles: Column, num_hashes: int = 8) -> Column:
-    """ARRAY<STRING> of per-hash-function minima: element h is
-    min(md5(h || ':' || shingle)) — the md5-hex-string analog of k
-    independent min-hash functions. Empty shingle set → NULL mins."""
-    return F.array(
-        *[
-            F.array_min(
-                F.transform(shingles, lambda s: F.md5(F.concat(F.lit(f"{h}:"), s)))
-            )
-            for h in range(num_hashes)
-        ]
-    )
-
-
-def lsh_bands(sig: Column, bands: int, rows_per_band: int) -> Column:
-    """ARRAY<STRUCT<band INT, key STRING>> — banded LSH keys."""
-    return F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band"),
-                F.concat_ws(
-                    "|",
-                    *[
-                        F.try_element_at(sig, F.lit(b * rows_per_band + r + 1))
-                        for r in range(rows_per_band)
-                    ],
-                ).alias("key"),
-            )
-            for b in range(bands)
-        ]
     )
 
 
@@ -383,16 +351,16 @@ def verified_near_dup_pairs(
     HOF, no per-doc array materialization), and the distinct shingle
     ARRAYS needed for exact Jaccard are computed only for documents that
     actually appear in a candidate pair — a semi-join back to the input.
-    The candidate pair list is the thing ``localCheckpoint``-ed (it is
+    The candidate pair list is the thing checkpointed (it is
     ids only, tiny next to a corpus-wide shingle-array table, and it is
     consumed three times: the pair list itself plus the two
     candidate-doc legs). At corpus scale the same shape holds: the LSH
     index never materializes shingle sets, and verification touches only
     the candidate neighborhood."""
-    cands = _pairs_from_exploded_shingles(
+    cands = checkpoint(_pairs_from_exploded_shingles(
         _exploded_shingles(df, id_col, text_col, shingle_k),
         num_hashes, bands, hash_fn,
-    ).localCheckpoint()
+    ))
     cand_ids = (
         cands.select(F.col("id_a").alias("_vid"))
         .unionByName(cands.select(F.col("id_b").alias("_vid")))
@@ -538,76 +506,60 @@ def connected_components(
     edges and takes the per-node minimum. Iterations = cluster diameter
     (near-dup clusters are shallow — boilerplate families link through
     hubs), each iteration one equi-join + one agg, all distributed, no
-    driver-side data. ``localCheckpoint`` truncates lineage every
-    iteration so the plan doesn't grow superlinearly (on a cluster this
-    re-computes from the checkpointed blocks, the standard iterative-graph
-    pattern; GraphFrames does the same under the hood).
+    driver-side data. The loop is ``materialize.fixpoint``.
 
     Deterministic: the fixpoint (min reachable id per node) is unique
     regardless of join order. Raises after ``max_iterations`` without
     convergence (pathological chain longer than the limit) rather than
     returning a partial clustering.
     """
-    # materialize the edge table ONCE, hash-partitioned and sorted on the
-    # per-iteration join key (the propagate_trust edge-table discipline):
-    # localCheckpoint preserves partitioning and ordering, so every
-    # iteration's edges⋈labels join reads the edges side exchange-free
-    # and sort-free instead of re-shuffling the (src,dst)-partitioned
-    # distinct output each round
-    edges = (
-        pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
-        .unionByName(
-            pairs.select(F.col(id_b).alias("src"), F.col(id_a).alias("dst"))
-        )
-        .distinct()
-        .repartition(F.col("src"))
-        .sortWithinPartitions("src")
-        .localCheckpoint()
-    )
-    labels = (
-        edges.select(F.col("src").alias("id"))
-        .distinct()
-        .withColumn("label", F.col("id"))
-        .localCheckpoint()
-    )
-    ckpt = labels
-    for _ in range(max_iterations):
-        # the OLD label rides through the min-agg (non-null only on the
-        # self arm, one per id since edge dsts ⊆ label ids), so the
-        # convergence check reads the checkpointed result instead of
-        # re-joining new labels against old — one join + one shuffle less
-        # per iteration. Labels only ever decrease, so changed ⇔ any
-        # new label < old label.
-        propagated = (
-            edges.join(labels, edges["src"] == labels["id"])
-            .select(
-                F.col("dst").alias("id"),
-                "label",
-                F.lit(None).cast(labels.schema["label"].dataType).alias("old"),
-            )
+    with storage_scope():
+        # the edge table ONCE, hash-partitioned and sorted on src as in
+        # links._edge_table: every iteration's edges⋈labels join reads it
+        # exchange-free and sort-free instead of re-shuffling the
+        # (src,dst)-partitioned distinct output each round
+        edges = checkpoint(
+            pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
             .unionByName(
-                labels.select("id", "label", F.col("label").alias("old"))
+                pairs.select(F.col(id_b).alias("src"), F.col(id_a).alias("dst"))
             )
-            .groupBy("id")
-            .agg(F.min("label").alias("label"), F.max("old").alias("old"))
-            .localCheckpoint()
+            .distinct()
+            .repartition(F.col("src"))
+            .sortWithinPartitions("src")
         )
-        changed = (
-            propagated.filter(F.col("label") < F.col("old")).limit(1).count()
+
+        def step(state: DataFrame) -> DataFrame:
+            # the OLD label rides through the min-agg (non-null only on the
+            # self arm, one per id since edge dsts ⊆ label ids), so the
+            # convergence check reads the checkpointed result instead of
+            # re-joining new labels against old — one join + one shuffle
+            # less per iteration. Labels only ever decrease, so changed ⇔
+            # any new label < old label.
+            labels = state.select("id", "label")
+            return (
+                edges.join(labels, edges["src"] == labels["id"])
+                .select(
+                    F.col("dst").alias("id"),
+                    "label",
+                    F.lit(None).cast(labels.schema["label"].dataType).alias("old"),
+                )
+                .unionByName(
+                    labels.select("id", "label", F.col("label").alias("old"))
+                )
+                .groupBy("id")
+                .agg(F.min("label").alias("label"), F.max("old").alias("old"))
+            )
+
+        labels = fixpoint(
+            edges.select(F.col("src").alias("id")).distinct()
+            .withColumn("label", F.col("id")),
+            step,
+            iterations=max_iterations,
+            converged=lambda s: (
+                s.filter(F.col("label") < F.col("old")).limit(1).count() == 0
+            ),
         )
-        # propagated is materialized (checkpointed) and `changed` consumed
-        # the old labels — drop the stale iteration's blocks so executor
-        # storage stays O(1) in iteration count on large pair graphs
-        ckpt.unpersist()
-        ckpt = propagated
-        labels = propagated.select("id", "label")
-        if changed == 0:
-            edges.unpersist()
-            return labels.select("id", F.col("label").alias("component"))
-    edges.unpersist()
-    raise RuntimeError(
-        f"connected_components did not converge in {max_iterations} iterations"
-    )
+    return labels.select("id", F.col("label").alias("component"))
 
 
 def near_dup_clusters(

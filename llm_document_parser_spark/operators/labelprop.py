@@ -32,9 +32,7 @@ Scale shape (the 10^12-edge plan): per iteration exactly one
 scores⋈edges equi-join on src_host and one groupBy dst_host — both
 key-partitioned shuffles that AQE coalesces; the seed table is a
 broadcast left join (seed sets are thousands of rows, not billions);
-``localCheckpoint`` + ``unpersist`` every few iterations truncates
-lineage and releases superseded executor storage, the same discipline as
-links.pagerank and dedup.connected_components.
+the loop is ``materialize.fixpoint``.
 """
 
 from __future__ import annotations
@@ -42,13 +40,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..materialize import fixpoint, storage_scope
+from .links import _edge_table
+
 
 def propagate_trust(
     edges: DataFrame,
     seeds: DataFrame,
     iterations: int = 3,
     alpha: float = 0.85,
-    checkpoint_every: int = 4,
 ) -> DataFrame:
     """Trust scores after ``iterations`` rounds of seeded propagation.
 
@@ -58,60 +58,48 @@ def propagate_trust(
     """
     if iterations < 0:
         raise ValueError("iterations must be >= 0")
-    # materialize the edge table ONCE, hash-partitioned and sorted on the
-    # per-iteration join key: localCheckpoint preserves partitioning and
-    # ordering, so every iteration's scores⋈edges sort-merge join (and
-    # the out_weight agg) reads the edges side exchange-free and
-    # sort-free — the in-memory analog of a bucketed+sorted edge table,
-    # which is how a 10^12-edge graph would persist it anyway.
-    edges = (
-        edges.select("src_host", "dst_host", "n_links")
-        .repartition(F.col("src_host"))
-        .sortWithinPartitions("src_host")
-        .localCheckpoint(eager=True)
-    )
-    seeds = seeds.select("host", F.col("seed").cast("double").alias("seed"))
-    out_w = edges.groupBy("src_host").agg(F.sum("n_links").alias("out_weight"))
-    nodes = (
-        edges.select(F.col("src_host").alias("host"))
-        .union(edges.select(F.col("dst_host").alias("host")))
-        .union(seeds.select("host"))
-        .distinct()
-    )
-    # (host, seed, out_weight|null); score_0 = seed
-    state = (
-        nodes.join(F.broadcast(seeds), "host", "left")
-        .withColumn("seed", F.coalesce(F.col("seed"), F.lit(0.0)))
-        .join(out_w, nodes.host == out_w.src_host, "left")
-        .select("host", "seed", "out_weight", F.col("seed").alias("score"))
-    )
-    state = state.localCheckpoint(eager=True)
-    last_ckpt = state
-    for i in range(iterations):
-        contribs = (
-            state.join(edges, state.host == edges.src_host)
-            .select(
-                F.col("dst_host").alias("host"),
-                (F.col("score") * F.col("n_links") / F.col("out_weight")).alias("c"),
-            )
-            .groupBy("host")
-            .agg(F.sum("c").alias("in_mass"))
+    with storage_scope():
+        edges = _edge_table(edges)
+        seeds = seeds.select("host", F.col("seed").cast("double").alias("seed"))
+        out_w = edges.groupBy("src_host").agg(F.sum("n_links").alias("out_weight"))
+        nodes = (
+            edges.select(F.col("src_host").alias("host"))
+            .union(edges.select(F.col("dst_host").alias("host")))
+            .union(seeds.select("host"))
+            .distinct()
         )
-        state = (
-            state.select("host", "seed", "out_weight")
-            .join(contribs, "host", "left")
-            .select(
-                "host",
-                "seed",
-                "out_weight",
-                (
-                    (1.0 - alpha) * F.col("seed")
-                    + alpha * F.coalesce(F.col("in_mass"), F.lit(0.0))
-                ).alias("score"),
+
+        def step(state: DataFrame) -> DataFrame:
+            contribs = (
+                state.join(edges, state.host == edges.src_host)
+                .select(
+                    F.col("dst_host").alias("host"),
+                    (F.col("score") * F.col("n_links") / F.col("out_weight")).alias("c"),
+                )
+                .groupBy("host")
+                .agg(F.sum("c").alias("in_mass"))
             )
+            return (
+                state.select("host", "seed", "out_weight")
+                .join(contribs, "host", "left")
+                .select(
+                    "host",
+                    "seed",
+                    "out_weight",
+                    (
+                        (1.0 - alpha) * F.col("seed")
+                        + alpha * F.coalesce(F.col("in_mass"), F.lit(0.0))
+                    ).alias("score"),
+                )
+            )
+
+        # (host, seed, out_weight|null, score); score_0 = seed
+        state = fixpoint(
+            nodes.join(F.broadcast(seeds), "host", "left")
+            .withColumn("seed", F.coalesce(F.col("seed"), F.lit(0.0)))
+            .join(out_w, nodes.host == out_w.src_host, "left")
+            .select("host", "seed", "out_weight", F.col("seed").alias("score")),
+            step,
+            iterations=iterations,
         )
-        if (i + 1) % checkpoint_every == 0 and i + 1 < iterations:
-            state = state.localCheckpoint(eager=True)
-            last_ckpt.unpersist()
-            last_ckpt = state
     return state.select("host", F.col("score").alias("trust"))

@@ -19,10 +19,8 @@ prior for sampling. This module supplies that tier:
 3. ``pagerank`` — damped PageRank over the weighted host graph, a fixed
    number of synchronous iterations; each iteration is one equi-join + one
    aggregation (+ a 1-row dangling-mass aggregate joined by cross — it
-   broadcasts), with ``localCheckpoint`` lineage truncation every few
-   rounds exactly like dedup.connected_components. No driver-side data:
-   rank state lives in a DataFrame keyed by host, so the iteration count —
-   not the graph size — bounds the plan depth.
+   broadcasts), looped by ``materialize.fixpoint``. No driver-side data:
+   rank state lives in a DataFrame keyed by host.
 
 Scale notes: the edge list shuffles once on dst_host per iteration; hosts
 are ~10^7 at crawl scale (not 10^12 — pages collapse onto hosts before any
@@ -36,6 +34,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..materialize import checkpoint, fixpoint, storage_scope
 from .urls import host_of
 
 # href value up to a quote/#: one capture, lookahead-free, (?i) inline flag
@@ -143,11 +142,26 @@ def host_link_graph(outlinks: DataFrame) -> DataFrame:
     )
 
 
+def _edge_table(edges: DataFrame) -> DataFrame:
+    """(src_host, dst_host, n_links) checkpointed ONCE, hash-partitioned and
+    sorted on the per-iteration join key, for the graph loops. The
+    caller's edge derivation is typically a full corpus explode+aggregate
+    (host_link_graph) that would otherwise re-run inside every action, and
+    a checkpoint preserves partitioning and ordering, so every iteration's
+    join on src_host reads the edge side exchange-free and sort-free — the
+    in-memory analog of the bucketed+sorted table a 10^12-edge graph
+    would persist anyway."""
+    return checkpoint(
+        edges.select("src_host", "dst_host", "n_links")
+        .repartition(F.col("src_host"))
+        .sortWithinPartitions("src_host")
+    )
+
+
 def pagerank(
     edges: DataFrame,
     iterations: int = 5,
     damping: float = 0.85,
-    checkpoint_every: int = 4,
 ) -> DataFrame:
     """Weighted damped PageRank over (src_host, dst_host, n_links) edges.
 
@@ -165,79 +179,64 @@ def pagerank(
 
     Plan per iteration: broadcast-able 1-row dangling aggregate, one
     equi-join ranks⋈edges on src, one groupBy dst — all key-partitioned;
-    ``localCheckpoint`` every ``checkpoint_every`` iterations truncates
-    lineage the same way dedup.connected_components does.
+    the loop is ``materialize.fixpoint``.
     """
     if iterations < 0:
         raise ValueError("iterations must be >= 0")
-    # materialize the edge table ONCE, hash-partitioned and sorted on the
-    # per-iteration join key (the propagate_trust edge-table discipline):
-    # the caller's edge derivation is typically a full corpus
-    # explode+aggregate (host_link_graph), and without this cut it re-ran
-    # inside EVERY action — the node count, the initial state, and each
-    # iteration's contribs join; localCheckpoint preserves partitioning
-    # and ordering, so the per-iteration join also reads the edge side
-    # exchange-free and sort-free
-    edges = (
-        edges.select("src_host", "dst_host", "n_links")
-        .repartition(F.col("src_host"))
-        .sortWithinPartitions("src_host")
-        .localCheckpoint(eager=True)
-    )
-    out_w = edges.groupBy("src_host").agg(F.sum("n_links").alias("out_weight"))
-    nodes = (
-        edges.select(F.col("src_host").alias("host"))
-        .union(edges.select(F.col("dst_host").alias("host")))
-        .distinct()
-    )
-    n_nodes = nodes.count()  # scalar graph cardinality, not data collection
-    if n_nodes == 0:
-        return nodes.select("host", F.lit(0.0).alias("pagerank"))
-    base = (1.0 - damping) / n_nodes
-    # (host, out_weight|null) — null marks dangling nodes
-    state = nodes.join(out_w, nodes.host == out_w.src_host, "left").select(
-        "host", "out_weight", F.lit(1.0 / n_nodes).alias("rank")
-    )
-    state = state.localCheckpoint(eager=True)
-    last_ckpt = state
-    for i in range(iterations):
-        dangling = state.filter(F.col("out_weight").isNull()).agg(
-            F.coalesce(F.sum("rank"), F.lit(0.0)).alias("dangling_mass")
+    with storage_scope():
+        edges = _edge_table(edges)
+        out_w = edges.groupBy("src_host").agg(F.sum("n_links").alias("out_weight"))
+        nodes = (
+            edges.select(F.col("src_host").alias("host"))
+            .union(edges.select(F.col("dst_host").alias("host")))
+            .distinct()
         )
-        contribs = (
-            state.join(edges, state.host == edges.src_host)
-            .select(
-                F.col("dst_host").alias("host"),
-                (F.col("rank") * F.col("n_links") / F.col("out_weight")).alias(
-                    "c"
-                ),
+        # scalar graph cardinality, not data collection; an empty graph
+        # iterates over no rows, and 1 keeps its arithmetic defined
+        n_nodes = max(nodes.count(), 1)
+        base = (1.0 - damping) / n_nodes
+
+        def step(state: DataFrame) -> DataFrame:
+            dangling = state.filter(F.col("out_weight").isNull()).agg(
+                F.coalesce(F.sum("rank"), F.lit(0.0)).alias("dangling_mass")
             )
-            .groupBy("host")
-            .agg(F.sum("c").alias("in_mass"))
-        )
-        state = (
-            state.select("host", "out_weight")
-            .join(contribs, "host", "left")
-            .crossJoin(F.broadcast(dangling))
-            .select(
-                "host",
-                "out_weight",
-                (
-                    F.lit(base)
-                    + F.lit(damping)
-                    * (
-                        F.coalesce(F.col("in_mass"), F.lit(0.0))
-                        + F.col("dangling_mass") / F.lit(float(n_nodes))
-                    )
-                ).alias("rank"),
+            contribs = (
+                state.join(edges, state.host == edges.src_host)
+                .select(
+                    F.col("dst_host").alias("host"),
+                    (F.col("rank") * F.col("n_links") / F.col("out_weight")).alias(
+                        "c"
+                    ),
+                )
+                .groupBy("host")
+                .agg(F.sum("c").alias("in_mass"))
             )
+            return (
+                state.select("host", "out_weight")
+                .join(contribs, "host", "left")
+                .crossJoin(F.broadcast(dangling))
+                .select(
+                    "host",
+                    "out_weight",
+                    (
+                        F.lit(base)
+                        + F.lit(damping)
+                        * (
+                            F.coalesce(F.col("in_mass"), F.lit(0.0))
+                            + F.col("dangling_mass") / F.lit(float(n_nodes))
+                        )
+                    ).alias("rank"),
+                )
+            )
+
+        # (host, out_weight|null, rank) — null out_weight marks dangling nodes
+        state = fixpoint(
+            nodes.join(out_w, nodes.host == out_w.src_host, "left").select(
+                "host", "out_weight", F.lit(1.0 / n_nodes).alias("rank")
+            ),
+            step,
+            iterations=iterations,
         )
-        if (i + 1) % checkpoint_every == 0 and i + 1 < iterations:
-            state = state.localCheckpoint(eager=True)
-            # release the superseded checkpoint's executor storage
-            # (round-3 ADVICE lesson from connected_components)
-            last_ckpt.unpersist()
-            last_ckpt = state
     return state.select("host", F.col("rank").alias("pagerank"))
 
 
@@ -324,54 +323,49 @@ def resolve_redirects(
     with itself each round (x→y, y→z becomes x→z with summed hop
     counts), so ``ceil(log2(max_hops))`` equi-joins cover chains up to
     ``max_hops`` long — 5 rounds for 32 hops where naive iteration
-    takes 32. Each round is one left equi-join on the redirect key with
-    an eager ``localCheckpoint`` (the connected_components /
-    pagerank lineage rule). State is one row per source throughout; no
-    driver-side data.
+    takes 32. Each round is one left equi-join on the redirect key; the
+    loop is ``materialize.fixpoint``. State is one row per source
+    throughout; no driver-side data.
     """
     import math
 
-    e = (
-        edges.select(F.col(src_col).alias("x"), F.col(dst_col).alias("y"))
-        .distinct()
-        .localCheckpoint()
-    )
-    srcs = e.select(F.col("x").alias("s")).distinct()
-    # done at init: the first hop already landed on a non-source (terminal)
-    m = (
-        e.join(srcs, e["y"] == srcs["s"], "left")
-        .select(
-            "x", "y",
-            F.lit(1).cast("long").alias("hops"),
-            F.col("s").isNull().alias("done"),
+    with storage_scope():
+        e = checkpoint(
+            edges.select(F.col(src_col).alias("x"), F.col(dst_col).alias("y"))
+            .distinct()
         )
-        .localCheckpoint()
-    )
-    for _ in range(max(1, math.ceil(math.log2(max_hops)))):
-        # SHUFFLE_HASH on the mapping side: both sides of the composing
-        # join are the same 1-row-per-source table, so sort-merge pays
-        # two full sorts per round for nothing — a per-partition hash
-        # build skips both (measured ~25-45% off the whole resolve at 1M
-        # edges). Build-side memory is rows/shuffle-partitions, the
-        # normal SHJ sizing contract at any scale.
-        nxt = m.select(
-            F.col("x").alias("nx"), F.col("y").alias("ny"),
-            F.col("hops").alias("nh"), F.col("done").alias("nd"),
-        ).hint("shuffle_hash")
-        keep = F.col("done") | F.col("nx").isNull()
-        m = (
-            m.join(nxt, (m["y"] == nxt["nx"]) & (~m["done"]), "left")
-            .select(
+        srcs = e.select(F.col("x").alias("s")).distinct()
+
+        def step(m: DataFrame) -> DataFrame:
+            # SHUFFLE_HASH on the mapping side: both sides of the composing
+            # join are the same 1-row-per-source table, so sort-merge pays
+            # two full sorts per round for nothing — a per-partition hash
+            # build skips both (measured ~25-45% off the whole resolve at
+            # 1M edges). Build-side memory is rows/shuffle-partitions, the
+            # normal SHJ sizing contract at any scale.
+            nxt = m.select(
+                F.col("x").alias("nx"), F.col("y").alias("ny"),
+                F.col("hops").alias("nh"), F.col("done").alias("nd"),
+            ).hint("shuffle_hash")
+            keep = F.col("done") | F.col("nx").isNull()
+            return m.join(nxt, (m["y"] == nxt["nx"]) & (~m["done"]), "left").select(
                 "x",
                 F.when(keep, F.col("y")).otherwise(F.col("ny")).alias("y"),
                 F.when(keep, F.col("hops"))
                 .otherwise(F.col("hops") + F.col("nh"))
                 .alias("hops"),
-                F.when(keep, F.col("done"))
-                .otherwise(F.col("nd"))
-                .alias("done"),
+                F.when(keep, F.col("done")).otherwise(F.col("nd")).alias("done"),
             )
-            .localCheckpoint()
+
+        # done at init: the first hop already landed on a non-source (terminal)
+        m = fixpoint(
+            e.join(srcs, e["y"] == srcs["s"], "left").select(
+                "x", "y",
+                F.lit(1).cast("long").alias("hops"),
+                F.col("s").isNull().alias("done"),
+            ),
+            step,
+            iterations=max(1, math.ceil(math.log2(max_hops))),
         )
     return m.select(
         F.col("x").alias("src"),
@@ -448,7 +442,6 @@ def link_spam_signals(edges: DataFrame) -> DataFrame:
 def hits_scores(
     edges: DataFrame,
     iterations: int = 3,
-    checkpoint_every: int = 4,
 ) -> DataFrame:
     """Weighted HITS (Kleinberg, JACM 1999) over (src_host, dst_host,
     n_links): mutually reinforcing hub/authority scores — the directory
@@ -468,87 +461,66 @@ def hits_scores(
     textbook L2). Fixed iteration budget, deterministic.
 
     Plan per iteration: two edge equi-joins + two groupBys (host-keyed
-    shuffles AQE coalesces) + two 1-row normalizer cross joins.
-
-    Materialization discipline (the pagerank/propagate_trust rule, which
-    this operator originally lacked): the edge table — typically a DERIVED
-    corpus aggregation — and the node list are ``localCheckpoint``-ed
-    once, and each iteration's normalized hub/auth vectors are
-    materialized before reuse. Without the cuts the auth vector is
-    referenced twice per iteration (hub step + result join) and nothing
-    truncates lineage inside the loop, so the unevaluated DAG — and the
-    re-derivation of the caller's edge expression from the source scan —
-    roughly DOUBLES per iteration (measured: 21 s for 3 iterations on a
-    14-host graph whose edges derive from a parquet scan; ~1 s after).
-    The per-iteration materializations are O(hosts) rows, the same state
-    size pagerank checkpoints. ``checkpoint_every`` is kept for API
-    compatibility; the vector checkpoints already truncate state lineage
-    every iteration, so it has no further effect.
+    shuffles AQE coalesces) + two 1-row normalizer cross joins. The loop
+    is ``materialize.fixpoint``; the auth vector is also checkpointed
+    inside the iteration because the hub step and the new state both read
+    it. Without those cuts the unevaluated DAG — and the re-derivation of
+    the caller's edge expression from the source scan — roughly DOUBLES
+    per iteration (measured: 21 s for 3 iterations on a 14-host graph
+    whose edges derive from a parquet scan; ~1 s after).
     """
     if iterations < 0:
         raise ValueError("iterations must be >= 0")
-    edges = (
-        edges.select("src_host", "dst_host", "n_links")
-        .repartition(F.col("src_host"))
-        .sortWithinPartitions("src_host")
-        .localCheckpoint(eager=True)
-    )
-    nodes = (
-        edges.select(F.col("src_host").alias("host"))
-        .union(edges.select(F.col("dst_host").alias("host")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    state = nodes.select(
-        "host", F.lit(1.0).alias("hub"), F.lit(1.0).alias("auth")
-    )
-    live: list[DataFrame] = []
-    for _ in range(iterations):
-        auth_raw = (
-            state.select(F.col("host").alias("src_host"), "hub")
-            .join(edges, "src_host")
-            .groupBy(F.col("dst_host").alias("host"))
-            .agg(F.sum(F.col("n_links") * F.col("hub")).alias("a_raw"))
-        )
-        a_full = nodes.join(auth_raw, "host", "left").select(
-            "host", F.coalesce(F.col("a_raw"), F.lit(0.0)).alias("a_raw")
-        )
-        a_norm = a_full.agg(F.sum("a_raw").alias("a_sum"))
-        a_full = (
-            a_full.crossJoin(F.broadcast(a_norm))
-            .select(
-                "host",
-                F.when(F.col("a_sum") > 0, F.col("a_raw") / F.col("a_sum"))
-                .otherwise(0.0)
-                .alias("auth"),
+    with storage_scope():
+        edges = _edge_table(edges)
+
+        def step(state: DataFrame) -> DataFrame:
+            # every state row is a node: the left joins below give hosts
+            # with no in- (out-) edges a zero authority (hub)
+            nodes = state.select("host")
+            auth_raw = (
+                state.select(F.col("host").alias("src_host"), "hub")
+                .join(edges, "src_host")
+                .groupBy(F.col("dst_host").alias("host"))
+                .agg(F.sum(F.col("n_links") * F.col("hub")).alias("a_raw"))
             )
-            .localCheckpoint(eager=True)
-        )
-        hub_raw = (
-            a_full.select(F.col("host").alias("dst_host"), "auth")
-            .join(edges, "dst_host")
-            .groupBy(F.col("src_host").alias("host"))
-            .agg(F.sum(F.col("n_links") * F.col("auth")).alias("h_raw"))
-        )
-        h_full = nodes.join(hub_raw, "host", "left").select(
-            "host", F.coalesce(F.col("h_raw"), F.lit(0.0)).alias("h_raw")
-        )
-        h_norm = h_full.agg(F.sum("h_raw").alias("h_sum"))
-        h_full = (
-            h_full.crossJoin(F.broadcast(h_norm))
-            .select(
+            a_full = nodes.join(auth_raw, "host", "left").select(
+                "host", F.coalesce(F.col("a_raw"), F.lit(0.0)).alias("a_raw")
+            )
+            a_norm = a_full.agg(F.sum("a_raw").alias("a_sum"))
+            a_full = checkpoint(
+                a_full.crossJoin(F.broadcast(a_norm)).select(
+                    "host",
+                    F.when(F.col("a_sum") > 0, F.col("a_raw") / F.col("a_sum"))
+                    .otherwise(0.0)
+                    .alias("auth"),
+                )
+            )
+            hub_raw = (
+                a_full.select(F.col("host").alias("dst_host"), "auth")
+                .join(edges, "dst_host")
+                .groupBy(F.col("src_host").alias("host"))
+                .agg(F.sum(F.col("n_links") * F.col("auth")).alias("h_raw"))
+            )
+            h_full = nodes.join(hub_raw, "host", "left").select(
+                "host", F.coalesce(F.col("h_raw"), F.lit(0.0)).alias("h_raw")
+            )
+            h_norm = h_full.agg(F.sum("h_raw").alias("h_sum"))
+            h_full = h_full.crossJoin(F.broadcast(h_norm)).select(
                 "host",
                 F.when(F.col("h_sum") > 0, F.col("h_raw") / F.col("h_sum"))
                 .otherwise(0.0)
                 .alias("hub"),
             )
-            .localCheckpoint(eager=True)
+            return h_full.join(a_full, "host").select("host", "hub", "auth")
+
+        nodes = (
+            edges.select(F.col("src_host").alias("host"))
+            .union(edges.select(F.col("dst_host").alias("host")))
+            .distinct()
         )
-        state = h_full.join(a_full, "host").select("host", "hub", "auth")
-        # the previous iteration's vector blocks are dead once this
-        # iteration's are materialized (the returned state only references
-        # the LAST pair, which stays persisted)
-        for df in live:
-            df.unpersist()
-        live = [a_full, h_full]
-    return state
+        return fixpoint(
+            nodes.select("host", F.lit(1.0).alias("hub"), F.lit(1.0).alias("auth")),
+            step,
+            iterations=iterations,
+        )

@@ -24,6 +24,8 @@ import re
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..materialize import checkpoint
+
 MAX_PER_PAGE = 100  # reference: src/config.py:32-33 clamp
 
 # Mongo's text index applies english stopwords + stemming; the engine's
@@ -399,7 +401,7 @@ def phrase_search(
     # the GENERATED attribute), so each consumer would otherwise re-run
     # the full corpus explode+groupBy. The materialized table is tiny by
     # construction — only the query's terms' posting rows.
-    postings = index.filter(F.col("token").isin(toks_needed)).localCheckpoint()
+    postings = checkpoint(index.filter(F.col("token").isin(toks_needed)))
 
     # loose-term score per doc (0 rows for docs with no loose hits)
     if loose:
@@ -452,7 +454,7 @@ def phrase_search(
         # query's cost was this pushed-down filter). The checkpointed
         # table is one token array per CANDIDATE — index-pruned, not
         # corpus-wide.
-        matched = matched.localCheckpoint()
+        matched = checkpoint(matched)
 
     phrase_score = F.lit(0).cast("long")
     n_hits = F.lit(0).cast("long")

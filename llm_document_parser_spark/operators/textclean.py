@@ -44,10 +44,3 @@ def clean_text_col(c: Column) -> Column:
     c = F.replace(c, F.lit("—"), F.lit("-"))
     return F.trim(c)
 
-
-def truncate_with_ellipsis(c: Column, n: int) -> Column:
-    """X10 — ``text[:n] + '...'`` when longer than n (reference:
-    src/document_parser.py:803, src/search_engine.py:279-285)."""
-    return F.when(
-        F.length(c) > n, F.concat(F.substring(c, 1, n), F.lit("..."))
-    ).otherwise(c)

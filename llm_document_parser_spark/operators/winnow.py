@@ -39,6 +39,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..materialize import checkpoint
+
 
 def _clean(text: Column) -> Column:
     """Whitespace-collapsed lowercase text (the dedup-family normalization,
@@ -56,7 +58,7 @@ def gram_hashes(text: Column, k: int = 5, hash_fn: str = "md5") -> Column:
     ``xxhash64`` values — the production mode: 8-byte longs instead of
     32-char strings cut the per-document gram array ~8× and make window
     minima integer compares, the same md5/fast split as
-    dedup.minhash_signatures.
+    dedup.minhash_candidate_pairs.
 
     IMPORTANT (cost): ``text`` should be an ALREADY-CLEANED materialized
     column (``_clean`` staged in a prior projection) when called at
@@ -202,7 +204,7 @@ def winnow_overlap_pairs(
     # times (the bpe_train lesson). At corpus scale, persist the exploded
     # table bucketed by fp instead (storage.write_bucketed) and the pair
     # join is exchange-free on reuse.
-    ex = fps.localCheckpoint(eager=True).select(
+    ex = checkpoint(fps).select(
         "id", F.explode("fingerprints").alias("fp")
     )
     if max_df is not None:

@@ -9,6 +9,7 @@ import numpy as np
 import pytest
 
 from llm_document_parser_spark.operators.links import hits_scores
+from plan_nodes import node_classes
 
 EDGES = [
     # d1, d2 are directories linking to the two references r1, r2;
@@ -103,9 +104,9 @@ def test_derived_edges_materialized_once(spark):
         .filter(F.col("src_host") != F.col("dst_host"))
     )
     res = hits_scores(edges, iterations=3)
-    plan = res._jdf.queryExecution().executedPlan().toString()
-    assert "ExistingRDD" in plan
-    assert "Range (" not in plan
+    nodes = node_classes(res)
+    assert "RDDScanExec" in nodes
+    assert "RangeExec" not in nodes
     # and the fixpoint is still numpy-exact on the derived graph
     rows = edges.collect()
     hosts, hub, auth = np_hits(

@@ -134,13 +134,13 @@ def test_pagerank_matches_numpy(spark, iterations):
 
 
 def test_pagerank_checkpoint_path(spark):
-    """Exercise the localCheckpoint/unpersist branch (checkpoint_every=2,
-    6 iterations -> two mid-run checkpoints) and keep NumPy parity."""
+    """Six iterations, each one a fixpoint checkpoint that frees the one
+    before it, keep NumPy parity."""
     edges = [("a", "b", 1), ("b", "c", 1), ("c", "a", 2), ("c", "b", 1)]
     df = spark.createDataFrame(edges, "src_host string, dst_host string, n_links int")
     got = {
         r["host"]: r["pagerank"]
-        for r in pagerank(df, iterations=6, checkpoint_every=2).collect()
+        for r in pagerank(df, iterations=6).collect()
     }
     want = _numpy_pagerank(edges, 6, 0.85)
     for h in want:

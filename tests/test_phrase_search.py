@@ -11,6 +11,7 @@ from llm_document_parser_spark.operators.search import (
     parse_text_query,
     phrase_search,
 )
+from plan_nodes import has_expression, node_classes
 
 
 def _toks(s: str) -> list[str]:
@@ -143,11 +144,6 @@ def test_verify_stage_reads_materialized_tokens(spark):
     df = spark.createDataFrame(
         list(CORPUS.items()), ["url", "extracted_text"]
     )
-    plan = (
-        phrase_search(df, '"quick brown" fox -vector')
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "split(lower(" not in plan
-    assert "ExistingRDD" in plan
+    res = phrase_search(df, '"quick brown" fox -vector')
+    assert not has_expression(res, "StringSplit", child_cls="Lower")
+    assert "RDDScanExec" in node_classes(res)

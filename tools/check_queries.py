@@ -1,6 +1,7 @@
 """Local driver-mimic: run every queries() entry on Spark and its
 oracle_sql() on DuckDB, compare row count + column names + order-insensitive
-values.
+values. Each query runs and collects inside ``materialize.storage_scope``;
+a query that leaves persisted RDDs behind afterwards FAILs.
 
 Usage: python tools/check_queries.py [--json OUT.json] [sf_dir] [query ...]
 
@@ -22,6 +23,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import duckdb
 
 import __spark_entry__ as entrymod
+from llm_document_parser_spark.materialize import storage_scope
 from llm_document_parser_spark.session import get_spark
 
 TABLES = [
@@ -62,6 +64,9 @@ def main() -> int:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'"
         )
+    def persisted() -> set[int]:
+        return set(spark.sparkContext._jsc.getPersistentRDDs())
+
     qs = entrymod.queries()
     oracles = entrymod.oracle_sql()
     failures = []
@@ -73,12 +78,18 @@ def main() -> int:
             results[name] = {"pass": False, "detail": msg[:400], **extra}
             print(f"FAIL {name}: {msg[:400]}")
 
+        before = persisted()
         try:
-            sdf = fn(spark, sf_dir)
-            srows = [tuple(r) for r in sdf.collect()]
-            scols = sdf.columns
+            with storage_scope():
+                sdf = fn(spark, sf_dir)
+                srows = [tuple(r) for r in sdf.collect()]
+                scols = sdf.columns
         except Exception as e:  # noqa: BLE001
             fail(f"spark error: {type(e).__name__}: {str(e)[:300]}")
+            continue
+        leaked = len(persisted() - before)
+        if leaked:
+            fail(f"{leaked} persisted RDDs left behind", leaked_rdds=leaked)
             continue
         if name not in oracles:
             results[name] = {"pass": True, "mode": "rows-only", "rows": len(srows)}
