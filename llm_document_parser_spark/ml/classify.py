@@ -34,6 +34,8 @@ from pyspark.ml.feature import (
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..materialize import checkpoint, storage_scope
+
 SEED = 42
 VOCAB_SIZE = 1000
 NUM_TREES = 100
@@ -191,9 +193,8 @@ def evaluate(model: PipelineModel, test_df: DataFrame) -> dict:
     """M5/A5 — accuracy + confusion counts + full classification report
     (reference: evaluate_model src/document_parser.py:815-857, report
     :644-647)."""
-    scored = with_predicted_type(model, test_df)
-    scored.persist()
-    try:
+    with storage_scope():
+        scored = checkpoint(with_predicted_type(model, test_df))
         evaluator = MulticlassClassificationEvaluator(
             labelCol="label", predictionCol="prediction", metricName="accuracy"
         )
@@ -204,8 +205,6 @@ def evaluate(model: PipelineModel, test_df: DataFrame) -> dict:
             .collect()
         )
         report = classification_report(scored)
-    finally:
-        scored.unpersist()
     return {
         "accuracy": round(accuracy * 100, 2),
         "confusion": {
@@ -258,9 +257,8 @@ def golden_label_set(spark, n: int = 80, seed: int = 7) -> DataFrame:
 def golden_eval(model: PipelineModel, golden_df: DataFrame) -> dict:
     """Evaluate against golden labels by STRING comparison (no dependence on
     the model's label indexing): accuracy + per-class P/R/F1 + confusion."""
-    scored = with_predicted_type(model, golden_df)
-    scored.persist()
-    try:
+    with storage_scope():
+        scored = checkpoint(with_predicted_type(model, golden_df))
         total = scored.count()
         correct = scored.filter(
             F.col("predicted_type") == F.col("document_type")
@@ -271,8 +269,6 @@ def golden_eval(model: PipelineModel, golden_df: DataFrame) -> dict:
             .agg(F.count("*").alias("n"))
             .collect()
         )
-    finally:
-        scored.unpersist()
     return {
         "total_documents": total,
         "correct_predictions": correct,

@@ -22,6 +22,11 @@ as chained DuckDB CTEs over the unnested (vec_id, dim, val) relation —
 the third iterative algorithm in the catalog verified end-to-end against
 SQL, after PageRank and the GD logistic regression.
 
+The Lloyd loop itself is operators/quantize.pq_train: k-means is product
+quantization with one subspace, so kmeans_lloyd is pq_train(m=1) and
+both share :func:`nearest_cell`, the one argmin expression that PQ
+encoding and IVF search assign with too.
+
 Scale shape: assignment compiles to one codegen expression over
 broadcast centroid LITERALS (zero shuffle, zero Python); the update is
 one groupBy(cell) whose partial aggregation emits at most k rows per
@@ -51,21 +56,28 @@ def _dist2(vec: Column, center: list[float]) -> Column:
     )
 
 
+def cell_distances(vec: Column, centroids: list[list[float]]) -> Column:
+    """ARRAY<STRUCT<dist, cell>>: the round-9 squared distance from
+    ``vec`` to every centroid, with the centroid's id."""
+    return F.array(
+        *[
+            F.struct(_dist2(vec, c).alias("dist"), F.lit(i).alias("cell"))
+            for i, c in enumerate(centroids)
+        ]
+    )
+
+
+def nearest_cell(vec: Column, centroids: list[list[float]]) -> Column:
+    """The argmin-distance centroid id (ties -> lowest id)."""
+    return F.array_min(cell_distances(vec, centroids))["cell"]
+
+
 def assign_cells(
     df: DataFrame, centroids: list[list[float]], vec_col: str = "embedding"
 ) -> DataFrame:
     """Append ``cell``: the argmin-distance centroid id (ties -> lowest
     id), as a pure column expression over centroid literals."""
-    scored = F.array(
-        *[
-            F.struct(
-                _dist2(F.col(vec_col), c).alias("dist"),
-                F.lit(i).alias("cell"),
-            )
-            for i, c in enumerate(centroids)
-        ]
-    )
-    return df.withColumn("cell", F.array_min(scored)["cell"])
+    return df.withColumn("cell", nearest_cell(F.col(vec_col), centroids))
 
 
 def kmeans_lloyd(
@@ -79,37 +91,9 @@ def kmeans_lloyd(
     seeded init (centroid i starts at the vector whose ``id_col`` equals
     ``init_ids[i]``). Returns k lists of doubles, ready for
     similarity.ivf_topk / _nearest_cells."""
-    if iterations < 0:
-        raise ValueError("iterations must be >= 0")
-    seed_rows = (
-        corpus.filter(F.col(id_col).isin([int(i) for i in init_ids]))
-        .select(id_col, vec_col)
-        .collect()  # k seed vectors — O(model), not a data collection
-    )
-    by_id = {r[id_col]: [float(x) for x in r[vec_col]] for r in seed_rows}
-    missing = [i for i in init_ids if i not in by_id]
-    if missing:
-        raise ValueError(f"init ids not found in corpus: {missing}")
-    centroids = [by_id[i] for i in init_ids]
-    dim = len(centroids[0])
-    corpus = corpus.persist()
-    try:
-        for _ in range(iterations):
-            assigned = assign_cells(corpus, centroids, vec_col=vec_col)
-            rows = (
-                assigned.groupBy("cell")
-                .agg(
-                    *[
-                        F.avg(F.col(vec_col)[d].cast("double")).alias(f"m{d}")
-                        for d in range(dim)
-                    ]
-                )
-                .collect()  # <= k rows of dim doubles
-            )
-            means = {r["cell"]: [float(r[f"m{d}"]) for d in range(dim)] for r in rows}
-            centroids = [
-                means.get(i, centroids[i]) for i in range(len(centroids))
-            ]
-    finally:
-        corpus.unpersist()
-    return centroids
+    from ..operators.quantize import pq_train
+
+    return pq_train(
+        corpus, m=1, init_ids=init_ids, iterations=iterations,
+        id_col=id_col, vec_col=vec_col,
+    )[0]

@@ -42,6 +42,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..materialize import checkpoint, storage_scope
 from ..operators.textstats import tokens_col
 
 
@@ -114,15 +115,17 @@ def lr_fit_dataflow(
         grad_b = mean((p - y) * f[b]);  grad_bias = mean(p - y)
         w     -= lr * grad;             bias     -= lr * grad_bias
 
-    One ungrouped aggregate per iteration; the input is persisted for the
-    duration (at corpus scale: persist or checkpoint the featurized table
-    once, then every GD pass is a cache scan + tree-reduce)."""
+    One ungrouped aggregate per iteration over the input, which is
+    checkpointed once (no job at all when ``iterations`` is 0), so every
+    GD pass is a scan of the materialized blocks + tree-reduce; the
+    blocks are freed on return."""
     if iterations < 0:
         raise ValueError("iterations must be >= 0")
     weights = [0.0] * n_buckets
     bias = 0.0
-    feats = feats.persist()
-    try:
+    with storage_scope():
+        if iterations:
+            feats = checkpoint(feats)
         for _ in range(iterations):
             p = F.lit(1.0) / (F.lit(1.0) + F.exp(-_margin(weights, bias)))
             err = (p - F.col("y")).alias("err")
@@ -143,8 +146,6 @@ def lr_fit_dataflow(
                 weights[b] - lr * float(row[f"g{b}"]) / n for b in range(n_buckets)
             ]
             bias = bias - lr * float(row["gb"]) / n
-    finally:
-        feats.unpersist()
     return weights, bias
 
 

@@ -531,10 +531,9 @@ def connected_components(
         def step(state: DataFrame) -> DataFrame:
             # the OLD label rides through the min-agg (non-null only on the
             # self arm, one per id since edge dsts ⊆ label ids), so the
-            # convergence check reads the checkpointed result instead of
-            # re-joining new labels against old — one join + one shuffle
-            # less per iteration. Labels only ever decrease, so changed ⇔
-            # any new label < old label.
+            # convergence count is observed on the checkpoint job instead of
+            # re-joining new labels against old. Labels only ever decrease,
+            # so changed ⇔ any new label < old label.
             labels = state.select("id", "label")
             return (
                 edges.join(labels, edges["src"] == labels["id"])
@@ -555,9 +554,7 @@ def connected_components(
             .withColumn("label", F.col("id")),
             step,
             iterations=max_iterations,
-            converged=lambda s: (
-                s.filter(F.col("label") < F.col("old")).limit(1).count() == 0
-            ),
+            changed=F.count_if(F.col("label") < F.col("old")),
         )
     return labels.select("id", F.col("label").alias("component"))
 

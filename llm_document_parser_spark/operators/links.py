@@ -324,8 +324,9 @@ def resolve_redirects(
     counts), so ``ceil(log2(max_hops))`` equi-joins cover chains up to
     ``max_hops`` long — 5 rounds for 32 hops where naive iteration
     takes 32. Each round is one left equi-join on the redirect key; the
-    loop is ``materialize.fixpoint``. State is one row per source
-    throughout; no driver-side data.
+    loop is ``materialize.fixpoint``, which stops early once every chain
+    has ended. State is one row per source throughout; no driver-side
+    data.
     """
     import math
 
@@ -366,6 +367,10 @@ def resolve_redirects(
             ),
             step,
             iterations=max(1, math.ceil(math.log2(max_hops))),
+            # after k rounds an unfinished row has hops = 2^k: this counts
+            # the unfinished rows while another round can still help, and
+            # is 0 on the last round, so cycles end unresolved, not raised
+            changed=F.count_if(~F.col("done") & (F.col("hops") < max_hops)),
         )
     return m.select(
         F.col("x").alias("src"),

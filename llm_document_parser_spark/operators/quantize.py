@@ -25,6 +25,9 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..materialize import checkpoint, storage_scope
+from ..ml.kmeans_dataflow import cell_distances, nearest_cell
+
 
 def int8_scale(vec: Column) -> Column:
     """max(|v|)/127 as double (0.0 for the all-zero vector)."""
@@ -114,12 +117,12 @@ def quantization_report(
 # Quantization for Nearest Neighbor Search", TPAMI 2011) goes further:
 # split each vector into m subvectors, train a small k-means codebook
 # per subspace, store only the m nearest-centroid ids — 64 dims at
-# m=8/k=16 is 8 half-byte codes (4 B/vector vs 256 B float32). This is
-# the composition tier: training reuses ml/kmeans_dataflow.kmeans_lloyd
-# per subspace (deterministic explicit seeding, driver-held codebooks),
-# encoding reuses its assign_cells algebra over SLICES — zero new
-# iteration machinery, and the whole encode path is codegen over
-# codebook literals (zero shuffle, zero Python).
+# m=8/k=16 is 8 half-byte codes (4 B/vector vs 256 B float32). pq_train
+# is the package's one Lloyd loop (ml/kmeans_dataflow.kmeans_lloyd is
+# its m=1 case: deterministic explicit seeding, driver-held codebooks),
+# and training, encoding and IVF search all assign with
+# kmeans_dataflow.nearest_cell over SLICES — the whole encode path is
+# codegen over codebook literals (zero shuffle, zero Python).
 
 
 def pq_train(
@@ -132,22 +135,21 @@ def pq_train(
 ) -> list[list[list[float]]]:
     """Per-subspace codebooks: ``m`` lists of k centroids (k =
     len(init_ids)), subspace j trained on dimensions
-    [j*d/m, (j+1)*d/m) of every vector — the kmeans_lloyd algebra
-    (round-9 argmin, lowest-id ties, empty cell keeps its centroid)
-    applied to every subspace in ONE dataflow.
+    [j*d/m, (j+1)*d/m) of every vector — the Lloyd algebra of
+    ml/kmeans_dataflow (round-9 argmin, lowest-id ties, empty cell keeps
+    its centroid) applied to every subspace in ONE dataflow.
 
-    All ``m`` Lloyd runs are independent, so training them as separate
-    kmeans_lloyd calls cost m×(1 + iterations) corpus actions — at real
-    corpus width that is m redundant full scans per iteration. Here the
-    seed vectors are collected once (sliced on the driver: O(model)),
-    and each iteration is a single job: per row, an m-element struct
-    array carries (subspace, assigned cell, subvector), explodes, and
-    one groupBy (subspace, cell) emits every codebook's centroid
-    updates together. Per-subspace arithmetic is unchanged — the same
-    values aggregate under the same per-partition order, only grouped
-    by (subspace, cell) instead of one job per subspace."""
-    from ..ml.kmeans_dataflow import _dist2
-
+    The seed vectors are collected once (sliced on the driver:
+    O(model)), the vector column is checkpointed once, and each
+    iteration is a single job: per row, an m-element struct array
+    carries (subspace, assigned cell, subvector), explodes, and one
+    groupBy (subspace, cell) emits every codebook's centroid updates
+    together. Per-subspace arithmetic is that of m separate one-subspace
+    runs — the same values aggregate under the same per-partition
+    order, only grouped by (subspace, cell) instead of one job per
+    subspace."""
+    if iterations < 0:
+        raise ValueError("iterations must be >= 0")
     if init_ids is None:
         init_ids = [0, 1, 2, 3]
     seed_rows = (
@@ -169,25 +171,16 @@ def pq_train(
     if iterations == 0:
         return books
     k = len(init_ids)
-    corpus = corpus.select(vec_col).persist()
-    try:
+    with storage_scope():
+        corpus = checkpoint(corpus.select(vec_col))
         for _ in range(iterations):
             arms = []
             for j, book in enumerate(books):
                 piece = F.slice(F.col(vec_col), j * sub + 1, sub)
-                scored = F.array(
-                    *[
-                        F.struct(
-                            _dist2(piece, c).alias("dist"),
-                            F.lit(i).alias("cell"),
-                        )
-                        for i, c in enumerate(book)
-                    ]
-                )
                 arms.append(
                     F.struct(
                         F.lit(j).alias("j"),
-                        F.array_min(scored)["cell"].alias("cell"),
+                        nearest_cell(piece, book).alias("cell"),
                         piece.alias("sv"),
                     )
                 )
@@ -211,28 +204,19 @@ def pq_train(
                 [means.get((j, i), books[j][i]) for i in range(k)]
                 for j in range(m)
             ]
-    finally:
-        corpus.unpersist()
     return books
 
 
 def _pq_codes_col(vec_col: str, codebooks: list[list[list[float]]]) -> Column:
     """ARRAY<INT> of per-subspace nearest-centroid ids (round-9 argmin,
-    lowest-id ties — assign_cells algebra inlined per subspace)."""
-    from ..ml.kmeans_dataflow import _dist2
-
+    lowest-id ties)."""
     sub = len(codebooks[0][0])
-    code_cols = []
-    for j, book in enumerate(codebooks):
-        piece = F.slice(F.col(vec_col), j * sub + 1, sub)
-        scored = F.array(
-            *[
-                F.struct(_dist2(piece, c).alias("dist"), F.lit(i).alias("cell"))
-                for i, c in enumerate(book)
-            ]
-        )
-        code_cols.append(F.array_min(scored)["cell"])
-    return F.array(*code_cols)
+    return F.array(
+        *[
+            nearest_cell(F.slice(F.col(vec_col), j * sub + 1, sub), book)
+            for j, book in enumerate(codebooks)
+        ]
+    )
 
 
 def pq_encode(
@@ -408,7 +392,7 @@ def ivf_adc_topk(
     from the full-dimension quantizer, PQ codes per subspace, floats
     discarded; a query probes only its ``n_probe`` nearest coarse
     cells and ADC-scores the candidates there. Composition of the
-    verified pieces: kmeans_dataflow.assign_cells (coarse),
+    verified pieces: kmeans_dataflow.nearest_cell (coarse),
     _pq_codes_col (codes), similarity's probe-cell algebra, pq_adc_topk
     scoring.
 
@@ -420,27 +404,18 @@ def ivf_adc_topk(
     the probe is a pruned scan. Returns (query_id, neighbor_id, rank,
     adc_dist); round-6-before-rank, id tie-breaks, self-matches
     excluded."""
-    from ..ml.kmeans_dataflow import _dist2
-
     m = len(codebooks)
     sub = len(codebooks[0][0])
     # stored index: (id, cell, codes) — one zero-shuffle projection
-    cell_scored = F.array(
-        *[
-            F.struct(_dist2(F.col(vec_col), c).alias("dist"), F.lit(i).alias("cell"))
-            for i, c in enumerate(coarse_centroids)
-        ]
-    )
     index = corpus_df.select(
         F.col(id_col).alias("neighbor_id"),
-        F.array_min(cell_scored)["cell"].alias("cell"),
+        nearest_cell(F.col(vec_col), coarse_centroids).alias("cell"),
         _pq_codes_col(vec_col, codebooks).alias("codes"),
     )
     # query side: probe cells (n_probe nearest coarse centroids) +
     # per-subspace distance tables, then explode probes for the equi-join
-    ranked_cells = F.transform(
-        F.slice(F.array_sort(cell_scored), 1, n_probe), lambda s: s["cell"]
-    )
+    by_dist = F.array_sort(cell_distances(F.col(vec_col), coarse_centroids))
+    ranked_cells = F.transform(F.slice(by_dist, 1, n_probe), lambda s: s["cell"])
     q = queries_df.select(
         F.col(id_col).alias("query_id"),
         ranked_cells.alias("probe_cells"),

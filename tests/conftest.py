@@ -20,3 +20,21 @@ def spark():
     )
     yield s
     s.stop()
+
+
+@pytest.fixture
+def jobs_in_group(spark):
+    """``jobs_in_group(group, fn)``: the number of Spark jobs ``fn()``
+    runs, counted under the job group ``group``."""
+
+    def count(group: str, fn) -> int:
+        sc = spark.sparkContext
+        sc.setJobGroup(group, group)
+        try:
+            fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return count

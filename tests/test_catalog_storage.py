@@ -24,6 +24,11 @@ CHECKPOINTING_QUERIES = [
     "phrase_search_hits",
     "winnow_overlap_pairs",
     "semantic_dedup",
+    "kmeans_cell_centroids",
+    "lr_langid_fit",
+    "pq_vector_codes",
+    "pq_adc_neighbors",
+    "ivf_adc_search",
 ]
 
 

@@ -218,18 +218,7 @@ def test_observed_rows_equal_committed_table(spark, tmp_path, case):
         assert sum(got.values()) == 40
 
 
-def _jobs_in_group(spark, group, fn):
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return len(sc.statusTracker().getJobIdsForGroup(group))
-
-
-def test_single_group_commit_runs_one_job_fewer(spark, tmp_path):
+def test_single_group_commit_runs_one_job_fewer(spark, tmp_path, jobs_in_group):
     """One lineage group is the write job plus the append job: the
     per-bucket counts no longer cost a re-read of the committed partitions
     (which AQE runs as two jobs, the shuffle map stage and the result)."""
@@ -237,7 +226,7 @@ def test_single_group_commit_runs_one_job_fewer(spark, tmp_path):
     group = [0, 1, 2, 3]
     _transform(pages).count()  # warm the plan columns and Python workers
 
-    observed = _jobs_in_group(spark, "lineage-observed", lambda: run_with_lineage(
+    observed = jobs_in_group("lineage-observed", lambda: run_with_lineage(
         spark, pages, _transform, str(tmp_path / "a_results"),
         str(tmp_path / "a_lineage"), job_id="a", num_buckets=4,
     ))
@@ -271,9 +260,9 @@ def test_single_group_commit_runs_one_job_fewer(spark, tmp_path):
         bucket_rows.update({r["bucket"]: r["count"] for r in counted})
         _append_lineage(spark, lin, "b", bucket_rows, dt.datetime.now(), attempt=1)
 
-    write_jobs = _jobs_in_group(spark, "lineage-write", write)
-    recount_jobs = _jobs_in_group(spark, "lineage-recount", recount)
-    append_jobs = _jobs_in_group(spark, "lineage-append", append)
+    write_jobs = jobs_in_group("lineage-write", write)
+    recount_jobs = jobs_in_group("lineage-recount", recount)
+    append_jobs = jobs_in_group("lineage-append", append)
     assert recount_jobs >= 1
     assert observed == write_jobs + append_jobs
     assert observed <= write_jobs + recount_jobs + append_jobs - 1

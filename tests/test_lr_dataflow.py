@@ -110,6 +110,15 @@ def test_zero_iterations_is_zero_model(spark, feats):
     assert all(r["p"] == 0.5 for r in lr_score(feats, w, b).collect())
 
 
+def test_zero_iterations_runs_no_job(spark, feats, jobs_in_group):
+    """The input is checkpointed only when there is a loop to feed."""
+    jobs = jobs_in_group(
+        "lr-zero-iterations",
+        lambda: lr_fit_dataflow(feats, n_buckets=N_BUCKETS, iterations=0),
+    )
+    assert jobs == 0
+
+
 def test_feature_parity_wide_buckets_unicode(spark):
     """Focused regression for the char-histogram featurization (round 6):
     per-bucket counts come from one bucket-CHAR per token plus codegen

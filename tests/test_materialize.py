@@ -195,19 +195,46 @@ def test_fixpoint_stops_when_converged(spark):
             spark.range(1),
             step,
             iterations=10,
-            converged=lambda s: s.first()["id"] >= 3,
+            changed=F.count_if(F.col("id") < 3),
         )
         assert out.first()["id"] == 3
     assert len(calls) == 3
 
 
+def test_connected_components_runs_one_job_per_iteration(spark, jobs_in_group):
+    """Two up-front checkpoint jobs (edges, initial labels), then one job
+    per iteration: the convergence count is observed on the iteration's
+    checkpoint job. AQE and broadcast joins are off, so each action is
+    exactly one job."""
+    pairs = chain(spark)
+    conf = {
+        "spark.sql.adaptive.enabled": "false",
+        "spark.sql.autoBroadcastJoinThreshold": "-1",
+    }
+    saved = {k: spark.conf.get(k) for k in conf}
+    try:
+        for k, v in conf.items():
+            spark.conf.set(k, v)
+        with storage_scope():
+            jobs = jobs_in_group(
+                "cc-jobs", lambda: dedup.connected_components(pairs)
+            )
+    finally:
+        for k, v in saved.items():
+            spark.conf.set(k, v)
+    # the chain's 12 hops, then one iteration that changes nothing
+    assert jobs == 2 + 13
+
+
 def test_only_materialize_calls_local_checkpoint():
-    """Every materialization in the package goes through the helper."""
+    """Every materialization in the package goes through the helper: no
+    raw checkpoint, persist or cache call anywhere else."""
+    raw = (".localCheckpoint(", ".persist(", ".unpersist(", ".cache()")
     offenders = [
         f"{p.relative_to(PACKAGE)}:{i}"
         for p in sorted(PACKAGE.rglob("*.py"))
         if p != PACKAGE / "materialize.py"
         for i, line in enumerate(p.read_text().splitlines(), 1)
-        if ".localCheckpoint(" in line
+        if any(call in line for call in raw)
     ]
     assert offenders == []

@@ -139,6 +139,35 @@ def test_pq_dim_mismatch_raises(spark):
         pq_train(df, m=4, init_ids=[0, 1])
 
 
+def test_pq_negative_iterations_raises(spark):
+    from llm_document_parser_spark.operators.quantize import pq_train
+
+    df = _df(spark, np.ones((5, 8)))
+    with pytest.raises(ValueError, match="iterations must be >= 0"):
+        pq_train(df, m=4, init_ids=[0, 1], iterations=-1)
+
+
+@pytest.mark.parametrize("trainer", ["kmeans_lloyd", "pq_train"])
+def test_zero_iterations_run_only_the_seed_lookup(spark, jobs_in_group, trainer):
+    """With no Lloyd step to feed, the corpus is not checkpointed: the
+    seed vectors' lookup is the only work."""
+    from llm_document_parser_spark.ml.kmeans_dataflow import kmeans_lloyd
+    from llm_document_parser_spark.operators.quantize import pq_train
+
+    df = _df(spark, np.arange(40.0).reshape(5, 8)).repartition(2)
+    train = {
+        "kmeans_lloyd": lambda: kmeans_lloyd(df, [0, 1], iterations=0),
+        "pq_train": lambda: pq_train(df, m=4, init_ids=[0, 1], iterations=0),
+    }[trainer]
+    seeds = jobs_in_group(
+        f"{trainer}-seeds",
+        lambda: df.filter(F.col("vec_id").isin([0, 1]))
+        .select("vec_id", "embedding")
+        .collect(),
+    )
+    assert jobs_in_group(f"{trainer}-zero-iterations", train) == seeds
+
+
 def test_pq_adc_topk_parity_and_recall(spark):
     from llm_document_parser_spark.operators.quantize import (
         pq_adc_topk,
