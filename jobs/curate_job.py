@@ -155,13 +155,12 @@ def run_curation(
     budget_group: str | None = None,
     tokenizer: str = "whitespace",
     encoder_factory=None,
-    fail_after_groups: int | None = None,
     pack_seq_len: int | None = None,
     pack_shards: int = 64,
     **curate_kwargs,
 ) -> dict:
     """Resumable two-phase curation (see module docstring). Returns the
-    funnel report dict. ``fail_after_groups`` is the lineage test hook.
+    funnel report dict.
 
     ``budget_tokens`` caps the kept corpus at a deterministic per-group
     token budget (operators/sampling.py) — surviving documents keep
@@ -252,7 +251,6 @@ def run_curation(
         job_id=job_id,
         num_buckets=num_buckets,
         buckets_per_commit=buckets_per_commit,
-        fail_after_groups=fail_after_groups,
         key=id_col,
     )
     funnel = {

@@ -7,14 +7,9 @@ DataFrame of ``PAGES_SCHEMA`` shape); this module is the single dispatch
 point between an Iceberg catalog table and a plain parquet path:
 
 * with the runtime jar on the classpath, ``load_pages`` reads
-  ``spark.read.format("iceberg").load("catalog.db.pages")`` and
-  ``write_pages_table`` writes via ``writeTo(...).partitionedBy(
-  bucket(N, url))`` — url-hash bucketing IS the layout the lineage/resume
-  machinery keys on, so an Iceberg-native table and the parquet fallback
-  produce identically-bucketed work units;
-* without it (this sandbox ships no Iceberg jar and has no network),
-  both functions fall back to parquet paths with the same schema and the
-  same downstream plan. The dispatch seam is what the tests drive.
+  ``spark.read.format("iceberg").load("catalog.db.pages")``;
+* without it, ``load_pages`` reads a parquet path with the same schema
+  and the same downstream plan. The dispatch seam is what the tests drive.
 
 At 10¹² rows the Iceberg path additionally buys: snapshot-isolated reads
 while a crawl appends, metadata-level partition pruning on ``bucket(url)``
@@ -100,30 +95,3 @@ def load_pages(spark: SparkSession, source: str) -> DataFrame:
             "would null-fill them"
         )
     return spark.read.schema(PAGES_SCHEMA).parquet(source)
-
-
-def write_pages_table(
-    df: DataFrame, target: str, num_buckets: int = 256, mode: str = "append"
-) -> None:
-    """Write pages to an Iceberg table (bucket(url) hidden partitioning —
-    the same url-hash layout lineage resume keys on) or to a parquet path.
-
-    ``mode`` is ``append`` or ``replace``; Iceberg's ``createOrReplace``
-    keeps snapshot history either way.
-    """
-    if is_table_identifier(target):
-        if not iceberg_available():
-            raise RuntimeError(
-                f"'{target}' is a table identifier but no iceberg-spark-runtime "
-                "jar is on the classpath; pass a parquet path or add the jar"
-            )
-        from pyspark.sql.functions import col
-        from pyspark.sql.functions.partitioning import bucket
-
-        writer = df.writeTo(target).partitionedBy(bucket(num_buckets, col("url")))
-        if mode == "replace":
-            writer.createOrReplace()
-        else:
-            writer.append()
-        return
-    df.write.mode("overwrite" if mode == "replace" else mode).parquet(target)

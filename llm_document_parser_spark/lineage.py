@@ -104,7 +104,6 @@ def run_with_lineage(
     job_id: str | None = None,
     num_buckets: int = 16,
     buckets_per_commit: int = 4,
-    fail_after_groups: int | None = None,
     key: str = "url",
 ) -> str:
     """Run ``transform(pages_subset)`` bucket-group by bucket-group with
@@ -113,7 +112,6 @@ def run_with_lineage(
 
     ``key`` is the bucketing column (url for pages tables; any stable
     unique id works — the transform must preserve it).
-    ``fail_after_groups`` is a test hook simulating a mid-job kill.
     Returns the job_id.
     """
     job_id = job_id or uuid.uuid4().hex
@@ -126,9 +124,7 @@ def run_with_lineage(
         todo[i : i + buckets_per_commit]
         for i in range(0, len(todo), buckets_per_commit)
     ]
-    for gi, group in enumerate(groups):
-        if fail_after_groups is not None and gi >= fail_after_groups:
-            raise RuntimeError(f"simulated failure before group {gi}")
+    for group in groups:
         started = _dt.datetime.now()
         subset = bucketed.filter(F.col("bucket").isin([int(b) for b in group]))
         out = transform(subset.drop("bucket"))

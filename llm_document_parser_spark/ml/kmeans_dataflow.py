@@ -1,11 +1,10 @@
 """Lloyd's k-means as pure dataflow — deterministic, oracle-checkable,
 with the model on the driver and the data never moving.
 
-similarity.ivf_centroids trains its coarse quantizer with Spark ML's
-KMeans — fast, but its k-means|| init is seeded-random and its iteration
-internals are unobservable, so nothing external can verify the algebra.
-This module is the verifiable counterpart (and a drop-in centroid source
-for ivf_topk): INIT IS EXPLICIT (the caller names the vectors that seed
+Spark ML's KMeans is fast, but its k-means|| init is seeded-random and
+its iteration internals are unobservable, so nothing external can verify
+the algebra. This module is the verifiable alternative (and a centroid
+source for ivf_topk): INIT IS EXPLICIT (the caller names the vectors that seed
 each cell — deterministic by construction, the same move as
 dedup's fixed LSH geometry), and each Lloyd iteration is
 
@@ -70,14 +69,6 @@ def cell_distances(vec: Column, centroids: list[list[float]]) -> Column:
 def nearest_cell(vec: Column, centroids: list[list[float]]) -> Column:
     """The argmin-distance centroid id (ties -> lowest id)."""
     return F.array_min(cell_distances(vec, centroids))["cell"]
-
-
-def assign_cells(
-    df: DataFrame, centroids: list[list[float]], vec_col: str = "embedding"
-) -> DataFrame:
-    """Append ``cell``: the argmin-distance centroid id (ties -> lowest
-    id), as a pure column expression over centroid literals."""
-    return df.withColumn("cell", nearest_cell(F.col(vec_col), centroids))
 
 
 def kmeans_lloyd(

@@ -25,8 +25,6 @@ natively, with no Python in the hot path and no per-iteration shuffle:
   rows. The weight vector lives on the driver (scalar model state, the
   same standing as pagerank's node count — not a data collection) and is
   folded into next round's closed-form column expression.
-* ``lr_score``: broadcast-free scoring — weights are literals compiled
-  into one codegen expression over the feature array.
 
 Determinism: the gradient is a sum of doubles whose addition order varies
 across engines/partitionings below ~1e-13 for corpus-scale magnitudes;
@@ -147,10 +145,3 @@ def lr_fit_dataflow(
             ]
             bias = bias - lr * float(row["gb"]) / n
     return weights, bias
-
-
-def lr_score(feats: DataFrame, weights: list[float], bias: float) -> DataFrame:
-    """Append ``p`` (probability of the positive class) — weights compile
-    to one codegen expression, no join, no broadcast, no shuffle."""
-    p = F.lit(1.0) / (F.lit(1.0) + F.exp(-_margin(weights, bias)))
-    return feats.withColumn("p", p)

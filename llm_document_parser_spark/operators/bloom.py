@@ -175,19 +175,6 @@ def _might_contain_pred(df: DataFrame, bloom: SeenBloom, col: str):
     return _might_contain(pos_col)
 
 
-def filter_unseen(
-    candidates: DataFrame,
-    bloom: SeenBloom,
-    url_col: str = "url",
-) -> DataFrame:
-    """Candidate rows whose url is definitely NOT in the seen-set the
-    filter was built from (map-side, zero shuffle; drops every seen url
-    plus the fpp-rate of false positives)."""
-    if bloom.nbytes() <= _INLINE_BITMAP_MAX_BYTES:
-        return _bitmap_filter_native(candidates, bloom, url_col, keep_might=False)
-    return candidates.filter(~_might_contain_pred(candidates, bloom, url_col))
-
-
 def filter_might_contain(
     candidates: DataFrame,
     bloom: SeenBloom,

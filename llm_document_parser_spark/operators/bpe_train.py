@@ -22,9 +22,6 @@ the corpus:
   ``F.aggregate`` left-fold re-segments the vocab — zero Python in any
   hot path; the driver holds only the 1-row winner per iteration
   (a checkpoint every few merges truncates the fold lineage).
-* :func:`segment_words` / :func:`encode_tokens`: applying learned merges
-  to a corpus re-uses the same trick — segment DISTINCT words once, then
-  broadcast-join the segmentation back onto the token stream.
 
 The left-fold merge is the exact textbook semantics (greedy
 left-to-right single pass per rule), pinned against a pure-Python
@@ -145,34 +142,3 @@ def learn_bpe(
             if (i + 1) % _CHECKPOINT_EVERY == 0 and (i + 1) < num_merges:
                 cur = checkpoint(cur)
     return merges
-
-
-def segment_words(
-    words: DataFrame, merges: list[tuple[str, str, int]]
-) -> DataFrame:
-    """Apply learned merges to a words table → (word, pieces).
-
-    Builds one nested native fold per merge rule; run it on DISTINCT
-    words (vocab-sized), never the raw token stream — then join back
-    (:func:`encode_tokens`). For merge lists beyond a few hundred rules
-    split the application into chunks with a checkpoint between them to
-    keep the codegen tree bounded."""
-    syms = F.split("word", "")
-    for a, b, _ in merges:
-        syms = merge_pair(syms, a, b)
-    return words.select("word", syms.alias("pieces"))
-
-
-def encode_tokens(
-    tokens: DataFrame,
-    merges: list[tuple[str, str, int]],
-    word_col: str = "word",
-) -> DataFrame:
-    """Segment a corpus token stream: segment the distinct-word table,
-    broadcast-join the pieces back. The corpus-side cost is one
-    broadcast hash join — the fold never touches corpus rows."""
-    vocab = tokens.select(F.col(word_col).alias("word")).distinct()
-    seg = segment_words(vocab, merges)
-    return tokens.join(
-        F.broadcast(seg), tokens[word_col] == seg["word"], "left"
-    ).drop(seg["word"])

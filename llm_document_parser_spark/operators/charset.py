@@ -108,31 +108,6 @@ def declared_charset(head: bytes) -> str | None:
     return None
 
 
-def detect_charset(payload: bytes | None) -> str:
-    """The charset the decoder will use for ``payload`` (sniff order above).
-    Returns a canonical codecs name; 'windows-1252' is the terminal fallback."""
-    if not payload:
-        return "utf-8"
-    for bom, label in BOMS:
-        if payload.startswith(bom):
-            return label
-    declared = declared_charset(payload[:_SNIFF_BYTES])
-    if declared is not None and declared != "utf-8":
-        # a declaration can lie — only report it if a strict decode
-        # succeeds, exactly mirroring decode_payload's fall-through, so
-        # detect_charset(p) == decode_payload(p)[1] always holds
-        try:
-            payload.decode(declared, errors="strict")
-            return declared
-        except (UnicodeDecodeError, LookupError):
-            pass
-    try:
-        payload.decode("utf-8", errors="strict")
-        return "utf-8"
-    except UnicodeDecodeError:
-        return "windows-1252"
-
-
 def decode_payload(payload: bytes | None) -> tuple[str, str]:
     """(text, charset_used) for a page payload.
 

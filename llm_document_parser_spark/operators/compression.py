@@ -52,16 +52,3 @@ def with_compression_ratio(
     null/empty text. Lower = more redundant; natural prose lands
     ~0.4-0.7, hard repetition < 0.1."""
     return df.withColumn(out_col, compression_ratio_udf(F.col(text_col)))
-
-
-def flag_compressible(
-    df: DataFrame,
-    text_col: str = "text",
-    max_ratio: float = 0.25,
-    out_col: str = "too_compressible",
-) -> DataFrame:
-    """Gopher-style boolean gate: True when the doc compresses below
-    ``max_ratio`` — or is empty/NULL (no content is also a drop) — the
-    curation cascade drops these."""
-    r = compression_ratio_udf(F.col(text_col))
-    return df.withColumn(out_col, F.coalesce(r <= max_ratio, F.lit(True)))

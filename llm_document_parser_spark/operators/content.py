@@ -102,37 +102,6 @@ def content_blocks(
     )
 
 
-def extract_content(
-    pages: DataFrame,
-    url_col: str = "url",
-    html_col: str = "html",
-    min_chars: int = 30,
-    max_link_density: float = 0.4,
-) -> DataFrame:
-    """Re-assembled main content per page: kept blocks joined in document
-    order — ``(url, content)``. One groupBy on the page key (the explode's
-    inverse); block order is restored with ``array_sort`` over
-    (block_idx, text) structs, not a window, so the plan stays a single
-    aggregation."""
-    kept = content_blocks(
-        pages, url_col, html_col, min_chars, max_link_density
-    ).where(F.col("kept") == 1)
-    return (
-        kept.groupBy(url_col)
-        .agg(
-            F.array_sort(
-                F.collect_list(F.struct("block_idx", "block_text"))
-            ).alias("bs")
-        )
-        .select(
-            url_col,
-            F.array_join(
-                F.transform(F.col("bs"), lambda b: b["block_text"]), " "
-            ).alias("content"),
-        )
-    )
-
-
 # ===========================================================================
 # heading outline — document structure for section-aware chunking
 # ===========================================================================

@@ -29,7 +29,7 @@ from pyspark.sql import functions as F
 
 from ..materialize import checkpoint
 
-from .dedup import _exploded_shingles, shingles_col  # noqa: F401 (shingles_col: API compat)
+from .dedup import _exploded_shingles
 
 
 def benchmark_ngrams(
@@ -132,26 +132,3 @@ def contamination_report(
         )
         .filter(F.col("overlap_ngrams") >= min_hits)
     )
-
-
-def decontaminate(
-    docs: DataFrame,
-    benchmark: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    bench_id_col: str = "bench_id",
-    bench_text_col: str = "text",
-    n: int = 13,
-    min_hits: int = 1,
-    bloom_fpp: float | None = None,
-) -> DataFrame:
-    """The keep-side: ``docs`` minus contaminated rows — an anti-join
-    against the (small) contamination report, preserving the input
-    schema. One broadcast join + one agg + one anti-join. ``bloom_fpp``
-    enables the Bloom pre-filter (see contamination_report) — the kept
-    set is unchanged either way, only the join volume shrinks."""
-    contaminated = contamination_report(
-        docs, benchmark, id_col, text_col, bench_id_col, bench_text_col,
-        n=n, min_hits=min_hits, bloom_fpp=bloom_fpp,
-    ).select(id_col)
-    return docs.join(contaminated, id_col, "left_anti")

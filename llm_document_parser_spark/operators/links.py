@@ -86,14 +86,6 @@ def _resolve_with(
     return F.when((scheme != "") & (host != ""), resolved)
 
 
-def resolve_link(base_url: Column, target: Column) -> Column:
-    """Absolute URL for an href ``target`` found on ``base_url``, or NULL
-    when the target is outside the documented subset (mailto:/javascript:,
-    ``..`` segments, non-http schemes, relative link on an unparseable
-    base). Pure column expressions — usable verbatim inside the oracle."""
-    return _resolve_with(*_base_parts(base_url), target)
-
-
 def extract_outlinks(
     pages: DataFrame, url_col: str = "url", html_col: str = "html_text"
 ) -> DataFrame:

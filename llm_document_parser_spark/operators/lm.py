@@ -115,8 +115,7 @@ def train_bigram_lm(df: DataFrame, text_col: str = "text") -> DataFrame:
     ``logp = ln(c(w1,w2) / c(w1,·))`` — the conditional next-token
     probability. Training shuffles three times (pair counts, context
     totals, and the w1 join aligning them); the scored model is broadcast,
-    so training cost is paid once per corpus. Cap with ``cap_vocab`` (it keeps the top-K rows by logp)
-    before broadcasting a web-scale model."""
+    so training cost is paid once per corpus."""
     pairs = _pairs(df.select(F.lit(0).alias("_i"), text_col), "_i", text_col)
     big = pairs.groupBy("w1", "w2").agg(F.count("*").cast("double").alias("c12"))
     ctx = big.groupBy("w1").agg(F.sum("c12").alias("c1"))
@@ -201,14 +200,6 @@ def perplexity_buckets(
         tile.cast("long").alias("ppl_tile"),
         label.alias("ppl_bucket"),
     )
-
-
-def cap_vocab(lm: DataFrame, vocab_limit: int) -> DataFrame:
-    """Keep the ``vocab_limit`` highest-probability tokens (ties broken by
-    token for determinism) — the broadcastable production model.
-    orderBy+limit compiles to TakeOrderedAndProject (per-partition top-K,
-    then a K-row merge), not a global sort — safe on a 10^9-row vocab."""
-    return lm.orderBy(F.col("logp").desc(), "token").limit(vocab_limit)
 
 
 def source_unigram_divergence(

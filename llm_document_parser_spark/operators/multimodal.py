@@ -1,540 +1,15 @@
-"""Multimodal columns — image/audio/video as opaque binary + typed metadata.
+"""Perceptual-hash near-duplicate matching for image rows.
 
-The Spark-side plumbing (schemas, Arrow batch shapes, ``mapInPandas``
-signatures, partitioning) is real and tested; the codec is gated exactly
-like the reference gates OCR (reference: src/document_parser.py:22-28):
-with Pillow installed, ``_decode_image_real`` decodes payloads into a
-deterministic grayscale-histogram feature; without it, ``_feature_fake``
-produces a byte-histogram stand-in with the same shape. Installing Pillow
-enables the real decode — nothing else changes. Decode errors degrade the
-row's feature to None (never crash the stage).
-
-Media rows follow the pages-table pattern: ``(url, media_type, payload
-binary, meta struct)``; features come back as fixed-width float arrays so
-they compose with operators/similarity.py for cross-modal near-dup search.
-
-Audio mirrors the image path with one upgrade: WAV payloads decode for
-REAL via the stdlib ``wave`` module (16-bit PCM → RMS energy envelope),
-dependency-free; other codecs gate on soundfile exactly as image decode
-gates on Pillow, with the deterministic byte-histogram stand-in when
-absent. Video mirrors both: the frame-sample PLAN is native expressions,
-and the frame decode gates on PyAV (preferred) or imageio(-ffmpeg), with a
-deterministic timestamp-seeded stand-in when neither is installed — all
-three media types now run real-or-stand-in decode end-to-end.
+Images are matched by a 64-bit difference hash (dHash) per row; this
+module finds every pair of hashes within a small Hamming distance with a
+banded equi-join, the same geometry as the MinHash LSH path in
+operators/dedup.py, and no Python and no cross product in the plan.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    ArrayType,
-    BinaryType,
-    FloatType,
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-)
-
-try:  # pragma: no cover — not installed in this environment
-    from PIL import Image  # type: ignore  # noqa: F401
-
-    HAS_PIL = True
-except Exception:  # pragma: no cover
-    HAS_PIL = False
-
-MEDIA_SCHEMA = StructType(
-    [
-        StructField("url", StringType(), nullable=False),
-        StructField("media_type", StringType()),  # image | audio | video
-        StructField("payload", BinaryType()),
-        StructField("width", LongType()),
-        StructField("height", LongType()),
-        StructField("duration_ms", LongType()),
-    ]
-)
-
-IMAGE_FEATURES_SCHEMA = StructType(
-    [
-        StructField("url", StringType()),
-        StructField("media_type", StringType()),
-        StructField("n_bytes", LongType()),
-        StructField("feature", ArrayType(FloatType())),
-    ]
-)
-
-FEATURE_DIM = 16
-
-
-def _decode_image_real(payload: bytes) -> list[float]:
-    """Real decode path (requires Pillow): open → grayscale → 32×32 resize →
-    FEATURE_DIM-bin luminance histogram, L1-normalized. Deterministic for a
-    given payload. Raises on undecodable bytes; ``_payload_to_feature``
-    degrades that row to a None feature (same degrade contract as the OCR
-    path, reference: src/document_parser.py:144-146)."""
-    import io
-
-    with Image.open(io.BytesIO(payload)) as img:
-        gray = img.convert("L").resize((32, 32))
-        pixels = list(gray.getdata())
-    hist = [0] * FEATURE_DIM
-    bucket = 256 // FEATURE_DIM
-    for px in pixels:
-        hist[min(int(px) // bucket, FEATURE_DIM - 1)] += 1
-    total = float(len(pixels))
-    return [h / total for h in hist]
-
-
-def _feature_fake(payload: bytes) -> list[float]:
-    """Deterministic stand-in feature: byte-histogram over 16 buckets,
-    L1-normalized. Pure function of the payload — stable across runs,
-    good enough to exercise the whole downstream similarity stack."""
-    if not payload:
-        return [0.0] * FEATURE_DIM
-    hist = [0] * FEATURE_DIM
-    for b in payload[:4096]:
-        hist[b % FEATURE_DIM] += 1
-    total = float(sum(hist))
-    return [h / total for h in hist]
-
-
-def _payload_to_feature(payload) -> list[float] | None:
-    """Dispatch seam: real Pillow decode when installed, the deterministic
-    fake otherwise; any decode error degrades the row to None rather than
-    failing the stage (mirrors extract_udfs._payload_to_text)."""
-    if payload is None:
-        return None
-    decode = _decode_image_real if HAS_PIL else _feature_fake
-    try:
-        return decode(bytes(payload))
-    except Exception:
-        return None
-
-
-def extract_media_features(media: DataFrame) -> DataFrame:
-    """mapInPandas feature extraction over Arrow batches of binary payloads.
-
-    Partitioning contract: caller repartitions by ``xxhash64(url)`` when
-    payload sizes are skewed (same rule as the pages pipeline)."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            feats = [_payload_to_feature(p) for p in pdf["payload"]]
-            yield pd.DataFrame(
-                {
-                    "url": pdf["url"],
-                    "media_type": pdf["media_type"],
-                    "n_bytes": [len(p) if p is not None else 0 for p in pdf["payload"]],
-                    "feature": feats,
-                }
-            )
-
-    return media.mapInPandas(run, schema=IMAGE_FEATURES_SCHEMA)
-
-
-# ---------------------------------------------------------------------------
-# audio features — mirrors the image path; WAV decodes for REAL via the
-# stdlib `wave` module (no external dependency), other codecs gate on
-# soundfile exactly like image decode gates on Pillow
-# ---------------------------------------------------------------------------
-
-try:  # pragma: no cover — not installed in this environment
-    import soundfile  # type: ignore  # noqa: F401
-
-    HAS_SOUNDFILE = True
-except Exception:  # pragma: no cover
-    HAS_SOUNDFILE = False
-
-AUDIO_FEATURES_SCHEMA = StructType(
-    [
-        StructField("url", StringType()),
-        StructField("media_type", StringType()),
-        StructField("n_bytes", LongType()),
-        StructField("sample_rate", LongType()),
-        StructField("n_samples", LongType()),
-        StructField("feature", ArrayType(FloatType())),
-    ]
-)
-
-
-def _decode_audio_wav(payload: bytes) -> tuple[int, int, list[float]]:
-    """Real WAV decode (stdlib, always available): parse PCM frames and
-    compute a FEATURE_DIM-segment RMS energy envelope, L1-normalized —
-    deterministic for a given payload. Returns (sample_rate, n_samples,
-    feature). Raises on undecodable bytes."""
-    import io
-    import struct
-    import wave
-
-    with wave.open(io.BytesIO(payload), "rb") as w:
-        sr = w.getframerate()
-        n = w.getnframes()
-        width = w.getsampwidth()
-        channels = w.getnchannels()
-        raw = w.readframes(n)
-    if width != 2:
-        raise ValueError(f"only 16-bit PCM supported, got width={width}")
-    samples = struct.unpack(f"<{len(raw) // 2}h", raw)
-    if channels > 1:  # mono mixdown: mean over channels, fixed order
-        samples = [
-            sum(samples[i : i + channels]) / channels
-            for i in range(0, len(samples) - channels + 1, channels)
-        ]
-    n_samples = len(samples)
-    if n_samples == 0:
-        return sr, 0, [0.0] * FEATURE_DIM
-    seg = max(1, n_samples // FEATURE_DIM)
-    env = []
-    for b in range(FEATURE_DIM):
-        chunk = samples[b * seg : (b + 1) * seg]
-        env.append(
-            (sum(float(s) * s for s in chunk) / len(chunk)) ** 0.5 if chunk else 0.0
-        )
-    total = sum(env)
-    return sr, n_samples, [e / total if total else 0.0 for e in env]
-
-
-def _decode_audio_soundfile(payload: bytes) -> tuple[int, int, list[float]]:
-    """Gated real path for non-WAV codecs (flac/ogg/…): soundfile decode →
-    the same RMS envelope. Requires the soundfile package."""
-    import io
-
-    import numpy as np
-    import soundfile as sf
-
-    data, sr = sf.read(io.BytesIO(payload), always_2d=True)
-    mono = data.mean(axis=1)
-    n_samples = len(mono)
-    if n_samples == 0:
-        return int(sr), 0, [0.0] * FEATURE_DIM
-    seg = max(1, n_samples // FEATURE_DIM)
-    env = [
-        float(np.sqrt(np.mean(np.square(mono[b * seg : (b + 1) * seg]))))
-        if len(mono[b * seg : (b + 1) * seg])
-        else 0.0
-        for b in range(FEATURE_DIM)
-    ]
-    total = sum(env)
-    return int(sr), n_samples, [e / total if total else 0.0 for e in env]
-
-
-def _audio_feature_fake(payload: bytes) -> tuple[int, int, list[float]]:
-    """Deterministic stand-in for codecs no installed library can decode:
-    byte-histogram feature (same shape as the envelope), metadata zeroed —
-    the downstream plumbing and similarity stack run identically."""
-    return 0, 0, _feature_fake(payload)
-
-
-def _payload_to_audio_feature(payload) -> tuple[int, int, list[float] | None]:
-    """Dispatch seam mirroring ``_payload_to_feature``: RIFF/WAVE magic →
-    stdlib wave decode (real, dependency-free); otherwise soundfile when
-    installed, the deterministic fake when not. Any decode error degrades
-    the row's feature to None — never fails the stage."""
-    if payload is None:
-        return 0, 0, None
-    data = bytes(payload)
-    try:
-        if data[:4] == b"RIFF" and data[8:12] == b"WAVE":
-            return _decode_audio_wav(data)
-        if HAS_SOUNDFILE:
-            return _decode_audio_soundfile(data)
-        return _audio_feature_fake(data)
-    except Exception:
-        return 0, 0, None
-
-
-def extract_audio_features(media: DataFrame) -> DataFrame:
-    """mapInPandas audio-feature extraction — identical batch shape and
-    partitioning contract as ``extract_media_features``; emits the RMS
-    energy envelope plus decode metadata per row."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            decoded = [_payload_to_audio_feature(p) for p in pdf["payload"]]
-            yield pd.DataFrame(
-                {
-                    "url": pdf["url"],
-                    "media_type": pdf["media_type"],
-                    "n_bytes": [len(p) if p is not None else 0 for p in pdf["payload"]],
-                    "sample_rate": [d[0] for d in decoded],
-                    "n_samples": [d[1] for d in decoded],
-                    "feature": [d[2] for d in decoded],
-                }
-            )
-
-    return media.filter(F.col("media_type") == "audio").mapInPandas(
-        run, schema=AUDIO_FEATURES_SCHEMA
-    )
-
-
-def frame_sample_plan(media: DataFrame, every_ms: int = 1000) -> DataFrame:
-    """Video frame-sampling plumbing: explode one row per planned frame
-    timestamp. Native expressions — the frame plan costs no Python. The
-    decode step (``extract_video_frames``) emits exactly this plan's
-    (url, frame_idx) set, asserted in tests/test_multimodal.py."""
-    n_frames = (F.coalesce(F.col("duration_ms"), F.lit(0)) / every_ms).cast("long")
-    return media.filter(F.col("media_type") == "video").select(
-        "url",
-        F.explode(
-            F.when(
-                n_frames > 0, F.sequence(F.lit(0), n_frames - 1)
-            ).otherwise(F.array().cast("array<long>"))
-        ).alias("frame_idx"),
-    ).withColumn("frame_ts_ms", F.col("frame_idx") * every_ms)
-
-
-# ---------------------------------------------------------------------------
-# video frame decode — the ninth real-library seam. Real path gates on
-# PyAV (preferred: direct seek) or imageio/imageio-ffmpeg; without either,
-# a deterministic payload-derived stand-in keeps the whole downstream
-# frame-feature stack runnable and testable (same contract as image/audio).
-# ---------------------------------------------------------------------------
-
-try:  # pragma: no cover — not installed in this environment
-    import av  # type: ignore  # noqa: F401
-
-    HAS_AV = True
-except Exception:  # pragma: no cover
-    HAS_AV = False
-
-try:  # pragma: no cover — not installed in this environment
-    import imageio.v3  # type: ignore  # noqa: F401
-
-    HAS_IMAGEIO = True
-except Exception:  # pragma: no cover
-    HAS_IMAGEIO = False
-
-VIDEO_FRAMES_SCHEMA = StructType(
-    [
-        StructField("url", StringType()),
-        StructField("frame_idx", LongType()),
-        StructField("frame_ts_ms", LongType()),
-        StructField("feature", ArrayType(FloatType())),
-    ]
-)
-
-
-def _luma_histogram(pixels) -> list[float]:
-    """FEATURE_DIM-bin luminance histogram, L1-normalized — the same
-    feature the image path emits, so video frames compose with the
-    similarity/dHash stack unchanged."""
-    hist = [0] * FEATURE_DIM
-    bucket = 256 // FEATURE_DIM
-    n = 0
-    for px in pixels:
-        hist[min(int(px) // bucket, FEATURE_DIM - 1)] += 1
-        n += 1
-    if n == 0:
-        return [0.0] * FEATURE_DIM
-    return [h / float(n) for h in hist]
-
-
-def _decode_video_frames_av(payload: bytes, ts_ms_list: list[int]):
-    """Real decode via PyAV: seek to each planned timestamp, take the next
-    decoded frame, grayscale it, emit the luminance histogram. Uses the
-    module-level ``av`` binding (the dispatch seam) — same pattern as
-    ``_decode_image_real`` with ``Image``."""
-    import io
-
-    feats = []
-    with av.open(io.BytesIO(payload)) as container:
-        stream = container.streams.video[0]
-        for ts_ms in ts_ms_list:
-            container.seek(int(ts_ms * 1000), backward=True)  # microseconds
-            frame = next(container.decode(stream), None)
-            if frame is None:
-                feats.append(None)
-                continue
-            gray = frame.to_image().convert("L").resize((32, 32))
-            feats.append(_luma_histogram(gray.getdata()))
-    return feats
-
-
-def _decode_video_frames_imageio(payload: bytes, ts_ms_list: list[int]):
-    """Real decode via imageio(-ffmpeg): read frames at the planned
-    indices (imageio exposes index-based access; planned timestamps map
-    through the container fps)."""
-    import imageio.v3 as iio
-
-    props = iio.improps(payload, plugin="pyav")
-    fps = getattr(props, "fps", None) or 25.0
-    feats = []
-    for ts_ms in ts_ms_list:
-        idx = int(ts_ms / 1000.0 * fps)
-        try:
-            frame = iio.imread(payload, plugin="pyav", index=idx)
-        except (IndexError, StopIteration):
-            feats.append(None)
-            continue
-        # mean over the channel axis ≈ luma; ints for the shared histogram
-        gray = frame.mean(axis=-1).astype("int64").ravel() if frame.ndim == 3 \
-            else frame.astype("int64").ravel()
-        feats.append(_luma_histogram(gray))
-    return feats
-
-
-def _video_frames_fake(payload: bytes, ts_ms_list: list[int]):
-    """Deterministic stand-in: per planned frame, a byte-histogram over a
-    timestamp-seeded window of the payload — a pure function of
-    (payload, ts) so repeated runs and both sides of a near-dup pair
-    agree, exercising the full downstream feature stack."""
-    feats = []
-    for ts_ms in ts_ms_list:
-        if not payload:
-            feats.append([0.0] * FEATURE_DIM)
-            continue
-        off = (int(ts_ms) * 997) % max(1, len(payload))
-        window = payload[off : off + 4096] or payload[:4096]
-        hist = [0] * FEATURE_DIM
-        for b in window:
-            hist[b % FEATURE_DIM] += 1
-        total = float(sum(hist))
-        feats.append([h / total for h in hist])
-    return feats
-
-
-def _payload_to_video_frames(payload, duration_ms, every_ms: int):
-    """Dispatch seam mirroring the image/audio paths: PyAV when installed,
-    imageio(-ffmpeg) as second choice, the deterministic fake otherwise.
-    Emits one (frame_idx, frame_ts_ms, feature) per frame of the SAME
-    plan ``frame_sample_plan`` computes natively. Any decode error
-    degrades the row's frames to None features — never fails the stage."""
-    n_frames = int((duration_ms or 0) // every_ms)
-    ts_list = [i * every_ms for i in range(n_frames)]
-    if payload is None or n_frames == 0:
-        return [(i, ts, None) for i, ts in enumerate(ts_list)]
-    data = bytes(payload)
-    if HAS_AV:
-        decode = _decode_video_frames_av
-    elif HAS_IMAGEIO:
-        decode = _decode_video_frames_imageio
-    else:
-        decode = _video_frames_fake
-    try:
-        feats = decode(data, ts_list)
-    except Exception:
-        feats = [None] * n_frames
-    return [(i, ts, f) for i, (ts, f) in enumerate(zip(ts_list, feats))]
-
-
-def extract_video_frames(media: DataFrame, every_ms: int = 1000) -> DataFrame:
-    """mapInPandas frame decode over Arrow batches of video payloads —
-    (url, frame_idx, frame_ts_ms, feature) per planned frame, with the
-    image path's luminance-histogram feature so frames feed the same
-    similarity/dedup stack. Output (url, frame_idx) is exactly
-    ``frame_sample_plan(media, every_ms)``'s set (tested).
-
-    Partitioning contract: caller repartitions by ``xxhash64(url)`` when
-    payload sizes are skewed (same rule as the pages pipeline); one video
-    row fans out to duration_ms/every_ms output rows, so Arrow batch
-    memory is bounded by batch_size × that fan-out × FEATURE_DIM floats."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            urls, idxs, tss, feats = [], [], [], []
-            for url, payload, dur in zip(
-                pdf["url"], pdf["payload"], pdf["duration_ms"]
-            ):
-                for i, ts, f in _payload_to_video_frames(payload, dur, every_ms):
-                    urls.append(url)
-                    idxs.append(i)
-                    tss.append(ts)
-                    feats.append(f)
-            yield pd.DataFrame(
-                {
-                    "url": urls,
-                    "frame_idx": pd.Series(idxs, dtype="int64"),
-                    "frame_ts_ms": pd.Series(tss, dtype="int64"),
-                    "feature": feats,
-                }
-            )
-
-    return media.filter(F.col("media_type") == "video").mapInPandas(
-        run, schema=VIDEO_FRAMES_SCHEMA
-    )
-
-
-# ---------------------------------------------------------------------------
-# perceptual image near-dup: dHash + banded Hamming matching
-# ---------------------------------------------------------------------------
-# The image analog of the text MinHash story: a 64-bit difference hash
-# per image (robust to re-encode/resize/brightness), then candidate
-# pairs via 16-bit band equi-joins — by pigeonhole, any pair within
-# Hamming distance <= 3 shares at least one of the 4 bands, so the
-# banded join finds every such pair with NO cross product — and a
-# native bit_count(xor) verification. Same seam discipline as decode:
-# real Pillow grayscale pixels when installed, a deterministic
-# byte-derived pixel grid otherwise (the BIT RULE is shared either way).
-
-
-def _dhash_bits(pixels: list[int]) -> int:
-    """64-bit dHash from a row-major 9x8 grayscale grid: bit (y,x) is set
-    iff pixel[y][x+1] > pixel[y][x] (horizontal gradient)."""
-    v = 0
-    for y in range(8):
-        row = pixels[y * 9 : (y + 1) * 9]
-        for x in range(8):
-            v = (v << 1) | (1 if row[x + 1] > row[x] else 0)
-    return v - (1 << 64) if v >= (1 << 63) else v  # two's-complement long
-
-
-def _dhash_real(payload: bytes) -> int:
-    import io
-
-    with Image.open(io.BytesIO(payload)) as img:
-        gray = img.convert("L").resize((9, 8))
-        return _dhash_bits(list(gray.getdata()))
-
-
-def _dhash_fake(payload: bytes) -> int:
-    """Deterministic stand-in grid: payload bytes cycled to 72 pseudo-
-    pixels — a pure function of the payload through the SAME bit rule."""
-    if not payload:
-        return 0
-    grid = [payload[i % len(payload)] for i in range(72)]
-    return _dhash_bits(grid)
-
-
-def _payload_to_dhash(payload) -> int | None:
-    if payload is None:
-        return None
-    fn = _dhash_real if HAS_PIL else _dhash_fake
-    try:
-        return fn(bytes(payload))
-    except Exception:
-        return None
-
-
-DHASH_SCHEMA = StructType(
-    [
-        StructField("url", StringType()),
-        StructField("dhash", LongType()),
-    ]
-)
-
-
-def image_dhash(media: DataFrame) -> DataFrame:
-    """(url, dhash) for image rows — one mapInPandas Arrow stage."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "url": pdf["url"],
-                    "dhash": pd.array(
-                        [_payload_to_dhash(p) for p in pdf["payload"]],
-                        dtype="Int64",
-                    ),
-                }
-            )
-
-    return media.filter(F.col("media_type") == "image").mapInPandas(
-        run, schema=DHASH_SCHEMA
-    )
 
 
 def dhash_near_dup_pairs(

@@ -232,70 +232,6 @@ def pq_encode(
     )
 
 
-def pq_reconstruction_report(
-    df: "DataFrame",
-    codebooks: list[list[list[float]]],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> "DataFrame":
-    """Per-vector PQ fidelity: (id, codes, mse_r, cos_r) against the
-    codebook reconstruction (concatenated nearest centroids) — the
-    decision table for choosing m/k, sibling of quantization_report.
-    Codes and reconstruction are computed INLINE in one projection (no
-    self-join): zero shuffle, zero Python."""
-    m = len(codebooks)
-    recon = F.flatten(
-        F.array(
-            *[
-                F.element_at(
-                    F.array(
-                        *[
-                            F.array(*[F.lit(float(x)) for x in c])
-                            for c in codebooks[j]
-                        ]
-                    ),
-                    F.col("codes")[j] + 1,
-                )
-                for j in range(m)
-            ]
-        )
-    )
-    d = df.select(
-        F.col(id_col),
-        _pq_codes_col(vec_col, codebooks).alias("codes"),
-        F.col(vec_col).alias("v"),
-    ).select(F.col(id_col), "codes", "v", recon.alias("vhat"))
-    err2 = F.zip_with(
-        F.col("v"), F.col("vhat"),
-        lambda a, b: (a.cast("double") - b) * (a.cast("double") - b),
-    )
-    dvv = F.aggregate(
-        F.transform(F.col("v"), lambda a: a.cast("double") * a.cast("double")),
-        F.lit(0.0), lambda acc, x: acc + x,
-    )
-    dhh = F.aggregate(
-        F.transform(F.col("vhat"), lambda a: a * a),
-        F.lit(0.0), lambda acc, x: acc + x,
-    )
-    dvh = F.aggregate(
-        F.zip_with(F.col("v"), F.col("vhat"), lambda a, b: a.cast("double") * b),
-        F.lit(0.0), lambda acc, x: acc + x,
-    )
-    cos = F.when((dvv == 0.0) | (dhh == 0.0), F.lit(1.0)).otherwise(
-        dvh / (F.sqrt(dvv) * F.sqrt(dhh))
-    )
-    return d.select(
-        id_col,
-        "codes",
-        F.round(
-            F.aggregate(err2, F.lit(0.0), lambda acc, x: acc + x)
-            / F.size(F.col("v")),
-            9,
-        ).alias("mse_r"),
-        F.round(cos, 6).alias("cos_r"),
-    )
-
-
 def pq_adc_topk(
     queries_df: "DataFrame",
     codes_df: "DataFrame",

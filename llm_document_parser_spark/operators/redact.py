@@ -56,19 +56,3 @@ def redact_pii(text: Column) -> Column:
     for pattern, placeholder in REDACTIONS:
         out = F.regexp_replace(out, pattern, placeholder)
     return out
-
-
-def pii_counts(text: Column) -> Column:
-    """MAP<STRING, BIGINT> of redaction counts per class — the audit
-    signal a scrubbing pass reports (docs with extreme counts are usually
-    scraped directories, a quality-gate input in their own right)."""
-    keys = F.array(*[F.lit(p) for _, p in REDACTIONS])
-    vals = F.array(
-        *[
-            F.size(
-                F.coalesce(F.regexp_extract_all(text, F.lit(rx), 0), F.array())
-            ).cast("long")
-            for rx, _ in REDACTIONS
-        ]
-    )
-    return F.map_from_arrays(keys, vals)

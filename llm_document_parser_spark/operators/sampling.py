@@ -188,45 +188,6 @@ def assign_token_shards(
     )
 
 
-def write_token_shards(
-    docs: DataFrame,
-    path: str,
-    shard_tokens: int,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    tokens_col: Column | None = None,
-    fmt: str = "json",
-) -> None:
-    """Materialize the training export: ``assign_token_shards`` layout
-    written as one directory per shard (``shard_id=K/``), each holding
-    ~``shard_tokens`` tokens, in the deterministic md5(id) order — the
-    layout a trainer streams shard-by-shard. ``fmt``: ``json`` (JSONL,
-    the LM-training convention) or ``parquet``.
-
-    Scale shape: after the two-pass shard assignment (no serial stage —
-    see assign_token_shards), ``repartition(shard_id)`` aligns file
-    boundaries with shard boundaries (one task per shard hash bucket)
-    and ``partitionBy`` writes the directory layout. Byte-stable across
-    reruns on the same corpus: same membership, same per-shard content.
-    """
-    sharded = assign_token_shards(
-        docs, shard_tokens, id_col=id_col, text_col=text_col,
-        tokens_col=tokens_col,
-    ).drop("cum_tokens")
-    writer = (
-        sharded.repartition(F.col("shard_id"))
-        .sortWithinPartitions("shard_id", F.md5(F.col(id_col).cast("string")))
-        .write.mode("overwrite")
-        .partitionBy("shard_id")
-    )
-    if fmt == "json":
-        writer.json(path)
-    elif fmt == "parquet":
-        writer.parquet(path)
-    else:
-        raise ValueError(f"unsupported shard format: {fmt!r}")
-
-
 def domain_temperature_sample(
     docs: DataFrame,
     k: int,

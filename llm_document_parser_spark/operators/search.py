@@ -200,11 +200,6 @@ def search_documents(
     )
 
 
-def search_count(results: DataFrame, **filter_kwargs) -> int:
-    """The reference's separate count pipeline — same predicate, one count."""
-    return results.filter(build_search_filter(**filter_kwargs)).count()
-
-
 def search_facets(results: DataFrame, **filter_kwargs) -> DataFrame:
     """A2 — $facet analog: (facet, key, n) rows for document_type and
     doc_kind plus a __total__ row, from one cube pass."""

@@ -1,5 +1,4 @@
-"""Gap-based sessionization — the batch analog of the streaming
-session-window tier (streaming/stateful.py handles the live path).
+"""Gap-based sessionization over a batch events table.
 
 A session is a maximal run of a user's events with no gap larger than
 ``gap_minutes`` between consecutive events — the standard web-analytics

@@ -207,21 +207,8 @@ def embedding_near_dup_pairs_banded(
 
 
 # ---------------------------------------------------------------------------
-# IVF (inverted-file) ANN — KMeans coarse quantizer + within-cell exact rank
+# IVF (inverted-file) ANN — coarse-quantizer cells + within-cell exact rank
 # ---------------------------------------------------------------------------
-
-
-def ivf_centroids(
-    corpus: DataFrame, n_cells: int = 16, vec_col: str = "embedding", seed: int = 42
-) -> list[list[float]]:
-    """Train the coarse quantizer (Spark ML KMeans) and return centroids as
-    plain lists — small enough to broadcast as literal expressions."""
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    train = corpus.select(array_to_vector(F.col(vec_col)).alias("features"))
-    model = KMeans(k=n_cells, seed=seed).fit(train)
-    return [[float(x) for x in c] for c in model.clusterCenters()]
 
 
 def _nearest_cells(vec: Column, centroids: list[list[float]], n_probe: int) -> Column:

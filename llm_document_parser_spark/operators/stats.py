@@ -134,20 +134,6 @@ def value_histogram(
     )
 
 
-def merge_histograms(*hists: DataFrame) -> DataFrame:
-    """Exact monoid merge of ``value_histogram`` outputs."""
-    if not hists:
-        raise ValueError("no histograms to merge")
-    u = hists[0]
-    for h in hists[1:]:
-        u = u.unionByName(h)
-    return u.groupBy("group", "bin").agg(
-        F.sum("cnt").cast("long").alias("cnt"),
-        F.min("mn").alias("mn"),
-        F.max("mx").alias("mx"),
-    )
-
-
 def histogram_quantiles(
     hist: DataFrame, ps: tuple[float, ...] = (0.5, 0.95, 0.99)
 ) -> DataFrame:

@@ -159,17 +159,6 @@ def mark_blocked_hosts(
     )
 
 
-def filter_blocklisted(
-    df: DataFrame,
-    blocklist: DataFrame,
-    url_col: str = "url",
-    domain_col: str = "domain",
-) -> DataFrame:
-    """Rows whose host matches no blocklist entry (same columns as df)."""
-    marked = mark_blocked_hosts(df, blocklist, url_col, domain_col)
-    return marked.filter(~F.col("blocked")).drop("blocked", "host")
-
-
 # ---------------------------------------------------------------------------
 # registrable domain (public-suffix-list longest-match)
 # ---------------------------------------------------------------------------

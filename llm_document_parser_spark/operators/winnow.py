@@ -25,8 +25,6 @@ explode it, equi-join on the fingerprint value, AQE skew-split handles
 hot fingerprints, and ``max_df`` drops corpus-wide boilerplate
 fingerprints (a distinct-doc count filter, same discipline as
 dedup.strip_frequent_lines) before they can form near-cross-products.
-Persist (fingerprint, id) bucketed by fingerprint and the pair join is
-exchange-free on reuse (storage.write_bucketed).
 
 Reference scope note: the reference engine has no sub-document overlap
 detection at all (its dedup surface is per-field exact values,
@@ -48,32 +46,19 @@ def _clean(text: Column) -> Column:
     return F.trim(F.regexp_replace(F.lower(text), r"\s+", " "))
 
 
-def gram_hashes(text: Column, k: int = 5, hash_fn: str = "md5") -> Column:
-    """Hashes of the character k-grams of the normalized text, in
-    position order; < k chars -> empty array.
-
-    ``hash_fn="md5"`` (default) yields ARRAY<STRING> of hex digests —
-    the oracle-portable mode (DuckDB computes identical values;
-    lexicographic min == hash min). ``"fast"`` yields ARRAY<BIGINT> of
-    ``xxhash64`` values — the production mode: 8-byte longs instead of
-    32-char strings cut the per-document gram array ~8× and make window
-    minima integer compares, the same md5/fast split as
-    dedup.minhash_candidate_pairs.
-
-    IMPORTANT (cost): ``text`` should be an ALREADY-CLEANED materialized
-    column (``_clean`` staged in a prior projection) when called at
-    corpus width — Catalyst does not CSE inside HOF lambdas, so the
-    whitespace-collapse regex in ``_clean`` would otherwise re-run once
-    PER GRAM POSITION (measured ~3× the whole fingerprint stage).
-    ``winnow_fingerprints`` stages it; this convenience wrapper cleans
-    inline for small/test callers."""
-    return _gram_hashes_of_clean(_clean(text), k, hash_fn)
-
-
 def _gram_hashes_of_clean(clean: Column, k: int, hash_fn: str) -> Column:
-    """Gram hashes over text that is ALREADY whitespace-normalized — the
-    lambda body references only cheap per-element expressions (substr +
-    hash) on the input column."""
+    """Hashes of the character k-grams of text that is ALREADY
+    whitespace-normalized (``_clean`` staged in a prior projection), in
+    position order; < k chars -> empty array. The lambda body references
+    only cheap per-element expressions (substr + hash) on the input
+    column: Catalyst does not CSE inside HOF lambdas, so an inline
+    ``_clean`` would re-run once PER GRAM POSITION.
+
+    ``hash_fn="md5"`` yields ARRAY<STRING> of hex digests — the
+    oracle-portable mode (DuckDB computes identical values; lexicographic
+    min == hash min). ``"fast"`` yields ARRAY<BIGINT> of ``xxhash64``
+    values — 8-byte longs instead of 32-char strings, and window minima
+    become integer compares."""
     n = F.length(clean)
     idx = F.when(n >= k, F.sequence(F.lit(1), n - (k - 1))).otherwise(
         F.array().cast("array<int>")
@@ -107,9 +92,9 @@ def winnow_from_grams(hs: Column, w: int = 4) -> Column:
     on the same leg; allocations, not comparisons, are the cost here.
 
     ``hs`` MUST be a real column (a prior projection), not the inline
-    ``gram_hashes`` expression: Catalyst does not common-subexpression-
-    eliminate inside higher-order-function lambdas — an inline gram
-    expression would be RECOMPUTED per window position.
+    ``_gram_hashes_of_clean`` expression: Catalyst does not
+    common-subexpression-eliminate inside higher-order-function lambdas —
+    an inline gram expression would be RECOMPUTED per window position.
     ``winnow_fingerprints`` stages the projections correctly.
 
     ``least`` on md5 hex strings is lexicographic == hash order (the
@@ -148,7 +133,7 @@ def winnow_fingerprints(
     hash_fn: str = "md5",
 ) -> DataFrame:
     """(id, fingerprints) — one row per input document; element type is
-    STRING (md5 hex) or BIGINT (``hash_fn="fast"``), see gram_hashes.
+    STRING (md5 hex) or BIGINT (``hash_fn="fast"``), see _gram_hashes_of_clean.
 
     Two staged projections: grams materialize once per row, then the
     window minima slice the stored array (see ``winnow_from_grams`` for
@@ -201,9 +186,7 @@ def winnow_overlap_pairs(
     # the explode read stored arrays. (2) The exploded table feeds the
     # hot-fingerprint count AND both sides of the pair self-join — the
     # lineage cut keeps the gram+window computation from running three
-    # times (the bpe_train lesson). At corpus scale, persist the exploded
-    # table bucketed by fp instead (storage.write_bucketed) and the pair
-    # join is exchange-free on reuse.
+    # times (the bpe_train lesson).
     ex = checkpoint(fps).select(
         "id", F.explode("fingerprints").alias("fp")
     )

@@ -44,7 +44,7 @@ def start_extract_stream(
     pages_path: str,
     results_path: str,
     checkpoint_path: str,
-    metrics_path: str | None = None,
+    metrics_path: str,
     max_files_per_trigger: int | None = 4,
 ) -> StreamingQuery:
     """readStream → extract_pipeline → parquet sink via foreachBatch, with a
@@ -79,19 +79,18 @@ def start_extract_stream(
             .partitionBy("batch_id")
             .parquet(results_path)
         )
-        if metrics_path is not None:
-            counts = obs.get
-            rollup = batch_df.sparkSession.range(1, numPartitions=1).select(
-                F.lit(batch_id).cast("long").alias("batch_id"),
-                *[F.lit(counts[c]).cast("long").alias(c) for c in ("total", "successful", "failed")],
-                F.current_timestamp().alias("finished_at"),
-            )
-            (
-                rollup.write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("batch_id")
-                .parquet(metrics_path)
-            )
+        counts = obs.get
+        rollup = batch_df.sparkSession.range(1, numPartitions=1).select(
+            F.lit(batch_id).cast("long").alias("batch_id"),
+            *[F.lit(counts[c]).cast("long").alias(c) for c in ("total", "successful", "failed")],
+            F.current_timestamp().alias("finished_at"),
+        )
+        (
+            rollup.write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("batch_id")
+            .parquet(metrics_path)
+        )
 
     stream = stream_pages(spark, pages_path, max_files_per_trigger)
     return (

@@ -1,11 +1,12 @@
-"""WARC (ISO 28500) source — the on-disk format Common Crawl actually ships.
+"""WARC (ISO 28500) record parser — the on-disk format Common Crawl ships.
 
 The reference ingests local files one path at a time (reference:
 src/training_pipeline.py:10-43, src/batch_processor.py:13-69); a crawl-scale
-user starts from ``*.warc.gz`` archives, so this module closes the gap
-between "Iceberg/parquet pages table" (this engine's canonical input,
-schemas.PAGES_SCHEMA) and the raw crawl: parse WARC response records into
-exactly that pages shape, distributed.
+user starts from ``*.warc.gz`` archives. This module parses WARC response
+records into the pages shape (schemas.PAGES_SCHEMA: url, timestamp, payload)
+that the extraction pipeline consumes. ``parse_warc_record_udf`` runs the
+parser Arrow-batched, one record per binary value; the ``warc_roundtrip``
+catalog query and ``bench.py`` drive it.
 
 Format facts the parser relies on (WARC/1.0-1.1):
 
@@ -16,13 +17,6 @@ Format facts the parser relies on (WARC/1.0-1.1):
 - Common Crawl gzips each record as its OWN gzip member, so a ``.warc.gz``
   is a valid multi-member gzip stream; plain ``.warc`` is also accepted.
 
-Scale design: the unit of parallelism is the WARC FILE — Common Crawl cuts
-archives at ~1 GiB (a crawl is ~90k files), so ``binaryFile`` scan
-partitions are already balanced and a 10^12-page corpus is millions of
-independent file-parse tasks; no shuffle is introduced before the pages
-table is written. Each file parses streaming (zlib decompressobj, one
-record's bytes in memory at a time), mapInPandas yields batches of
-``WARC_BATCH_ROWS`` rows so a pathological file cannot OOM an Arrow batch.
 Corrupt/truncated records degrade to skips counted in ``n_skipped`` —
 crawl archives contain garbage; a job that throws on record 10^11 is
 useless.
@@ -38,32 +32,16 @@ import io
 import zlib
 from dataclasses import dataclass, field
 from datetime import datetime, timezone
-from typing import Iterable, Iterator
+from typing import Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     BinaryType,
-    LongType,
     StringType,
     StructField,
     StructType,
     TimestampType,
-)
-
-WARC_BATCH_ROWS = 1024
-
-# pages-shaped parse output + provenance/diagnostics
-WARC_PAGES_SCHEMA = StructType(
-    [
-        StructField("url", StringType()),
-        StructField("warc_ts", TimestampType()),
-        StructField("html", BinaryType()),
-        StructField("content_type", StringType()),
-        StructField("warc_file", StringType()),
-        StructField("record_offset", LongType()),
-    ]
 )
 
 
@@ -246,47 +224,6 @@ def warc_bytes_to_rows(
         }
 
 
-def load_warc_dir(spark: SparkSession, path: str) -> DataFrame:
-    """Distributed WARC → pages-shaped DataFrame (WARC_PAGES_SCHEMA).
-
-    One ``binaryFile`` scan over ``*.warc`` / ``*.warc.gz``, one
-    mapInPandas stage that parses each file and yields bounded Arrow
-    batches. Feed the result to pipeline.extract_pipeline after selecting
-    the PAGES_SCHEMA columns (add text/lang as nulls — extraction fills
-    them)."""
-    files = spark.read.format("binaryFile").option(
-        "pathGlobFilter", "*.warc*"
-    ).load(path)
-
-    def parse_files(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        buf: list[dict] = []
-        for pdf in batches:
-            for name, raw in zip(pdf["path"], pdf["content"]):
-                for row in warc_bytes_to_rows(name, bytes(raw)):
-                    buf.append(row)
-                    if len(buf) >= WARC_BATCH_ROWS:
-                        yield pd.DataFrame(buf)
-                        buf = []
-        if buf:
-            yield pd.DataFrame(buf)
-
-    return files.select("path", "content").mapInPandas(
-        parse_files, schema=WARC_PAGES_SCHEMA
-    )
-
-
-def warc_pages(df: DataFrame) -> DataFrame:
-    """Project a load_warc_dir result onto the canonical PAGES_SCHEMA
-    (text/lang null — extraction computes them)."""
-    return df.select(
-        "url",
-        "warc_ts",
-        "html",
-        F.lit(None).cast("string").alias("text"),
-        F.lit(None).cast("string").alias("lang"),
-    )
-
-
 # explicit StructType: a DDL string would need a live SparkContext at
 # import time (same constraint as extract_udfs._DECODE_SCHEMA)
 _PARSE_ONE_SCHEMA = StructType(
@@ -302,8 +239,7 @@ _PARSE_ONE_SCHEMA = StructType(
 @F.pandas_udf(_PARSE_ONE_SCHEMA)
 def parse_warc_record_udf(raw: pd.Series) -> pd.DataFrame:
     """Parse ONE WARC record per binary value (Arrow-batched) — the seam the
-    `warc_roundtrip` oracle drives; file-granularity ingest uses
-    load_warc_dir's mapInPandas instead. Unparseable input yields nulls."""
+    `warc_roundtrip` oracle drives. Unparseable input yields nulls."""
     out = {"url": [], "warc_ts": [], "html": [], "content_type": []}
     for b in raw:
         row = next(
@@ -314,154 +250,3 @@ def parse_warc_record_udf(raw: pd.Series) -> pd.DataFrame:
         out["html"].append(row["html"] if row else None)
         out["content_type"].append(row["content_type"] if row else None)
     return pd.DataFrame(out)
-
-
-# --------------------------------------------------------------------------
-# Writer — deterministic WARC bytes for tests/datagen (and a valid general
-# writer: correct Content-Length framing and ISO dates).
-# --------------------------------------------------------------------------
-def build_warc_record(
-    url: str,
-    ts: str,
-    body: bytes,
-    content_type: str = "text/html",
-    record_id: str | None = None,
-) -> bytes:
-    http = (
-        b"HTTP/1.1 200 OK\r\nContent-Type: "
-        + content_type.encode("latin-1")
-        + b"\r\nContent-Length: "
-        + str(len(body)).encode()
-        + b"\r\n\r\n"
-        + body
-    )
-    # crc32, not hash(): PYTHONHASHSEED would make the bytes nondeterministic
-    rid = record_id or f"<urn:uuid:{zlib.crc32(url.encode('utf-8'))}>"
-    headers = (
-        b"WARC/1.0\r\n"
-        b"WARC-Type: response\r\n"
-        b"WARC-Target-URI: " + url.encode("latin-1") + b"\r\n"
-        b"WARC-Date: " + ts.encode() + b"\r\n"
-        b"WARC-Record-ID: " + rid.encode() + b"\r\n"
-        b"Content-Type: application/http; msgtype=response\r\n"
-        b"Content-Length: " + str(len(http)).encode() + b"\r\n\r\n"
-    )
-    return headers + http + b"\r\n\r\n"
-
-
-def write_warc_file(
-    path: str,
-    records: list[tuple[str, str, bytes]],
-    gzip_members: bool = False,
-) -> None:
-    """Write (url, iso_ts, body) triples as a .warc / CC-style per-member
-    .warc.gz file."""
-    import gzip as _gzip
-
-    with open(path, "wb") as f:
-        for url, ts, body in records:
-            rec = build_warc_record(url, ts, body)
-            f.write(
-                _gzip.compress(rec, mtime=0) if gzip_members else rec
-            )
-
-
-WARC_MANIFEST_SCHEMA = StructType(
-    [
-        StructField("shard", StringType()),
-        StructField("n_records", LongType()),
-        StructField("n_bytes", LongType()),
-    ]
-)
-
-
-def write_warc_shards(
-    df: DataFrame,
-    out_dir: str,
-    n_shards: int | None = None,
-    gzip_members: bool = True,
-    url_col: str = "url",
-    ts_col: str = "warc_ts",
-    body_col: str = "html",
-    content_type_col: str | None = "content_type",
-) -> DataFrame:
-    """Distributed WARC export — the sink twin of ``load_warc_dir``: each
-    partition streams its rows through ``build_warc_record`` into ONE
-    ``part-NNNNN.warc[.gz]`` file under ``out_dir`` and emits a manifest
-    row ``(shard, n_records, n_bytes)``; empty partitions write nothing.
-    ``gzip_members=True`` writes Common-Crawl-style per-member gzip (the
-    format ``iter_warc_records``/CC tooling expect); records inside a
-    shard are url-ordered, so the same (input, partitioning) reproduces
-    byte-identical shards (record ids are crc32-of-url, not uuids).
-
-    The returned manifest is the ACTION — it is lazy; ``.collect()`` or
-    write it to run the export. Scale shape: no shuffle beyond the
-    optional ``n_shards`` repartition (round-robin for even shard sizes);
-    one Python stage per shard streaming row-by-row — a shard is never
-    materialized in memory. Writes go through ``open()`` — local or any
-    executor-mounted filesystem (NFS/fuse); object stores would route the
-    same bytes through an fsspec filesystem seam.
-    """
-    import os
-
-    from pyspark import TaskContext
-
-    cols = [
-        F.col(url_col).alias("url"),
-        F.date_format(ts_col, "yyyy-MM-dd'T'HH:mm:ss'Z'").alias("ts"),
-        F.col(body_col).cast("binary").alias("body"),
-        (
-            F.coalesce(F.col(content_type_col), F.lit("text/html"))
-            if content_type_col is not None
-            else F.lit("text/html")
-        ).alias("content_type"),
-    ]
-    prepared = df.select(*cols)
-    if n_shards is not None:
-        prepared = prepared.repartition(n_shards)
-    prepared = prepared.sortWithinPartitions("url")
-
-    ext = ".warc.gz" if gzip_members else ".warc"
-
-    def write_partition(
-        batches: Iterable[pd.DataFrame],
-    ) -> Iterator[pd.DataFrame]:
-        import gzip as _gzip
-
-        pid = TaskContext.get().partitionId()
-        path = os.path.join(out_dir, f"part-{pid:05d}{ext}")
-        n_records = 0
-        n_bytes = 0
-        f = None
-        try:
-            for pdf in batches:
-                for url, ts, body, ctype in zip(
-                    pdf["url"], pdf["ts"], pdf["body"], pdf["content_type"]
-                ):
-                    if f is None:  # open lazily: empty partition = no file
-                        os.makedirs(out_dir, exist_ok=True)
-                        f = open(path, "wb")
-                    rec = build_warc_record(
-                        str(url),
-                        str(ts),
-                        bytes(body) if body is not None else b"",
-                        content_type=str(ctype),
-                    )
-                    if gzip_members:
-                        rec = _gzip.compress(rec, mtime=0)
-                    f.write(rec)
-                    n_records += 1
-                    n_bytes += len(rec)
-        finally:
-            if f is not None:
-                f.close()
-        if n_records:
-            yield pd.DataFrame(
-                {
-                    "shard": [path],
-                    "n_records": [n_records],
-                    "n_bytes": [n_bytes],
-                }
-            )
-
-    return prepared.mapInPandas(write_partition, schema=WARC_MANIFEST_SCHEMA)

@@ -1,5 +1,7 @@
-"""Bloom seen-set invariants (operators/bloom.py): no false negatives,
-bounded false positives, superset-of-anti-join, map-side plan."""
+"""Bloom seen-set invariants (operators/bloom.py), through the
+``filter_might_contain`` probe the bloom path of decontamination runs: no
+false negatives, bounded false positives, superset of the exact semi-join,
+map-side plan."""
 
 from __future__ import annotations
 
@@ -7,7 +9,7 @@ from pyspark.sql import functions as F
 
 from llm_document_parser_spark.operators.bloom import (
     build_seen_bloom,
-    filter_unseen,
+    filter_might_contain,
 )
 
 
@@ -21,38 +23,37 @@ def _urls(spark, lo, hi, name="url"):
 def test_no_false_negatives(spark):
     seen = _urls(spark, 0, 5000)
     bf = build_seen_bloom(seen, fpp=0.01)
-    # every seen url must be dropped — zero survivors from the seen set
-    assert filter_unseen(seen, bf).count() == 0
+    # every seen url must probe as a member — all of the seen set is kept
+    assert filter_might_contain(seen, bf).count() == 5000
 
 
 def test_false_positive_rate_within_budget(spark):
     seen = _urls(spark, 0, 5000)
     bf = build_seen_bloom(seen, fpp=0.01)
     fresh = _urls(spark, 10_000, 15_000)  # disjoint ids -> disjoint urls
-    survivors = filter_unseen(fresh, bf).count()
-    wrongly_skipped = 5000 - survivors
-    assert wrongly_skipped / 5000 <= 0.05  # 5x headroom over fpp=1%
+    false_members = filter_might_contain(fresh, bf).count()
+    assert false_members / 5000 <= 0.05  # 5x headroom over fpp=1%
 
 
 def test_prefilter_superset_of_exact_antijoin(spark):
     seen = _urls(spark, 0, 3000)
     candidates = _urls(spark, 2000, 6000)
     bf = build_seen_bloom(seen, fpp=0.01)
-    pre = {r["url"] for r in filter_unseen(candidates, bf).collect()}
+    pre = {r["url"] for r in filter_might_contain(candidates, bf).collect()}
     exact = {
         r["url"]
-        for r in candidates.join(seen, "url", "left_anti").collect()
+        for r in candidates.join(seen, "url", "left_semi").collect()
     }
-    # bloom survivors are a subset of the exact-unseen set (FPs only
-    # remove rows), and every bloom survivor is genuinely unseen
-    assert pre <= exact
+    # the bloom prefilter keeps every genuinely seen url (FPs only add
+    # rows), so its complement is a subset of the exact anti-join
+    assert pre >= exact
 
 
 def test_probe_is_map_side(spark):
     seen = _urls(spark, 0, 1000)
     bf = build_seen_bloom(seen)
     plan = (
-        filter_unseen(_urls(spark, 0, 100), bf)
+        filter_might_contain(_urls(spark, 0, 100), bf)
         ._jdf.queryExecution().executedPlan().toString()
     )
     # zero SHUFFLE on the probe side; the small-bitmap path adds a
@@ -74,8 +75,8 @@ def test_large_bitmap_arrow_path_no_false_negatives(spark):
     )
 
     assert bf.nbytes() > _INLINE_BITMAP_MAX_BYTES
-    survivors = filter_unseen(_urls(spark, 0, 500), bf).count()
-    assert survivors == 0  # every seen url probes true -> none survive
+    kept = filter_might_contain(_urls(spark, 0, 500), bf).count()
+    assert kept == 500  # every seen url probes true -> all kept
 
 
 def test_inline_and_arrow_probes_agree(spark):

@@ -6,10 +6,8 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from llm_document_parser_spark.operators.bpe_train import (
-    encode_tokens,
     learn_bpe,
     merge_pair,
-    segment_words,
     word_counts,
 )
 
@@ -74,17 +72,6 @@ def test_learn_bpe_matches_python_reference(spark):
     assert got == expected
 
 
-def test_segmentation_matches_python_reference(spark):
-    freqs = _freqs()
-    merges, py_vocab = _py_bpe(freqs, 8)
-    wc = word_counts(_docs(spark))
-    got = {
-        r["word"]: r["pieces"]
-        for r in segment_words(wc, merges).collect()
-    }
-    assert got == py_vocab
-
-
 def test_merge_pair_single_pass_no_remerge(spark):
     df = spark.createDataFrame([(["a", "b", "b"],), (["a", "a", "a"],)], "s array<string>")
     out = [r["m"] for r in df.select(merge_pair(F.col("s"), "a", "b").alias("m")).collect()]
@@ -111,27 +98,3 @@ def test_min_pair_count_stops_early(spark):
 def test_single_char_words_learn_nothing(spark):
     docs = spark.createDataFrame([("a b c a b",)], "text string")
     assert learn_bpe(word_counts(docs), 5) == []
-
-
-def test_encode_tokens_roundtrip(spark):
-    merges, _ = _py_bpe(_freqs(), 6)
-    tokens = spark.createDataFrame(
-        [(i, w) for i, w in enumerate("low lower newest unseen".split())],
-        "pos long, word string",
-    )
-    out = encode_tokens(tokens, merges).collect()
-    assert len(out) == 4
-    for r in out:
-        # concatenating pieces always reconstructs the word, even for
-        # words never seen at training time
-        assert "".join(r["pieces"]) == r["word"]
-
-
-def test_encode_plan_is_broadcast(spark):
-    merges = [("l", "o", 1)]
-    tokens = spark.createDataFrame([(1, "low")], "pos long, word string")
-    plan = (
-        encode_tokens(tokens, merges)
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    assert "BroadcastHashJoin" in plan

@@ -17,7 +17,6 @@ from llm_document_parser_spark.html_extract import sniff_doc_kind
 from llm_document_parser_spark.operators.charset import (
     decode_payload,
     declared_charset,
-    detect_charset,
     normalize_label,
 )
 
@@ -63,46 +62,47 @@ def test_declared_charset_meta_and_xml():
 def test_bom_precedence_utf32_before_utf16():
     # UTF-32-LE BOM starts with the UTF-16-LE BOM; longest-match must win
     payload32 = b"\xff\xfe\x00\x00" + "hi".encode("utf-32-le")
-    assert detect_charset(payload32) == "utf-32-le"
+    assert decode_payload(payload32)[1] == "utf-32-le"
     payload16 = b"\xff\xfe" + "hi".encode("utf-16-le")
-    assert detect_charset(payload16) == "utf-16-le"
+    assert decode_payload(payload16)[1] == "utf-16-le"
     payload8 = b"\xef\xbb\xbfhi"
-    assert detect_charset(payload8) == "utf-8"
+    assert decode_payload(payload8)[1] == "utf-8"
 
 
 def test_detect_declaration_beats_probe():
     # body is valid UTF-8 *and* declares 1251 -> declaration wins
     payload = b'<meta charset="windows-1251"><p>\xcf\xf0\xe8</p>'
-    assert detect_charset(payload) == "windows-1251"
+    assert decode_payload(payload)[1] == "windows-1251"
 
 
 def test_detect_agrees_with_decode_on_lying_declaration():
     # declares shift_jis but the body is NOT valid shift_jis; decode_payload
-    # falls through to its UTF-8 probe, so detect_charset must report the
-    # same label (round-4 ADVICE: the pair used to disagree here)
+    # falls through to its UTF-8 probe instead of trusting the declaration
     lying = b'<meta charset="shift_jis"><p>\x81\x39 ok</p>'
     try:
         lying.decode("shift_jis", errors="strict")
         raise AssertionError("fixture must be invalid shift_jis")
     except UnicodeDecodeError:
         pass
-    assert detect_charset(lying) == decode_payload(lying)[1]
-    # and one that lies AND isn't UTF-8 either -> both land on 1252
+    # \x81 alone is not UTF-8 either -> 1252
+    assert decode_payload(lying)[1] == "windows-1252"
+    lying_utf8 = '<meta charset="shift_jis"><p>\x81\x39 café</p>'.encode("utf-8")
+    assert decode_payload(lying_utf8)[1] == "utf-8"
+    # and one that lies AND isn't UTF-8 either -> 1252
     lying2 = b'<meta charset="shift_jis"><p>\x81\x39 caf\xe9</p>'
-    assert detect_charset(lying2) == "windows-1252"
     assert decode_payload(lying2)[1] == "windows-1252"
-    # truthful declaration still wins in both
+    # truthful declaration still wins
     truthful = "<meta charset=\"windows-1251\"><p>При</p>".encode("windows-1251")
-    assert detect_charset(truthful) == decode_payload(truthful)[1] == "windows-1251"
+    assert decode_payload(truthful)[1] == "windows-1251"
 
 
 def test_detect_fallback_1252():
-    assert detect_charset(b"plain ascii") == "utf-8"
-    assert detect_charset("café".encode("utf-8")) == "utf-8"
+    assert decode_payload(b"plain ascii")[1] == "utf-8"
+    assert decode_payload("café".encode("utf-8"))[1] == "utf-8"
     # bare 0xE9 is invalid UTF-8 -> 1252 fallback
-    assert detect_charset(b"caf\xe9") == "windows-1252"
-    assert detect_charset(b"") == "utf-8"
-    assert detect_charset(None) == "utf-8"
+    assert decode_payload(b"caf\xe9")[1] == "windows-1252"
+    assert decode_payload(b"")[1] == "utf-8"
+    assert decode_payload(None)[1] == "utf-8"
 
 
 # ------------------------------------------------------------------ decode

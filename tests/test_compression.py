@@ -9,7 +9,6 @@ from pyspark.sql import functions as F
 
 from llm_document_parser_spark.operators.compression import (
     LEVEL,
-    flag_compressible,
     with_compression_ratio,
 )
 
@@ -43,18 +42,6 @@ def test_repetition_orders_below_prose(spark):
 
 def test_null_and_empty_are_null(spark):
     assert _ratios(spark, [None, ""]) == [None, None]
-
-
-def test_flag_gate(spark):
-    df = spark.createDataFrame(
-        [("p", PROSE), ("s", SPAM), ("e", ""), ("n", None)],
-        "id string, text string",
-    )
-    got = {
-        r["id"]: r["too_compressible"]
-        for r in flag_compressible(df, max_ratio=0.25).collect()
-    }
-    assert got == {"p": False, "s": True, "e": True, "n": True}
 
 
 def test_single_arrow_stage_no_shuffle(spark):

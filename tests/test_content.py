@@ -1,12 +1,11 @@
 """Link-density content extraction: hand-built pages with known block
-structure, keep/drop verdicts, density math, reassembly order, and the
-zero-shuffle scoring plan."""
+structure, keep/drop verdicts, density math, and the zero-shuffle scoring
+plan."""
 
 from __future__ import annotations
 
 from llm_document_parser_spark.operators.content import (
     content_blocks,
-    extract_content,
     score_blocks,
 )
 
@@ -64,14 +63,6 @@ def test_density_math(spark):
     assert r["n_chars"] == 11  # "aaaaa bbbbb"
     assert r["link_chars"] == 5
     assert r["link_density"] == round(5 / 11, 6)
-
-
-def test_extract_content_reassembles_in_order(spark):
-    got = {
-        r["url"]: r["content"] for r in extract_content(_pages(spark)).collect()
-    }
-    assert got["u1"] == f"{_LONG.strip()} {_LONG}see details"
-    assert "u2" not in got  # nothing kept
 
 
 def test_scoring_plan_has_no_exchange(spark):

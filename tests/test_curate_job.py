@@ -179,7 +179,7 @@ def test_curation_exact_tokenizer_budget_via_seam(spark, tmp_path):
     assert sum(kept_tok) - max(kept_tok) < 200 <= sum(kept_tok)
 
 
-def test_curation_resume_after_kill(spark, tmp_path):
+def test_curation_resume_after_kill(spark, tmp_path, monkeypatch):
     """The kept-corpus write survives a mid-job kill: phase-1 verdicts are
     reused (committed _SUCCESS table) and phase 2 resumes from the last
     committed bucket group, byte-equal to a one-shot run."""
@@ -191,16 +191,32 @@ def test_curation_resume_after_kill(spark, tmp_path):
     want = _kept_snapshot(spark, ref_out)
     assert len(want) > 0
 
-    out = str(tmp_path / "curated")
-    with pytest.raises(RuntimeError, match="simulated failure"):
-        run_curation(spark, docs, out, job_id="j1", num_buckets=8,
-                     buckets_per_commit=2, fail_after_groups=1,
-                     min_quality=0.0, threshold=0.9)
-    # the kill left a committed verdict table and a partial kept corpus
+    from llm_document_parser_spark import lineage
     from llm_document_parser_spark.lineage import (
         job_progress,
         success_marker_exists,
     )
+
+    run_with_lineage = lineage.run_with_lineage
+
+    def killed_after_one_group(spark, pages, transform, *args, **kwargs):
+        calls = []
+
+        def dying(df):
+            calls.append(df)
+            if len(calls) == 2:
+                raise RuntimeError("simulated failure")
+            return transform(df)
+
+        return run_with_lineage(spark, pages, dying, *args, **kwargs)
+
+    out = str(tmp_path / "curated")
+    with monkeypatch.context() as m:
+        m.setattr(lineage, "run_with_lineage", killed_after_one_group)
+        with pytest.raises(RuntimeError, match="simulated failure"):
+            run_curation(spark, docs, out, job_id="j1", num_buckets=8,
+                         buckets_per_commit=2, min_quality=0.0, threshold=0.9)
+    # the kill left a committed verdict table and a partial kept corpus
     assert success_marker_exists(spark, out + "_verdicts")
     prog = job_progress(spark, out + "_lineage", "j1", 8)
     assert 0 < prog["completed_buckets"] < 8

@@ -58,13 +58,6 @@ def test_min_hits_threshold(spark):
     assert {r["doc_id"] for r in rep} == {"d2"}
 
 
-def test_decontaminate_keep_side(spark):
-    docs = _docs(spark)
-    kept = dc.decontaminate(docs, _bench(spark), n=8)
-    assert {r["doc_id"] for r in kept.collect()} == {"d3", "d4"}
-    assert kept.columns == docs.columns  # schema preserved
-
-
 def test_benchmark_is_broadcast(spark):
     out = dc.contamination_report(_docs(spark), _bench(spark), n=8)
     plan = out._jdf.queryExecution().executedPlan().toString()
@@ -92,9 +85,6 @@ def test_bloom_prefilter_report_identical(spark):
             )
         )
         assert got == exact, f"join_on_hash={join_on_hash}"
-    # keep-side unchanged too
-    kept = dc.decontaminate(docs, bench, n=8, bloom_fpp=0.001)
-    assert {r["doc_id"] for r in kept.collect()} == {"d3", "d4"}
 
 
 def test_bloom_prefilter_cuts_probe_volume(spark):
@@ -160,5 +150,3 @@ def test_short_docs_and_benchmarks_yield_no_ngrams(spark):
     )
     bench = spark.createDataFrame([("b", "tiny")], "bench_id string, text string")
     assert dc.contamination_report(docs, bench, n=10).count() == 0
-    kept = dc.decontaminate(docs, bench, n=10)
-    assert kept.count() == 2  # nothing flagged → everything kept

@@ -98,52 +98,3 @@ def test_load_pages_iceberg_dispatch(monkeypatch):
     out = ib.load_pages(_FakeSpark(calls), "local.db.pages")
     assert out == "DF"
     assert calls == [("format", "iceberg"), ("load", "local.db.pages")]
-
-
-class _WriteToRecorder:
-    def __init__(self, calls):
-        self.calls = calls
-
-    def partitionedBy(self, expr):
-        self.calls.append(("partitionedBy", str(expr)))
-        return self
-
-    def append(self):
-        self.calls.append(("append", None))
-
-    def createOrReplace(self):
-        self.calls.append(("createOrReplace", None))
-
-
-class _FakeDF:
-    def __init__(self, calls):
-        self._calls = calls
-
-    def writeTo(self, target):
-        self._calls.append(("writeTo", target))
-        return _WriteToRecorder(self._calls)
-
-
-def test_write_pages_table_iceberg_dispatch(spark, monkeypatch):
-    """writeTo(...).partitionedBy(bucket(N, url)) — url-hash bucketing is
-    the identical layout the lineage/resume machinery keys on."""
-    monkeypatch.setattr(ib, "iceberg_available", lambda: True)
-    calls: list[tuple] = []
-    ib.write_pages_table(_FakeDF(calls), "local.db.pages", num_buckets=64)
-    assert calls[0] == ("writeTo", "local.db.pages")
-    assert calls[1][0] == "partitionedBy" and "bucket" in calls[1][1]
-    assert calls[2] == ("append", None)
-
-    calls.clear()
-    ib.write_pages_table(
-        _FakeDF(calls), "local.db.pages", num_buckets=64, mode="replace"
-    )
-    assert calls[2] == ("createOrReplace", None)
-
-
-def test_write_pages_parquet_fallback(spark, tmp_path):
-    from llm_document_parser_spark.datagen import generate_pages
-
-    target = str(tmp_path / "pages_out")
-    ib.write_pages_table(generate_pages(spark, 10, seed=3, partitions=1), target)
-    assert ib.load_pages(spark, target).count() == 10

@@ -1,13 +1,13 @@
-"""IVF ANN: KMeans coarse quantizer + within-cell exact ranking."""
+"""IVF ANN: Lloyd k-means coarse quantizer + within-cell exact ranking."""
 
 from __future__ import annotations
 
 import pytest
 from pyspark.sql import functions as F
 
+from llm_document_parser_spark.ml.kmeans_dataflow import kmeans_lloyd
 from llm_document_parser_spark.operators.similarity import (
     cosine_topk,
-    ivf_centroids,
     ivf_topk,
 )
 
@@ -25,7 +25,7 @@ def test_ivf_finds_planted_duplicates(spark, corpus):
         (F.col("vec_id") + 9000).alias("vec_id"), "embedding", "label"
     )
     full = corpus.unionByName(copies)
-    cents = ivf_centroids(full, n_cells=8)
+    cents = kmeans_lloyd(full, init_ids=list(range(0, 400, 50)))
     assert len(cents) == 8 and len(cents[0]) == 64
     out = ivf_topk(copies, full, cents, k=1, n_probe=1)
     rows = {r["query_id"]: r for r in out.collect()}
@@ -36,7 +36,7 @@ def test_ivf_finds_planted_duplicates(spark, corpus):
 
 def test_ivf_full_probe_degrades_to_exact(spark, corpus):
     small = corpus.filter(F.col("vec_id") < 60)
-    cents = ivf_centroids(small, n_cells=4)
+    cents = kmeans_lloyd(small, init_ids=[0, 15, 30, 45])
     queries = small.filter(F.col("vec_id") < 3)
     ivf = ivf_topk(queries, small, cents, k=3, n_probe=4)  # probe ALL cells
     exact = cosine_topk(queries, small, k=3)

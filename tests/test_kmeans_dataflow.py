@@ -12,7 +12,9 @@ from __future__ import annotations
 import numpy as np
 import pytest
 
-from llm_document_parser_spark.ml.kmeans_dataflow import assign_cells, kmeans_lloyd
+from pyspark.sql import functions as F
+
+from llm_document_parser_spark.ml.kmeans_dataflow import kmeans_lloyd, nearest_cell
 
 
 def np_lloyd(X, init_ids, iters):
@@ -59,7 +61,9 @@ def test_numpy_parity(spark, blobs, iters):
 
 def test_recovers_planted_clusters(spark, blobs):
     cents = kmeans_lloyd(_df(spark, blobs), [0, 20, 40], iterations=3)
-    assigned = assign_cells(_df(spark, blobs), cents)
+    assigned = _df(spark, blobs).select(
+        "vec_id", nearest_cell(F.col("embedding"), cents).alias("cell")
+    )
     got = {r["vec_id"]: r["cell"] for r in assigned.collect()}
     for i in range(60):
         assert got[i] == i // 20

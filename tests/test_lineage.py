@@ -30,6 +30,19 @@ def _snapshot(spark, path):
     return sorted((r["url"], r["extracted_text"], r["document_type"]) for r in rows)
 
 
+def _dies_on_call(n, transform):
+    """``transform`` that raises on its n-th call: a kill mid-job."""
+    calls = []
+
+    def dying(df):
+        calls.append(df)
+        if len(calls) == n:
+            raise RuntimeError("simulated failure")
+        return transform(df)
+
+    return dying
+
+
 def test_resume_after_kill_produces_identical_results(spark, tmp_path):
     pages = generate_pages(spark, 60, seed=3, partitions=4)
 
@@ -42,13 +55,14 @@ def test_resume_after_kill_produces_identical_results(spark, tmp_path):
     want = _snapshot(spark, ref_res)
     assert len(want) == 60
 
-    # killed run: fails after 1 of 2 groups committed
+    # killed run: the transform dies on its second call, after 1 of 2
+    # groups committed
     res = str(tmp_path / "results")
     lin = str(tmp_path / "lineage")
     with pytest.raises(RuntimeError, match="simulated failure"):
         run_with_lineage(
-            spark, pages, _transform, res, lin,
-            job_id="j1", num_buckets=8, fail_after_groups=1,
+            spark, pages, _dies_on_call(2, _transform), res, lin,
+            job_id="j1", num_buckets=8,
         )
     prog = job_progress(spark, lin, "j1", 8)
     assert 0 < prog["completed_buckets"] < 8

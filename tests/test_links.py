@@ -17,7 +17,6 @@ from llm_document_parser_spark.operators.links import (
     host_link_graph,
     outlink_targets,
     pagerank,
-    resolve_link,
 )
 
 
@@ -34,21 +33,14 @@ def test_outlink_resolution(spark):
         ("../up.html", None),  # dot-segments: dropped, not mis-resolved
         ("", None),
     ]
-    df = spark.createDataFrame(
-        [(base, t) for t, _ in cases], "url string, target string"
+    html = "".join(f'<a href="{t}">link</a>' for t, _ in cases)
+    # relative link on an unparseable base -> no outlink
+    pages = spark.createDataFrame(
+        [(base, html), ("not a url", '<a href="x.html">x</a>')],
+        "url string, html_text string",
     )
-    got = [
-        r["resolved"]
-        for r in df.select(
-            resolve_link(F.col("url"), F.col("target")).alias("resolved")
-        ).collect()
-    ]
-    assert got == [want for _, want in cases]
-    # relative link on an unparseable base -> NULL
-    bad = spark.createDataFrame([("not a url", "x.html")], "url string, target string")
-    assert bad.select(
-        resolve_link(F.col("url"), F.col("target")).alias("r")
-    ).collect()[0]["r"] is None
+    got = [(r["url"], r["outlink"]) for r in extract_outlinks(pages).collect()]
+    assert got == [(base, want) for _, want in cases if want is not None]
 
 
 def test_outlink_targets_and_extract(spark):

@@ -1,5 +1,5 @@
-"""Unigram LM scoring: hand-computed values, OOV floor semantics,
-vocab cap determinism, and the broadcast (map-side scoring) plan shape.
+"""Unigram LM scoring: hand-computed values, OOV floor semantics, and the
+broadcast (map-side scoring) plan shape.
 Cross-engine value parity on the corpus lives in the ``doc_unigram_logprob``
 catalog oracle."""
 
@@ -10,7 +10,6 @@ import math
 from pyspark.sql import functions as F
 
 from llm_document_parser_spark.operators.lm import (
-    cap_vocab,
     score_unigram_logprob,
     train_unigram_lm,
 )
@@ -59,16 +58,6 @@ def test_oov_floor(spark):
         for r in score_unigram_logprob(df, lm, "doc_id", "text").collect()
     }
     assert no_floor["d2"]["n_tokens"] == 1
-
-
-def test_cap_vocab_deterministic_topk(spark):
-    df = _corpus(spark)
-    lm = train_unigram_lm(df, "text")
-    top2 = cap_vocab(lm, 2).collect()
-    # a (3/5) first; b and c tie at 1/5 → 'b' wins lexicographically
-    assert sorted(r["token"] for r in top2) == ["a", "b"]
-    plan = cap_vocab(lm, 2)._jdf.queryExecution().executedPlan().toString()
-    assert "TakeOrderedAndProject" in plan
 
 
 def test_scoring_is_broadcast(spark):

@@ -1,414 +1,9 @@
-"""Multimodal plumbing: schema, Arrow batch shape, deterministic features,
-and the Pillow dispatch seam (driven with a fake — Pillow isn't installable
-here; same pattern as tests/test_real_library_gates.py)."""
+"""Perceptual-hash near-duplicate matching (operators/multimodal.py): the
+4x16-bit band equi-join finds every pair within Hamming distance 3."""
 
 from __future__ import annotations
 
 from llm_document_parser_spark.operators import multimodal as mm
-from llm_document_parser_spark.operators.multimodal import (
-    FEATURE_DIM,
-    MEDIA_SCHEMA,
-    extract_media_features,
-    frame_sample_plan,
-)
-from llm_document_parser_spark.operators.similarity import cosine_topk
-
-
-def _media_rows():
-    return [
-        ("m://img1", "image", b"\x89PNG fake bytes " * 40, 64, 64, None),
-        ("m://img2", "image", b"\x89PNG fake bytes " * 40, 64, 64, None),
-        ("m://img3", "image", b"completely different payload" * 30, 32, 32, None),
-        ("m://vid1", "video", b"\x00\x00ftyp fake", None, None, 3500),
-        ("m://empty", "image", None, None, None, None),
-    ]
-
-
-def test_feature_extraction_deterministic(spark):
-    media = spark.createDataFrame(_media_rows(), MEDIA_SCHEMA)
-    feats = extract_media_features(media)
-    rows = {r["url"]: r for r in feats.collect()}
-    assert len(rows) == 5
-    f1, f2 = rows["m://img1"]["feature"], rows["m://img2"]["feature"]
-    assert f1 == f2  # identical payloads → identical features
-    assert len(f1) == FEATURE_DIM
-    assert abs(sum(f1) - 1.0) < 1e-6  # L1-normalized
-    assert rows["m://img3"]["feature"] != f1
-    assert rows["m://empty"]["feature"] is None
-    assert rows["m://img1"]["n_bytes"] == len(b"\x89PNG fake bytes " * 40)
-
-
-def test_features_compose_with_similarity(spark):
-    media = spark.createDataFrame(_media_rows()[:3], MEDIA_SCHEMA)
-    feats = extract_media_features(media).withColumnRenamed("url", "vec_id")
-    topk = cosine_topk(
-        feats.filter("vec_id = 'm://img1'"), feats, k=2, id_col="vec_id", vec_col="feature"
-    )
-    rows = topk.orderBy("rank").collect()
-    assert rows[0]["neighbor_id"] == "m://img2"  # identical payload ranks first
-    assert rows[0]["score"] == 1.0
-
-
-# ------------------------------------------------------- Pillow seam (fake)
-
-
-class _FakeGray:
-    """Stands in for a PIL grayscale image: resize((32,32)) → getdata()."""
-
-    def __init__(self, pixels):
-        self._pixels = pixels
-        self.resized_to = None
-
-    def resize(self, size):
-        self.resized_to = size
-        return self
-
-    def getdata(self):
-        return list(self._pixels)
-
-
-class _FakePilImage:
-    def __init__(self, pixels):
-        self._gray = _FakeGray(pixels)
-        self.converted_to = None
-
-    def convert(self, mode):
-        self.converted_to = mode
-        return self._gray
-
-    def __enter__(self):
-        return self
-
-    def __exit__(self, *exc):
-        return False
-
-
-class _FakePilImageMod:
-    """Stands in for PIL.Image: open(fileobj) → context-managed image."""
-
-    def __init__(self, pixels=None, raise_on_open=False):
-        self._pixels = pixels or []
-        self._raise = raise_on_open
-        self.opened_with = None
-        self.last_image = None
-
-    def open(self, fileobj):
-        if self._raise:
-            raise OSError("cannot identify image file")
-        self.opened_with = fileobj.read()
-        self.last_image = _FakePilImage(self._pixels)
-        return self.last_image
-
-
-def test_environment_has_no_pil():
-    assert not mm.HAS_PIL  # precondition: fake path is the default here
-
-
-def test_pil_decode_dispatch_when_installed(monkeypatch):
-    # 512 black + 512 white pixels → mass split between first and last bin
-    fake = _FakePilImageMod(pixels=[0] * 512 + [255] * 512)
-    monkeypatch.setattr(mm, "Image", fake, raising=False)
-    monkeypatch.setattr(mm, "HAS_PIL", True)
-    payload = b"\x89PNG real-looking bytes"
-    feat = mm._payload_to_feature(payload)
-    assert fake.opened_with == payload
-    assert fake.last_image.converted_to == "L"
-    assert fake.last_image._gray.resized_to == (32, 32)
-    assert len(feat) == FEATURE_DIM
-    assert feat[0] == 0.5 and feat[FEATURE_DIM - 1] == 0.5
-    assert all(v == 0.0 for v in feat[1 : FEATURE_DIM - 1])
-
-
-def test_pil_decode_error_degrades_to_none(monkeypatch):
-    monkeypatch.setattr(mm, "Image", _FakePilImageMod(raise_on_open=True), raising=False)
-    monkeypatch.setattr(mm, "HAS_PIL", True)
-    assert mm._payload_to_feature(b"not an image") is None
-
-
-def test_fake_decoder_not_called_when_pil_present(monkeypatch):
-    fake = _FakePilImageMod(pixels=[128] * 1024)
-    monkeypatch.setattr(mm, "Image", fake, raising=False)
-    monkeypatch.setattr(mm, "HAS_PIL", True)
-
-    def boom(payload):
-        raise AssertionError("fake decoder must not run when Pillow is installed")
-
-    monkeypatch.setattr(mm, "_feature_fake", boom)
-    feat = mm._payload_to_feature(b"payload")
-    assert fake.opened_with == b"payload"
-    # 128 // (256//16) = bin 8 gets all the mass
-    assert feat[8] == 1.0 and sum(feat) == 1.0
-
-
-def test_no_pil_uses_fake_and_never_dispatches(monkeypatch):
-    called = {}
-
-    def fake_real(payload):
-        called["real"] = True
-        return [0.0] * FEATURE_DIM
-
-    monkeypatch.setattr(mm, "_decode_image_real", fake_real)
-    assert mm._payload_to_feature(b"abc") == mm._feature_fake(b"abc")
-    assert "real" not in called
-    assert mm._payload_to_feature(None) is None
-
-
-def test_frame_sample_plan(spark):
-    media = spark.createDataFrame(_media_rows(), MEDIA_SCHEMA)
-    frames = frame_sample_plan(media, every_ms=1000).collect()
-    assert len(frames) == 3  # 3500ms at 1/s → frames 0,1,2
-    assert {f["frame_ts_ms"] for f in frames} == {0, 1000, 2000}
-
-
-# ------------------------------------------------------------- video stage
-
-
-def test_environment_has_no_video_codec():
-    assert not mm.HAS_AV and not mm.HAS_IMAGEIO  # stand-in path is default
-
-
-def test_video_frames_end_to_end_matches_native_plan(spark):
-    # decode output (url, frame_idx) must be EXACTLY the native plan's set,
-    # and features must be deterministic, L1-normalized, FEATURE_DIM-wide
-    media = spark.createDataFrame(_media_rows(), MEDIA_SCHEMA)
-    frames = mm.extract_video_frames(media, every_ms=1000)
-    got = {(r["url"], r["frame_idx"], r["frame_ts_ms"]) for r in frames.collect()}
-    planned = {
-        (r["url"], r["frame_idx"], r["frame_ts_ms"])
-        for r in frame_sample_plan(media, every_ms=1000).collect()
-    }
-    assert got == planned and len(got) == 3
-    rows = {r["frame_idx"]: r for r in frames.collect()}
-    for r in rows.values():
-        assert len(r["feature"]) == FEATURE_DIM
-        assert abs(sum(r["feature"]) - 1.0) < 1e-6
-    # timestamp-seeded: different frames of the same payload differ
-    # (unless the payload is shorter than the window — this one is tiny,
-    # so just re-run and check determinism instead)
-    again = {r["frame_idx"]: r for r in mm.extract_video_frames(media).collect()}
-    for i in rows:
-        assert rows[i]["feature"] == again[i]["feature"]
-
-
-def test_video_fake_deterministic_and_ts_sensitive():
-    payload = bytes(range(256)) * 64  # long enough that windows differ
-    a = mm._video_frames_fake(payload, [0, 1000, 2000])
-    b = mm._video_frames_fake(payload, [0, 1000, 2000])
-    assert a == b
-    assert a[0] != a[1]  # timestamp-seeded windows differ
-
-
-class _FakeAvFrame:
-    def __init__(self, pixels):
-        self._pixels = pixels
-
-    def to_image(self):
-        frame = self
-
-        class _Img:
-            def convert(self, mode):
-                assert mode == "L"
-                return self
-
-            def resize(self, wh):
-                assert wh == (32, 32)
-                return self
-
-            def getdata(self):
-                return frame._pixels
-
-        return _Img()
-
-
-class _FakeAvMod:
-    """Mimics the av API surface _decode_video_frames_av touches."""
-
-    def __init__(self, pixels_per_seek):
-        self.pixels_per_seek = pixels_per_seek
-        self.seeks = []
-
-    def open(self, fobj):
-        outer = self
-
-        class _Container:
-            def __enter__(self):
-                return self
-
-            def __exit__(self, *a):
-                return False
-
-            class streams:
-                video = [object()]
-
-            def seek(self, ts_us, backward=True):
-                outer.seeks.append(ts_us)
-
-            def decode(self, stream):
-                yield _FakeAvFrame(outer.pixels_per_seek[len(outer.seeks) - 1])
-
-        return _Container()
-
-
-def test_av_dispatch_when_installed(monkeypatch):
-    # frame 0 all-black, frame 1 all-white → distinguishable histograms
-    fake = _FakeAvMod([[0] * 1024, [255] * 1024])
-    monkeypatch.setattr(mm, "av", fake, raising=False)
-    monkeypatch.setattr(mm, "HAS_AV", True)
-
-    def boom(payload, ts):
-        raise AssertionError("stand-in must not run when PyAV is installed")
-
-    monkeypatch.setattr(mm, "_video_frames_fake", boom)
-    out = mm._payload_to_video_frames(b"vidbytes", 2000, 1000)
-    assert fake.seeks == [0, 1_000_000]  # planned timestamps in microseconds
-    assert [(i, ts) for i, ts, _ in out] == [(0, 0), (1, 1000)]
-    assert out[0][2][0] == 1.0  # black → all mass in bin 0
-    assert out[1][2][FEATURE_DIM - 1] == 1.0  # white → all mass in last bin
-
-
-def test_av_decode_error_degrades_to_none(monkeypatch):
-    class _Boom:
-        def open(self, fobj):
-            raise ValueError("corrupt container")
-
-    monkeypatch.setattr(mm, "av", _Boom(), raising=False)
-    monkeypatch.setattr(mm, "HAS_AV", True)
-    out = mm._payload_to_video_frames(b"junk", 3000, 1000)
-    assert [(i, ts) for i, ts, _ in out] == [(0, 0), (1, 1000), (2, 2000)]
-    assert all(f is None for _, _, f in out)
-
-
-# ------------------------------------------------------------- audio stage
-
-
-def _wav_bytes(samples, sr=8000, channels=1):
-    """Real 16-bit PCM WAV payload via stdlib wave — deterministic."""
-    import io
-    import struct
-    import wave
-
-    buf = io.BytesIO()
-    with wave.open(buf, "wb") as w:
-        w.setnchannels(channels)
-        w.setsampwidth(2)
-        w.setframerate(sr)
-        w.writeframes(struct.pack(f"<{len(samples)}h", *samples))
-    return buf.getvalue()
-
-
-def _audio_rows():
-    quiet_then_loud = [100] * 800 + [20000] * 800
-    return [
-        ("m://wav1", "audio", _wav_bytes(quiet_then_loud), None, None, 200),
-        ("m://wav2", "audio", _wav_bytes(quiet_then_loud), None, None, 200),
-        ("m://wav3", "audio", _wav_bytes([5000] * 1600), None, None, 200),
-        ("m://mp3", "audio", b"ID3\x04fake mpeg frames" * 20, None, None, 900),
-        ("m://bad", "audio", b"RIFF\x00\x00\x00\x00WAVEgarbage", None, None, None),
-        ("m://null", "audio", None, None, None, None),
-        ("m://img", "image", b"\x89PNG not audio", 8, 8, None),
-    ]
-
-
-def test_audio_features_end_to_end(spark):
-    """Real stdlib-WAV decode through the full mapInPandas stage: energy
-    envelope reflects the signal (quiet first half, loud second half),
-    non-WAV codecs take the deterministic fake, truncated WAV degrades to
-    None, image rows are excluded."""
-    media = spark.createDataFrame(_audio_rows(), MEDIA_SCHEMA)
-    rows = {r["url"]: r for r in mm.extract_audio_features(media).collect()}
-    assert set(rows) == {"m://wav1", "m://wav2", "m://wav3", "m://mp3", "m://bad", "m://null"}
-
-    w1 = rows["m://wav1"]
-    assert w1["sample_rate"] == 8000 and w1["n_samples"] == 1600
-    assert len(w1["feature"]) == FEATURE_DIM
-    assert abs(sum(w1["feature"]) - 1.0) < 1e-6
-    # first half quiet, second half loud → envelope mass in the back half
-    assert sum(w1["feature"][FEATURE_DIM // 2 :]) > 0.98
-    assert w1["feature"] == rows["m://wav2"]["feature"]  # deterministic
-    # constant amplitude → flat envelope
-    flat = rows["m://wav3"]["feature"]
-    assert max(flat) - min(flat) < 1e-6
-
-    # non-WAV codec without soundfile → byte-histogram fake, metadata zeroed
-    mp3 = rows["m://mp3"]
-    assert mp3["sample_rate"] == 0 and mp3["n_samples"] == 0
-    want = mm._feature_fake(b"ID3\x04fake mpeg frames" * 20)
-    # float32 round-trip through Arrow — compare at float32 precision
-    assert all(abs(a - b) < 1e-6 for a, b in zip(mp3["feature"], want))
-
-    assert rows["m://bad"]["feature"] is None  # decode error degrades
-    assert rows["m://null"]["feature"] is None
-    assert rows["m://null"]["n_bytes"] == 0
-
-
-def test_audio_stereo_mixdown():
-    """Stereo WAV decodes via mono mixdown — same envelope shape."""
-    stereo = [v for s in ([100] * 400 + [20000] * 400) for v in (s, s)]
-    sr, n, feat = mm._decode_audio_wav(_wav_bytes(stereo, channels=2))
-    assert sr == 8000 and n == 800
-    assert sum(feat[FEATURE_DIM // 2 :]) > 0.98
-
-
-def test_soundfile_dispatch_when_installed(monkeypatch):
-    """With soundfile present, non-WAV payloads route to the real decoder
-    (seam driven with a fake module — soundfile isn't installable here)."""
-    import sys
-    import types
-
-    assert not mm.HAS_SOUNDFILE  # precondition: sandbox has no soundfile
-
-    seen = {}
-    fake_sf = types.ModuleType("soundfile")
-
-    def fake_read(fileobj, always_2d=False):
-        import numpy as np
-
-        seen["payload"] = fileobj.read()
-        return np.array([[0.1], [0.9], [0.9], [0.1]]), 44100
-
-    fake_sf.read = fake_read
-    monkeypatch.setitem(sys.modules, "soundfile", fake_sf)
-    monkeypatch.setattr(mm, "HAS_SOUNDFILE", True)
-
-    sr, n, feat = mm._payload_to_audio_feature(b"OggS fake vorbis")
-    assert seen["payload"] == b"OggS fake vorbis"
-    assert sr == 44100 and n == 4
-    assert len(feat) == FEATURE_DIM and abs(sum(feat) - 1.0) < 1e-6
-
-
-def test_audio_features_compose_with_similarity(spark):
-    media = spark.createDataFrame(_audio_rows()[:3], MEDIA_SCHEMA)
-    feats = mm.extract_audio_features(media).withColumnRenamed("url", "vec_id")
-    topk = cosine_topk(
-        feats.filter("vec_id = 'm://wav1'"), feats, k=2,
-        id_col="vec_id", vec_col="feature",
-    )
-    rows = topk.orderBy("rank").collect()
-    assert rows[0]["neighbor_id"] == "m://wav2"
-    assert rows[0]["score"] == 1.0
-
-
-# ------------------------------------------------------- perceptual dHash
-
-
-def test_dhash_bit_rule():
-    # 9x8 grid where every row ascends -> all 64 gradient bits set -> -1
-    asc = [x for _ in range(8) for x in range(9)]
-    assert mm._dhash_bits(asc) == -1
-    # every row descends -> no bits set
-    desc = [8 - x for _ in range(8) for x in range(9)]
-    assert mm._dhash_bits(desc) == 0
-    # flipping ONE comparison flips exactly one bit
-    one = list(desc)
-    one[1] = 9  # row 0: pixel[1] > pixel[0] -> the MSB of the hash
-    assert mm._dhash_bits(one) == -(1 << 63)
-
-
-def test_dhash_fake_deterministic_and_payload_sensitive():
-    a = mm._dhash_fake(b"\x89PNG fake bytes " * 40)
-    assert a == mm._dhash_fake(b"\x89PNG fake bytes " * 40)
-    assert a != mm._dhash_fake(b"completely different payload bytes")
-    assert mm._payload_to_dhash(None) is None
 
 
 def test_dhash_near_dup_pairs_banded(spark):
@@ -461,11 +56,3 @@ def test_dhash_pigeonhole_completeness(spark):
     }
     assert got == {name for name, _ in perturbed}
 
-
-def test_image_dhash_stage(spark):
-    media = spark.createDataFrame(_media_rows(), MEDIA_SCHEMA)
-    out = {r["url"]: r["dhash"] for r in mm.image_dhash(media).collect()}
-    assert out["m://img1"] == out["m://img2"]  # identical payloads
-    assert out["m://img1"] != out["m://img3"]
-    assert out["m://empty"] is None  # null payload degrades, not throws
-    assert set(out) == {"m://img1", "m://img2", "m://img3", "m://empty"}

@@ -168,27 +168,6 @@ def test_token_shards_partitioning_invariant(spark):
     assert rows1 == rows7
 
 
-def test_write_token_shards_layout(spark, tmp_path):
-    from llm_document_parser_spark.operators.sampling import write_token_shards
-
-    out = str(tmp_path / "shards")
-    write_token_shards(_docs(spark, 80), out, shard_tokens=40, fmt="json")
-    back = spark.read.json(out)
-    assert back.count() == 80
-    # directory layout is one partition dir per shard
-    import os
-
-    dirs = sorted(d for d in os.listdir(out) if d.startswith("shard_id="))
-    assert len(dirs) >= 2
-    # membership identical to the assignment operator
-    ref = {
-        r["doc_id"]: r["shard_id"]
-        for r in assign_token_shards(_docs(spark, 80), shard_tokens=40).collect()
-    }
-    got = {r["doc_id"]: r["shard_id"] for r in back.collect()}
-    assert got == ref
-
-
 # ---------------------------------------------------------------------------
 # temperature-scaled domain mixing (round 5)
 # ---------------------------------------------------------------------------

@@ -14,8 +14,8 @@ from llm_document_parser_spark.operators.export import (
     select_for_export,
 )
 from llm_document_parser_spark.operators.search import (
+    build_search_filter,
     date_range,
-    search_count,
     search_documents,
     search_facets,
 )
@@ -29,7 +29,7 @@ def results(spark):
 
 
 def test_search_filter_and_pagination(results):
-    total = search_count(results, document_types=["invoice"])
+    total = results.filter(build_search_filter(document_types=["invoice"])).count()
     assert 0 < total < 100
     p1 = search_documents(results, page=1, per_page=5, document_types=["invoice"])
     rows1 = p1.collect()
@@ -40,7 +40,7 @@ def test_search_filter_and_pagination(results):
 
 
 def test_search_text_query(results):
-    n = search_count(results, text_query="invoice")
+    n = results.filter(build_search_filter(text_query="invoice")).count()
     assert n > 0
     rows = search_documents(results, per_page=100, text_query="invoice").collect()
     assert len(rows) == min(n, 100)

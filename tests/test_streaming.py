@@ -55,6 +55,7 @@ def test_stream_restart_is_exactly_once(spark, tmp_path):
         pages_path=pages_path,
         results_path=str(tmp_path / "results"),
         checkpoint_path=str(tmp_path / "ckpt"),
+        metrics_path=str(tmp_path / "metrics"),
         max_files_per_trigger=1,
     )
     q = start_extract_stream(spark, **kwargs)

@@ -80,7 +80,6 @@ def test_same_page_same_bucket(spark):
 # ---------------------------------------------------------------------------
 
 from llm_document_parser_spark.operators.urls import (  # noqa: E402
-    filter_blocklisted,
     host_suffixes,
     mark_blocked_hosts,
 )
@@ -115,16 +114,6 @@ def test_mark_blocked_subdomain_semantics(spark):
         for r in mark_blocked_hosts(pages, _bl(spark, ["tracker.example"])).collect()
     }
     assert got == {1: True, 2: True, 3: False, 4: False, 5: False}
-
-
-def test_filter_blocklisted_preserves_columns(spark):
-    pages = spark.createDataFrame(
-        [("https://bad.com/a", "t1"), ("https://ok.com/b", "t2")],
-        "url string, text string",
-    )
-    out = filter_blocklisted(pages, _bl(spark, ["bad.com"]))
-    assert out.columns == ["url", "text"]
-    assert [r["url"] for r in out.collect()] == ["https://ok.com/b"]
 
 
 def test_blocklist_join_is_broadcast(spark):

@@ -1,21 +1,15 @@
-"""WARC source tests (warc.py): framing roundtrip, CC-style per-record gzip
-members, HTTP body decoding (chunked/gzip), corrupt-record degradation, and
-the distributed load_warc_dir path feeding extract_pipeline end-to-end."""
+"""WARC parser tests (warc.py): framing roundtrip, CC-style per-record gzip
+members, HTTP body decoding (chunked/gzip) and corrupt-record degradation."""
 
 from __future__ import annotations
 
 import gzip
-import os
 
 from llm_document_parser_spark.warc import (
     WarcParseStats,
-    build_warc_record,
     iter_warc_records,
-    load_warc_dir,
     split_http_response,
     warc_bytes_to_rows,
-    warc_pages,
-    write_warc_file,
 )
 
 RECORDS = [
@@ -29,8 +23,24 @@ RECORDS = [
 ]
 
 
+def _warc_record(url: str, ts: str, body: bytes) -> bytes:
+    """One framed WARC/1.0 response record around an HTTP 200 envelope."""
+    http = (
+        b"HTTP/1.1 200 OK\r\nContent-Type: text/html\r\n"
+        b"Content-Length: %d\r\n\r\n" % len(body) + body
+    )
+    return (
+        b"WARC/1.0\r\nWARC-Type: response\r\n"
+        b"WARC-Target-URI: %s\r\nWARC-Date: %s\r\n"
+        b"Content-Type: application/http; msgtype=response\r\n"
+        b"Content-Length: %d\r\n\r\n" % (url.encode(), ts.encode(), len(http))
+        + http
+        + b"\r\n\r\n"
+    )
+
+
 def test_record_roundtrip_plain():
-    raw = b"".join(build_warc_record(u, t, b) for u, t, b in RECORDS)
+    raw = b"".join(_warc_record(u, t, b) for u, t, b in RECORDS)
     stats = WarcParseStats()
     rows = list(warc_bytes_to_rows("f.warc", raw, stats))
     assert stats.n_records == 3 and stats.n_responses == 3
@@ -42,11 +52,8 @@ def test_record_roundtrip_plain():
     assert rows[1]["record_offset"] > 0
 
 
-def test_gzip_members_roundtrip(tmp_path):
-    path = os.path.join(tmp_path, "f.warc.gz")
-    write_warc_file(path, RECORDS, gzip_members=True)
-    with open(path, "rb") as f:
-        raw = f.read()
+def test_gzip_members_roundtrip():
+    raw = b"".join(gzip.compress(_warc_record(*r), mtime=0) for r in RECORDS)
     # it must be a REAL multi-member gzip stream (CC convention)
     assert raw[:2] == b"\x1f\x8b" and raw.count(b"\x1f\x8b\x08") >= 3
     rows = list(warc_bytes_to_rows("f.warc.gz", raw))
@@ -79,9 +86,9 @@ def test_http_body_decodings():
 
 
 def test_corrupt_records_degrade_not_throw():
-    good = build_warc_record(*RECORDS[0])
+    good = _warc_record(*RECORDS[0])
     garbage = b"NOT A WARC RECORD AT ALL\r\n"
-    truncated = build_warc_record(*RECORDS[1])[:40]
+    truncated = _warc_record(*RECORDS[1])[:40]
     stats = WarcParseStats()
     rows = list(
         warc_bytes_to_rows("f.warc", garbage + good + truncated, stats)
@@ -102,32 +109,10 @@ def test_corrupt_records_degrade_not_throw():
 
 
 def test_non_response_records_skipped():
-    req = build_warc_record(*RECORDS[0]).replace(
+    req = _warc_record(*RECORDS[0]).replace(
         b"WARC-Type: response", b"WARC-Type: request", 1
     )
-    resp = build_warc_record(*RECORDS[1])
+    resp = _warc_record(*RECORDS[1])
     rows = list(warc_bytes_to_rows("f", req + resp))
     assert [r["url"] for r in rows] == [RECORDS[1][0]]
 
-
-def test_load_warc_dir_end_to_end(spark, tmp_path):
-    """Two files (one plain, one gzip-membered) -> pages -> extraction."""
-    from llm_document_parser_spark.pipeline import extract_pipeline
-
-    d = str(tmp_path)
-    write_warc_file(os.path.join(d, "a.warc"), RECORDS[:2])
-    write_warc_file(os.path.join(d, "b.warc.gz"), RECORDS[2:], gzip_members=True)
-    pages = load_warc_dir(spark, d)
-    got = {r["url"]: r for r in pages.collect()}
-    assert set(got) == {u for u, _, _ in RECORDS}
-    assert bytes(got["https://a.example/one"]["html"]) == RECORDS[0][2]
-    assert got["https://b.example/two"]["warc_file"].endswith("a.warc")
-    # through the full extraction pipeline: html/text/pdf kinds all flow
-    res = extract_pipeline(warc_pages(pages)).collect()
-    by_url = {r["url"]: r for r in res}
-    assert by_url["https://a.example/one"]["doc_kind"] == "html"
-    assert "first page body text" in by_url["https://a.example/one"][
-        "extracted_text"
-    ]
-    assert by_url["https://b.example/two"]["doc_kind"] == "text"
-    assert by_url["https://c.example/three"]["doc_kind"] == "pdf"
