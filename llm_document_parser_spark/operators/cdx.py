@@ -43,13 +43,6 @@ from pyspark.sql.window import Window
 
 from .urls import _path_and_query, host_of
 
-#: CC index JSON stores every field as a string; numbers are cast after
-#: parsing so a malformed record yields NULLs instead of a parse error.
-CDX_JSON_SCHEMA = (
-    "url string, mime string, status string, digest string, "
-    "length string, offset string, filename string"
-)
-
 
 def parse_cdxj(df: DataFrame, line_col: str = "line") -> DataFrame:
     """Parse CDXJ index lines into typed columns.

@@ -42,13 +42,6 @@ REDACTIONS: list[tuple[str, str]] = [
     ),
 ]
 
-# the RE2-safe unguarded equivalents (oracle + documentation of intent)
-REDACTIONS_PORTABLE: list[tuple[str, str]] = [
-    (r"\d{3}-\d{2}-\d{4}", "[SSN]"),
-    (r"[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}", "[EMAIL]"),
-    (r"(?:\+\d{1,3}[-.\s])?\(?\d{3}\)?[-.\s]\d{3}[-.\s]\d{4}", "[PHONE]"),
-]
-
 
 def redact_pii(text: Column) -> Column:
     """Text with SSNs, then emails, then phones replaced by placeholders."""

@@ -41,23 +41,9 @@ from .operators import ner
 from .operators.ner import entities_map, spacy_entities_stage
 from .operators.patterns import patterns_map
 from .operators.textclean import clean_text_col
+from .schemas import RESULTS_SCHEMA
 
-RESULT_COLUMNS = [
-    "url",
-    "warc_ts",
-    "doc_kind",
-    "document_type",
-    "extracted_text",
-    "text_spans",
-    "patterns",
-    "contacts",
-    "names",
-    "entities",
-    "features",
-    "success",
-    "error",
-    "processing_time",
-]
+RESULT_COLUMNS = RESULTS_SCHEMA.names
 
 
 def text_spans_col(text: Column, patterns: Column) -> Column:

@@ -2638,10 +2638,10 @@ def ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # deterministic IVF coarse quantizer: 8 centroids from the same LCG stream
 # as the hyperplanes (rows 8-15, fresh values). In production these are the
-# PERSISTED output of similarity.ivf_centroids (KMeans) pasted as literals —
-# the catalog row proves the cell-assign/probe/rank plan cross-engine; the
-# KMeans training + recall sweep stay in tests/test_ivf_ann.py (not
-# SQL-portable).
+# PERSISTED output of kmeans_dataflow.kmeans_lloyd, the remaining centroid
+# source, pasted as literals — the catalog row proves the cell-assign/probe/
+# rank plan cross-engine; the k-means training + recall sweep stay in
+# tests/test_ivf_ann.py (not SQL-portable).
 _IVF_CENTROIDS = _lcg_planes(16, 64)[8:]
 
 

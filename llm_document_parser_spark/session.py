@@ -63,25 +63,6 @@ def get_spark(
         "spark.local.dir": os.environ.get(
             "SPARK_GRAFT_LOCAL_DIR", "/root/repo/.data/spark-local"
         ),
-        # Spark sets only -Xmx from spark.driver.memory; the heap then grows
-        # lazily and page-faults in DURING jobs (measured round 4: 80-90%
-        # kernel time at 32 threads). SPARK_GRAFT_PRETOUCH=1 commits the
-        # whole heap at JVM start instead — but USE WITH CARE: this host's
-        # first-touch page supply is hypervisor-throttled and TIME-VARYING
-        # (measured round 5: ~40-70 MB/s, THP no help), so pre-touching a
-        # 64 GB heap can cost 15-25 MINUTES before main() runs. Benchmark
-        # harnesses now prefer lazy heap + an untimed warm-up run, which
-        # commits exactly the pages the timed run touches.
-        **(
-            {
-                "spark.driver.extraJavaOptions": (
-                    f"-Xms{os.environ.get('SPARK_GRAFT_DRIVER_MEM', '16g')}"
-                    " -XX:+AlwaysPreTouch"
-                )
-            }
-            if os.environ.get("SPARK_GRAFT_PRETOUCH") == "1"
-            else {}
-        ),
         # --- adaptive execution: runtime partition coalescing + skew split ---
         "spark.sql.adaptive.enabled": "true",
         "spark.sql.adaptive.coalescePartitions.enabled": "true",

@@ -14,6 +14,7 @@ from llm_document_parser_spark.datagen import generate_page, generate_pages
 from llm_document_parser_spark.html_extract import extract_main_text, sniff_doc_kind
 from llm_document_parser_spark.minipdf import extract_pdf_text
 from llm_document_parser_spark.pipeline import extract_pipeline
+from llm_document_parser_spark.schemas import RESULTS_SCHEMA
 
 N_DOCS = 80
 SEED = 7
@@ -46,6 +47,13 @@ def results(spark):
 def expected():
     exp = [oracle_expected(SEED, i) for i in range(N_DOCS)]
     return {e["url"]: e for e in exp}
+
+
+def test_output_has_results_schema_names_and_types(spark):
+    out = extract_pipeline(generate_pages(spark, 4, seed=SEED, partitions=1))
+    assert [(f.name, f.dataType.simpleString()) for f in out.schema] == [
+        (f.name, f.dataType.simpleString()) for f in RESULTS_SCHEMA
+    ]
 
 
 def test_row_count(results, expected):

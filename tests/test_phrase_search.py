@@ -124,14 +124,9 @@ def test_plan_is_index_then_verify_no_cartesian(spark):
     df = spark.createDataFrame(
         list(CORPUS.items()), ["url", "extracted_text"]
     )
-    plan = (
-        phrase_search(df, '"quick brown" fox -vector')
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
+    classes = node_classes(phrase_search(df, '"quick brown" fox -vector'))
+    assert "CartesianProductExec" not in classes
+    assert "BroadcastNestedLoopJoinExec" not in classes
 
 
 def test_verify_stage_reads_materialized_tokens(spark):

@@ -10,45 +10,43 @@ from pyspark.sql import functions as F
 from llm_document_parser_spark.ml.lr_dataflow import hashed_token_features
 from llm_document_parser_spark.operators.quantize import quantization_report
 from llm_document_parser_spark.operators.stats import value_histogram
+from plan_nodes import node_classes, plan_nodes
+
+_PYTHON = {"ArrowEvalPythonExec", "BatchEvalPythonExec"}
 
 
-def _plan(df) -> str:
-    import contextlib
-    import io
-
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        df.explain(mode="formatted")
-    return buf.getvalue()
+def _exchanges(classes: set[str]) -> set[str]:
+    return {c for c in classes if "Exchange" in c}
 
 
 def test_lr_featurization_is_pure_codegen(spark):
     df = spark.createDataFrame(
         [(1, "a b c", 1.0)], "doc_id long, text string, y double"
     )
-    plan = _plan(
+    classes = node_classes(
         hashed_token_features(df, label_col=F.col("y"), n_buckets=16)
     )
-    assert "Exchange" not in plan, plan
-    assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
+    assert not _exchanges(classes), classes
+    assert not classes & _PYTHON, classes
 
 
 def test_quantization_report_is_pure_codegen(spark):
     df = spark.createDataFrame(
         [(1, [0.1, -0.2])], "vec_id long, embedding array<double>"
     )
-    plan = _plan(quantization_report(df))
-    assert "Exchange" not in plan, plan
-    assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
+    classes = node_classes(quantization_report(df))
+    assert not _exchanges(classes), classes
+    assert not classes & _PYTHON, classes
 
 
 def test_value_histogram_single_aggregation_exchange(spark):
-    import re
-
     df = spark.createDataFrame([("s", 5)], "src string, v long")
-    plan = _plan(value_histogram(df, "src", "v"))
-    # one partial+final hash aggregate pair around exactly one Exchange
-    # node (formatted mode lists each node twice: tree + detail), no
+    out = value_histogram(df, "src", "v")
+    # one partial+final hash aggregate pair around exactly one shuffle, no
     # Python anywhere: the monoid build is one combining shuffle
-    assert len(re.findall(r"\(\d+\) Exchange", plan)) == 1, plan
-    assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
+    shuffles = [
+        n for n in plan_nodes(out)
+        if n.getClass().getSimpleName() == "ShuffleExchangeExec"
+    ]
+    assert len(shuffles) == 1, node_classes(out)
+    assert not node_classes(out) & _PYTHON

@@ -4,7 +4,7 @@ Pure AST, no Spark. The roots are what runs: every ``@query`` builder in
 ``queries.py`` (its decorator arguments, the oracle builders, are
 module-level statements and so roots too), every package module-level
 statement, and everything in ``jobs/``, ``tools/``, ``perfbench/`` (not its
-tests), ``bench.py``, ``bench_extra.py`` and ``__spark_entry__.py``. A def is
+tests), ``bench.py`` and ``__spark_entry__.py``. A def is
 reached through a chain of ``Name``/``Attribute`` references from a root,
 with ``import x as y`` aliases mapped back to ``x``. Tests are not roots:
 code that only tests call has no caller.
@@ -168,7 +168,7 @@ def unreachable_defs() -> dict[str, int]:
     root_files = [
         *(p for d in ("jobs", "tools") for p in (REPO / d).rglob("*.py")),
         *(p for p in (REPO / "perfbench").rglob("*.py") if "tests" not in p.parts),
-        *(REPO / f for f in ("bench.py", "bench_extra.py", "__spark_entry__.py")),
+        *(REPO / f for f in ("bench.py", "__spark_entry__.py")),
     ]
     roots = [_Module(p, root_file=True) for p in root_files]
     files = {**{m.name: m for m in roots}, **pkg}

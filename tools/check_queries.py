@@ -1,9 +1,19 @@
-"""Local driver-mimic: run every queries() entry on Spark and its
-oracle_sql() on DuckDB, compare row count + column names + order-insensitive
-values. Each query runs and collects inside ``materialize.storage_scope``;
-a query that leaves persisted RDDs behind afterwards FAILs.
+"""Catalog checker and profiler: run every queries() entry on
+Spark and its oracle_sql() on DuckDB, compare row count + column names +
+order-insensitive values, and record a profile of each Spark run. Each
+query builds and collects inside ``materialize.storage_scope``; a query
+that leaves persisted RDDs behind afterwards FAILs.
 
 Usage: python tools/check_queries.py [--json OUT.json] [sf_dir] [query ...]
+
+A query's profile, on its entry in --json, holds:
+- ``wall_s``: build + collect, timed by a ``perfbench.trace`` span;
+- the ``spark.*`` totals of ``SparkCounters.stage_totals`` over the jobs
+  of the span's job group (jobs, tasks, run/CPU/GC time, shuffle, spill,
+  input, task skew);
+- ``executions``: every SQL execution the query ran, with its executed
+  plan and each plan node's SQL metrics (rows, times, sizes), parsed to
+  numbers by ``perfbench.trace.parse_metric``.
 
 --json writes a machine-readable per-query result map. The driver's
 CORRECTNESS attestation caps at 50 queries per round; committing
@@ -17,14 +27,17 @@ import json
 import math
 import os
 import sys
+from contextlib import contextmanager
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import duckdb
+from pyspark.sql import SparkSession
 
 import __spark_entry__ as entrymod
 from llm_document_parser_spark.materialize import storage_scope
 from llm_document_parser_spark.session import get_spark
+from perfbench.trace import SparkCounters, Span, Tracer, parse_metric
 
 TABLES = [
     "region", "nation", "customer", "supplier", "part", "orders",
@@ -49,6 +62,65 @@ def canon(rows, cols):
     )
 
 
+class Profiler:
+    """Profiles one query at a time from Spark's status store.
+
+    The profile is read right after the query, outside its timed span:
+    the UI keeps only the last 1,000 jobs, stages and executions, and an
+    iterative query runs dozens of jobs."""
+
+    def __init__(self, spark: SparkSession):
+        self.spark = spark
+        self.tracer = Tracer(spark, enabled=True)
+        self.counters = SparkCounters(spark)
+        self.last_execution = max((ex["id"] for ex in self._executions()), default=-1)
+
+    def _executions(self) -> list[dict]:
+        return self.counters.get("/sql?details=false&planDescription=false&length=100000")
+
+    @contextmanager
+    def profile(self, name: str):
+        """Time the block as a span named ``name``. The dict it yields is
+        filled with the block's profile once it exits, also by raising."""
+        prof: dict = {}
+        span = self.tracer.begin(name)
+        try:
+            yield prof
+        finally:
+            self.tracer.end(span)
+            prof.update(self._read(span))
+
+    def _read(self, span: Span) -> dict:
+        self.spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+        jobs = self.counters.jobs_by_group().get(span.group, [])
+        new = [ex["id"] for ex in self._executions() if ex["id"] > self.last_execution]
+        self.last_execution = max(new, default=self.last_execution)
+        executions = [
+            self.counters.get(f"/sql/{i}?details=true&planDescription=true") for i in new
+        ]
+        return {
+            "wall_s": span.seconds,
+            **self.counters.stage_totals(jobs, span.seconds),
+            "executions": [
+                {
+                    "id": ex["id"],
+                    "plan": ex["planDescription"],
+                    "nodes": [
+                        {
+                            "id": n["nodeId"],
+                            "name": n["nodeName"],
+                            "metrics": {
+                                m["name"]: parse_metric(m["value"]) for m in n["metrics"]
+                            },
+                        }
+                        for n in ex["nodes"]
+                    ],
+                }
+                for ex in executions
+            ],
+        }
+
+
 def main() -> int:
     argv = sys.argv[1:]
     json_out = None
@@ -58,7 +130,8 @@ def main() -> int:
     sf_dir = argv[0] if argv else "/root/testdata/sf0.01"
     only = set(argv[1:])
     results: dict[str, dict] = {}
-    spark = get_spark(master="local[8]", app_name="check-queries")
+    spark = get_spark(app_name="check-queries")
+    profiler = Profiler(spark)
     con = duckdb.connect()
     for t in TABLES:
         con.execute(
@@ -75,12 +148,12 @@ def main() -> int:
             continue
         def fail(msg: str, **extra) -> None:
             failures.append(name)
-            results[name] = {"pass": False, "detail": msg[:400], **extra}
+            results[name] = {"pass": False, "detail": msg[:400], **prof, **extra}
             print(f"FAIL {name}: {msg[:400]}")
 
         before = persisted()
         try:
-            with storage_scope():
+            with storage_scope(), profiler.profile(name) as prof:
                 sdf = fn(spark, sf_dir)
                 srows = [tuple(r) for r in sdf.collect()]
                 scols = sdf.columns
@@ -92,7 +165,7 @@ def main() -> int:
             fail(f"{leaked} persisted RDDs left behind", leaked_rdds=leaked)
             continue
         if name not in oracles:
-            results[name] = {"pass": True, "mode": "rows-only", "rows": len(srows)}
+            results[name] = {"pass": True, "mode": "rows-only", "rows": len(srows), **prof}
             print(f"ok   {name}: rows-only ({len(srows)} rows)")
             continue
         try:
@@ -113,7 +186,7 @@ def main() -> int:
             diff = [(a, b) for a, b in zip(cs, cd) if a != b][:3]
             fail(f"value mismatch; first diffs: {diff}")
             continue
-        results[name] = {"pass": True, "mode": "oracle", "rows": len(srows)}
+        results[name] = {"pass": True, "mode": "oracle", "rows": len(srows), **prof}
         print(f"PASS {name} ({len(srows)} rows)")
     spark.stop()
     if json_out:

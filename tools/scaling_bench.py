@@ -46,7 +46,7 @@ cores, pages_path, n_docs = {cores}, {pages_path!r}, {n_docs}
 # total heap of an N-executor one (fixed per-executor memory), so the
 # single local JVM gets a 2 GB-per-simulated-core CEILING (Xmx, lazy
 # growth — heap starvation at 32 threads doubles runtime via GC
-# inversion, so the ceiling matters). PRETOUCH deliberately NOT set:
+# inversion, so the ceiling matters). The heap is NOT pre-touched:
 # round 5 measured this host supplying first-touch pages at ~40-70 MB/s
 # (a 64 GB pretouch = 15-25 min of startup), so the untimed warm-up run
 # below is what commits the pages the timed run touches — same
