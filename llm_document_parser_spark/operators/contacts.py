@@ -24,6 +24,7 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from .matches import Shared, find_all
 from .patterns import patterns_map_for
 
 # recognized non-NANP calling codes (two-digit first so the regex
@@ -61,18 +62,17 @@ def canonical_phone(p: Column) -> Column:
 def contact_blocks(text: Column) -> Column:
     """Concatenate the three block captures, collapse whitespace, keep
     blocks longer than 10 chars (reference: src/document_parser.py:484-503)."""
-    blocks = F.concat(
-        *[
-            F.coalesce(F.regexp_extract_all(text, F.lit(p), 1), F.array())
-            for p in CONTACT_BLOCK_PATTERNS
-        ]
-    )
+    blocks = F.concat(*[find_all(text, p, 1) for p in CONTACT_BLOCK_PATTERNS])
     cleaned = F.transform(blocks, lambda b: F.trim(F.regexp_replace(b, r"\s+", " ")))
     return F.filter(cleaned, lambda b: F.length(b) > 10)
 
 
-def contacts_map(text: Column) -> Column:
-    base = patterns_map_for(text, "contact")
+def contacts_map(text: Column, shared: Shared | None = None) -> Column:
+    """The contact pattern map (``shared``'s when set) with phones
+    canonicalized, plus ``contact_blocks`` when any block was captured."""
+    base = shared.contact if shared is not None else None
+    if base is None:
+        base = patterns_map_for(text, "contact", shared)
     # canonicalize the phone list in place
     base = F.transform_values(
         base,
@@ -80,8 +80,9 @@ def contacts_map(text: Column) -> Column:
             k == "phone", F.transform(v, canonical_phone)
         ).otherwise(v),
     )
-    blocks = contact_blocks(text)
-    with_blocks = F.map_concat(
-        base, F.create_map(F.lit("contact_blocks"), blocks)
+    # the entry is filtered out when empty, so the block chain appears once
+    blocks = F.map_filter(
+        F.create_map(F.lit("contact_blocks"), contact_blocks(text)),
+        lambda _, v: F.size(v) > 0,
     )
-    return F.when(F.size(blocks) > 0, with_blocks).otherwise(base)
+    return F.map_concat(base, blocks)

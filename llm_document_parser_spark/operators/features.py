@@ -2,7 +2,10 @@
 src/document_parser.py:729-750 ``extract_features``).
 
 The four regex counts are case-sensitive (the reference's ``re.findall``
-carries no flag there); person/org counts are occurrence counts (not
+carries no flag there). They count ``Shared``'s ``(?i)`` email, phone,
+currency and date arrays, which match the same strings: Java's ``(?i)``
+folds only ASCII, and those patterns' only letters are ASCII ranges that
+already hold both cases. Person/org counts are occurrence counts (not
 deduped) over the NER patterns, matching the reference's ``len([ent ...])``.
 """
 
@@ -11,27 +14,22 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-from .ner import entity_matches
-
-_EMAIL = r"(?<![a-zA-Z0-9._%+-])[a-zA-Z0-9._%+-]+@[a-zA-Z0-9.-]+\.[a-zA-Z]{2,}"
-_PHONE = r"(\+?\d{1,3}[-.\s]?\(?\d{3}\)?[-.\s]?\d{3}[-.\s]?\d{4})"
-_CURRENCY = r"(\$\d+(?:,\d{3})*(?:\.\d{2})?)"
-_DATE = r"(\d{1,2}[/-]\d{1,2}[/-]\d{2,4})"
+from .matches import Shared
 
 
-def _count(text: Column, pattern: str) -> Column:
-    return F.size(
-        F.coalesce(F.regexp_extract_all(text, F.lit(pattern), 0), F.array())
-    ).cast("long")
+def features_struct(text: Column, shared: Shared | None = None) -> Column:
+    if shared is None:
+        shared = Shared.of(text)
 
+    def count(arr: Column) -> Column:
+        return F.size(arr).cast("long")
 
-def features_struct(text: Column) -> Column:
     return F.struct(
-        _count(text, _EMAIL).alias("email_count"),
-        _count(text, _PHONE).alias("phone_count"),
-        _count(text, _CURRENCY).alias("currency_count"),
-        _count(text, _DATE).alias("date_count"),
-        F.size(entity_matches(text, "PERSON", dedup=False)).cast("long").alias("person_count"),
-        F.size(entity_matches(text, "ORG", dedup=False)).cast("long").alias("org_count"),
+        count(shared.email).alias("email_count"),
+        count(shared.phone).alias("phone_count"),
+        count(shared.currency).alias("currency_count"),
+        count(shared.date).alias("date_count"),
+        count(shared.person).alias("person_count"),
+        count(shared.org).alias("org_count"),
         F.length(text).cast("long").alias("text_length"),
     )

@@ -13,7 +13,7 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-from .ner import entity_matches
+from .matches import Shared, find_all
 
 HOLDER_PATTERNS = [
     r"(?i)(?:name|holder|account holder|contact):\s*([A-Z][a-z]+(?:\s+[A-Z][a-z]+)+)",
@@ -25,17 +25,11 @@ HOLDER_PATTERNS = [
 ]
 
 
-def holder_names_struct(text: Column) -> Column:
-    """STRUCT<candidate_names ARRAY<STRING>, primary_name STRING>."""
-    pattern_names = F.concat(
-        *[
-            F.coalesce(F.regexp_extract_all(text, F.lit(p), 1), F.array())
-            for p in HOLDER_PATTERNS
-        ]
-    )
-    all_names = F.array_distinct(
-        F.concat(pattern_names, entity_matches(text, "PERSON"))
-    )
+def holder_candidates(text: Column, persons: Column) -> Column:
+    """ARRAY<STRING> of the plausible holder names, best first. ``persons``
+    is the NER PERSON match array (deduped here with the pattern names)."""
+    pattern_names = F.concat(*[find_all(text, p, 1) for p in HOLDER_PATTERNS])
+    all_names = F.array_distinct(F.concat(pattern_names, persons))
     filtered = F.filter(
         all_names,
         lambda n: (F.size(F.split(F.trim(n), r"\s+")) >= 2) & (F.length(n) > 4),
@@ -69,7 +63,17 @@ def holder_names_struct(text: Column) -> Column:
         .when(l["idx"] > r["idx"], 1)
         .otherwise(0),
     )
-    candidates = F.transform(ranked, lambda s: s["name"])
+    return F.transform(ranked, lambda s: s["name"])
+
+
+def holder_names_struct(text: Column, shared: Shared | None = None) -> Column:
+    """STRUCT<candidate_names ARRAY<STRING>, primary_name STRING>, reading
+    ``shared``'s ranked candidates when set."""
+    if shared is None:
+        shared = Shared.of(text)
+    candidates = shared.candidates
+    if candidates is None:
+        candidates = holder_candidates(text, shared.person)
     primary = F.try_element_at(candidates, F.lit(1))
     return F.struct(
         candidates.alias("candidate_names"), primary.alias("primary_name")

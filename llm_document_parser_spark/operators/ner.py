@@ -19,11 +19,14 @@ src/document_parser.py:22-28); the seam is tested with a pickled fake
 
 from __future__ import annotations
 
-from typing import Callable, Iterator
+from typing import TYPE_CHECKING, Callable, Iterator
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, MapType, StringType, StructField, StructType
+
+if TYPE_CHECKING:  # matches imports this module
+    from .matches import Shared
 
 try:  # pragma: no cover - optional heavy dependency
     import spacy  # type: ignore  # noqa: F401
@@ -115,11 +118,25 @@ def entity_matches(text: Column, label: str, dedup: bool = True) -> Column:
     return F.array_distinct(arr) if dedup else arr
 
 
-def entities_map(text: Column) -> Column:
+def entities_map(text: Column, shared: Shared | None = None) -> Column:
     """MAP with all six labels always present (reference initializes every
-    key, src/document_parser.py:446-453)."""
+    key, src/document_parser.py:446-453). ``shared`` supplies the PERSON, ORG and GPE match arrays and, for MONEY, the
+    currency array, whose pattern is MONEY's."""
+    from_shared = {}
+    if shared is not None:
+        from_shared = {
+            "PERSON": shared.person,
+            "ORG": shared.org,
+            "GPE": shared.gpe,
+            "MONEY": shared.currency,
+        }
     keys = F.array(*[F.lit(lbl) for lbl in ENTITY_LABELS])
-    vals = F.array(*[entity_matches(text, lbl) for lbl in ENTITY_LABELS])
+    vals = F.array(
+        *[
+            F.array_distinct(from_shared[lbl]) if lbl in from_shared else entity_matches(text, lbl)
+            for lbl in ENTITY_LABELS
+        ]
+    )
     return F.map_from_arrays(keys, vals)
 
 

@@ -43,6 +43,8 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from .matches import ADDRESS, CURRENCY, DATE, EMAIL, PHONE, Shared, find_all
+
 # (field, java_pattern, group_index) per doc type
 PATTERNS: dict[str, list[tuple[str, str, int]]] = {
     "invoice": [
@@ -53,12 +55,12 @@ PATTERNS: dict[str, list[tuple[str, str, int]]] = {
         ("tax", r"(?i)(?:tax|vat):?\s*(\$\d+(?:\.\d{2})?)", 1),
         ("first_name", r"(?i)(?:first name|given name):?\s*([A-Z][a-z]+)", 1),
         ("last_name", r"(?i)(?:last name|surname|family name):?\s*([A-Z][a-z]+)", 1),
-        ("email", r"(?i)((?<![a-zA-Z0-9._%+-])[a-zA-Z0-9._%+-]+@[a-zA-Z0-9.-]+\.[a-zA-Z]{2,})", 1),
+        ("email", *EMAIL),
         ("product_id", r"(?i)(?:product id|product code|item #):?\s*([A-Z0-9-]+)", 1),
         ("qty", r"(?i)(?:quantity|qty):?\s*(\d+)", 1),
         ("amount", r"(?i)(?:amount|price):?\s*(\$\d+(?:\.\d{2})?)", 1),
         ("invoice_date", r"(?i)(?:invoice date|date issued):?\s*(\d{1,2}[/-]\d{1,2}[/-]\d{2,4})", 1),
-        ("address", r"(?i)((?<!\d)\d{1,6}\s+[\w\s]{1,100},?\s*[A-Za-z\s]{1,60},?\s*[A-Z]{2}\s*\d{5})", 1),
+        ("address", *ADDRESS),
         ("city", r"(?i)(?:city):?\s*([A-Za-z\s]+)(?=\s*[,]|\s*[A-Z]{2})", 1),
         ("stock_code", r"(?i)(?:stock code|sku):?\s*([A-Z0-9-]+)", 1),
         ("job", r"(?i)(?:job|project|work order):?\s*([A-Z0-9-]+)", 1),
@@ -78,35 +80,30 @@ PATTERNS: dict[str, list[tuple[str, str, int]]] = {
         ("supplier", r"(?i)(?:supplier|vendor):?\s*([A-Za-z0-9\s,&]+)", 1),
     ],
     "contact": [
-        ("email", r"(?i)((?<![a-zA-Z0-9._%+-])[a-zA-Z0-9._%+-]+@[a-zA-Z0-9.-]+\.[a-zA-Z]{2,})", 1),
-        ("phone", r"(?i)(\+?\d{1,3}[-.\s]?\(?\d{3}\)?[-.\s]?\d{3}[-.\s]?\d{4})", 1),
+        ("email", *EMAIL),
+        ("phone", *PHONE),
         ("website", r"(?i)(https?://[^\s]+)", 1),
         ("name", r"(?i)(?:name|contact):?\s*([A-Z][a-z]+\s+[A-Z][a-z]+)", 1),
         ("company", r"(?i)(?:company|firm|organization):?\s*([A-Za-z0-9\s&.,]+)", 1),
-        ("address", r"(?i)((?<!\d)\d{1,6}\s+[\w\s]{1,100},?\s*[A-Za-z\s]{1,60},?\s*[A-Z]{2}\s*\d{5})", 1),
+        ("address", *ADDRESS),
         ("zip_code", r"(?i)\b\d{5}(?:-\d{4})?\b", 0),
     ],
     "general": [
-        ("currency", r"(?i)(\$\d+(?:,\d{3})*(?:\.\d{2})?)", 1),
+        ("currency", *CURRENCY),
         ("percentage", r"(?i)((?<!\d)\d+(?:\.\d+)?%)", 1),
-        ("date", r"(?i)(\d{1,2}[/-]\d{1,2}[/-]\d{2,4})", 1),
+        ("date", *DATE),
     ],
 }
 
 
-def patterns_map_for(text: Column, doc_type: str) -> Column:
+def patterns_map_for(text: Column, doc_type: str, shared: Shared | None = None) -> Column:
     """MAP<STRING, ARRAY<STRING>> of deduped matches for one doc type,
-    keeping only fields that matched (reference: src/document_parser.py:409-412)."""
+    keeping only fields that matched (reference: src/document_parser.py:409-412).
+    Fields whose regex is one of ``shared``'s arrays read that array."""
+    find = shared.find_all if shared is not None else find_all
     fields = PATTERNS[doc_type]
     keys = F.array(*[F.lit(f) for f, _, _ in fields])
-    vals = F.array(
-        *[
-            F.array_distinct(
-                F.coalesce(F.regexp_extract_all(text, F.lit(p), g), F.array())
-            )
-            for _, p, g in fields
-        ]
-    )
+    vals = F.array(*[F.array_distinct(find(text, p, g)) for _, p, g in fields])
     m = F.map_from_arrays(keys, vals)
     return F.map_filter(m, lambda _, v: F.size(v) > 0)
 
@@ -135,20 +132,24 @@ def enrich_invoice_patterns(text: Column, base: Column, persons: Column, gpes: C
     return F.map_concat(base, with_first, with_last, with_city)
 
 
-def patterns_map(text: Column, doc_type: Column) -> Column:
+def patterns_map(text: Column, doc_type: Column, shared: Shared | None = None) -> Column:
     """Doc-type-dispatched pattern extraction; unknown types fall back to
     'general' (reference: src/document_parser.py:406-407). Invoices get the
     X3 NER backfill (reference: src/document_parser.py:778-781 dispatches
-    invoices through extract_invoice_details)."""
-    from .ner import entity_matches
+    invoices through extract_invoice_details). ``shared``'s contact and
+    invoice base maps are read when set."""
+    if shared is None:
+        shared = Shared.of(text)
+    contact = shared.contact
+    if contact is None:
+        contact = patterns_map_for(text, "contact", shared)
+    invoice = shared.invoice
+    if invoice is None:
+        invoice = patterns_map_for(text, "invoice", shared)
 
-    expr = patterns_map_for(text, "general")
-    for dt in ("receipt", "contract", "contact"):
-        expr = F.when(doc_type == dt, patterns_map_for(text, dt)).otherwise(expr)
-    invoice = enrich_invoice_patterns(
-        text,
-        patterns_map_for(text, "invoice"),
-        entity_matches(text, "PERSON", dedup=False),
-        entity_matches(text, "GPE", dedup=False),
-    )
+    expr = patterns_map_for(text, "general", shared)
+    for dt in ("receipt", "contract"):
+        expr = F.when(doc_type == dt, patterns_map_for(text, dt, shared)).otherwise(expr)
+    expr = F.when(doc_type == "contact", contact).otherwise(expr)
+    invoice = enrich_invoice_patterns(text, invoice, shared.person, shared.gpe)
     return F.when(doc_type == "invoice", invoice).otherwise(expr)

@@ -10,14 +10,17 @@ driver loop (reference: src/batch_processor.py:13-69):
     → payload_text_udf (Arrow pandas UDF: PDF/HTML/text)  [extract_udfs.py]
     → clean_text (native chain, X2)                       [textclean.py]
     → document_type (heuristic keyword rules)             [kind.py]
+    → shared-match projection (hidden): the match arrays  [matches.py]
+      several columns read, then the contact map, invoice
+      base map and ranked holder names built from them
     → patterns/contacts/names/entities/features (native)  [operators/*]
     → text_spans (native, from patterns)
-    → results schema
+    → results schema (drops the hidden columns)
 
 Everything after the single pandas UDF is whole-stage-codegen'd JVM work; the
 reference's 4× spaCy re-parse per document (reference:
-src/document_parser.py:422,444,525,738) collapses into shared native
-subexpressions here.
+src/document_parser.py:422,444,525,738) becomes one run of each regex per
+row: the battery reads the shared match arrays instead of re-running them.
 
 The column expressions are built once per live ``SparkContext``; see
 ``extract_pipeline`` for why.
@@ -27,6 +30,7 @@ from __future__ import annotations
 
 import threading
 import weakref
+from dataclasses import replace
 
 from pyspark import SparkContext
 from pyspark.sql import Column, DataFrame
@@ -36,10 +40,11 @@ from .operators.contacts import contacts_map
 from .operators.extract_udfs import payload_text_udf
 from .operators.features import features_struct
 from .operators.kind import doc_kind_col, document_type_col
-from .operators.names import holder_names_struct
+from .operators.matches import Shared
+from .operators.names import holder_candidates, holder_names_struct
 from .operators import ner
 from .operators.ner import entities_map, spacy_entities_stage
-from .operators.patterns import patterns_map
+from .operators.patterns import patterns_map, patterns_map_for
 from .operators.textclean import clean_text_col
 from .schemas import RESULTS_SCHEMA
 
@@ -80,20 +85,46 @@ def text_spans_col(text: Column, patterns: Column) -> Column:
 _PlanColumns = tuple[Column, list[tuple[str, Column]]]
 
 
+def _shared_columns(text: Column, doc_type: Column) -> tuple[list[tuple[str, Column]], Shared]:
+    """The hidden columns ahead of the battery, in ``withColumn`` order:
+    the shared match arrays, then the values derived from them that are
+    read more than once. Returns them with the ``Shared`` of column
+    references the battery reads. Each hidden column is referenced more
+    than once, so ``CollapseProject`` keeps the two projections apart, and
+    each regex runs once per row; the invoice base map runs its
+    invoice-only regexes on invoice rows alone."""
+    arrays = Shared.of(text).arrays()
+    refs = Shared(**{name: F.col(f"_match_{name}") for name in arrays})
+    derived = {
+        "contact": patterns_map_for(text, "contact", refs),
+        # an empty map, not NULL, elsewhere: NULL would make ``patterns`` nullable
+        "invoice": F.when(
+            doc_type == "invoice", patterns_map_for(text, "invoice", refs)
+        ).otherwise(F.create_map().cast("map<string,array<string>>")),
+        "candidates": holder_candidates(text, refs.person),
+    }
+    refs = replace(refs, **{name: F.col(f"_match_{name}") for name in derived})
+    hidden = [(f"_match_{name}", col) for name, col in {**arrays, **derived}.items()]
+    return hidden, refs
+
+
 def _plan_columns(use_spacy_ner: bool) -> _PlanColumns:
     """The plan's column expressions: ``doc_kind`` (applied before the
     optional repartition) and every later column in ``withColumn`` order.
     The spaCy path leaves ``entities`` to its own Python stage."""
     doc_kind = doc_kind_col(F.col("html"))
     text = F.col("extracted_text")
+    doc_type = F.col("document_type")
+    hidden, shared = _shared_columns(text, doc_type)
     after = [
         ("raw_text", payload_text_udf(F.col("html"), F.col("doc_kind"))),
         ("extracted_text", clean_text_col(F.col("raw_text"))),
         ("document_type", document_type_col(text)),
-        ("patterns", patterns_map(text, F.col("document_type"))),
-        ("contacts", contacts_map(text)),
-        ("names", holder_names_struct(text)),
-        ("features", features_struct(text)),
+        *hidden,
+        ("patterns", patterns_map(text, doc_type, shared)),
+        ("contacts", contacts_map(text, shared)),
+        ("names", holder_names_struct(text, shared)),
+        ("features", features_struct(text, shared)),
         ("text_spans", text_spans_col(text, F.col("patterns"))),
         ("success", F.length(text) > 0),
         (
@@ -106,7 +137,7 @@ def _plan_columns(use_spacy_ner: bool) -> _PlanColumns:
         ("processing_time", F.current_timestamp()),
     ]
     if not use_spacy_ner:
-        after.append(("entities", entities_map(text)))
+        after.append(("entities", entities_map(text, shared)))
     return doc_kind, after
 
 

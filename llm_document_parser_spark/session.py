@@ -49,9 +49,8 @@ def get_spark(
     if master is not None:
         builder = builder.master(master)
 
-    cores = _parallelism_hint(master)
-    if shuffle_partitions is None:
-        shuffle_partitions = max(32, cores * 2)
+    if shuffle_partitions is None and master is not None:
+        shuffle_partitions = _shuffle_partitions(_parallelism_hint(master))
 
     conf = {
         # driver heap: only effective for the FIRST session in a process
@@ -67,8 +66,6 @@ def get_spark(
         "spark.sql.adaptive.enabled": "true",
         "spark.sql.adaptive.coalescePartitions.enabled": "true",
         "spark.sql.adaptive.skewJoin.enabled": "true",
-        # --- shuffle sizing ---
-        "spark.sql.shuffle.partitions": str(shuffle_partitions),
         # 128 MB input splits: the scan parallelism knob at 100 TB
         "spark.sql.files.maxPartitionBytes": str(128 * 1024 * 1024),
         # --- Arrow / pandas UDF path ---
@@ -94,12 +91,22 @@ def get_spark(
         # cluster mode: the conf is honored (local mode ignores it — the
         # local[N,F] master rewrite above is the only local knob)
         conf["spark.task.maxFailures"] = str(task_retries)
+    if shuffle_partitions is not None:
+        # --- shuffle sizing; with no master it is set once the session runs ---
+        conf["spark.sql.shuffle.partitions"] = str(shuffle_partitions)
     if extra_conf:
         conf.update(extra_conf)
     for k, v in conf.items():
         builder = builder.config(k, v)
 
     spark = builder.getOrCreate()
+    if "spark.sql.shuffle.partitions" not in conf:
+        # the master came from spark-submit or Spark's local[*] default:
+        # size from the cores the running context actually has
+        spark.conf.set(
+            "spark.sql.shuffle.partitions",
+            str(_shuffle_partitions(spark.sparkContext.defaultParallelism)),
+        )
     spark.sparkContext.setLogLevel("WARN")
     return spark
 
@@ -113,8 +120,13 @@ def _with_task_retries(master: str, retries: int) -> str:
     return master
 
 
-def _parallelism_hint(master: str | None) -> int:
-    if master and master.startswith("local["):
+def _shuffle_partitions(cores: int) -> int:
+    """Two shuffle partitions per core, at least 32, for AQE to coalesce."""
+    return max(32, cores * 2)
+
+
+def _parallelism_hint(master: str) -> int:
+    if master.startswith("local["):
         # local[N] or local[N,maxFailures] — the core count is the first part
         inner = master[len("local[") : -1].split(",")[0]
         if inner == "*":

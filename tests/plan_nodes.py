@@ -8,13 +8,13 @@ def _seq(s) -> list:
     return [s.apply(i) for i in range(s.size())]
 
 
-def _class(obj) -> str:
+def class_name(obj) -> str:
     return obj.getClass().getSimpleName()
 
 
 def _below(node) -> list:
     kids = _seq(node.children()) + _seq(node.innerChildren())
-    name = _class(node)
+    name = class_name(node)
     if name == "AdaptiveSparkPlanExec":
         kids.append(node.executedPlan())
     elif name.endswith("QueryStageExec"):
@@ -36,7 +36,7 @@ def plan_nodes(df) -> list:
 
 
 def node_classes(df) -> set[str]:
-    return {_class(n) for n in plan_nodes(df)}
+    return {class_name(n) for n in plan_nodes(df)}
 
 
 def expressions(df) -> list:
@@ -53,7 +53,7 @@ def has_expression(df, cls: str, child_cls: str | None = None) -> bool:
     """True when the executed plan holds a ``cls`` expression (with a
     ``child_cls`` first child, when given)."""
     return any(
-        _class(e) == cls
-        and (child_cls is None or _class(e.children().apply(0)) == child_cls)
+        class_name(e) == cls
+        and (child_cls is None or class_name(e.children().apply(0)) == child_cls)
         for e in expressions(df)
     )

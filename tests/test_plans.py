@@ -7,7 +7,10 @@ extraction pipeline keeps exactly ONE Python stage.
 
 from __future__ import annotations
 
+from collections import Counter
+
 import pytest
+from plan_nodes import class_name, expressions, plan_nodes
 
 from llm_document_parser_spark.datagen import generate_pages
 from llm_document_parser_spark.pipeline import extract_pipeline
@@ -62,10 +65,26 @@ def test_semi_and_anti_joins(spark):
 
 def test_extract_pipeline_has_single_python_stage(spark):
     pages = generate_pages(spark, 10, seed=1, partitions=2)
-    txt = plan_of(extract_pipeline(pages))
+    classes = [class_name(n) for n in plan_nodes(extract_pipeline(pages))]
     # exactly one Arrow-batched python eval; everything else JVM-side
-    assert txt.count("ArrowEvalPython") == 1
-    assert "BatchEvalPython" not in txt  # no row-at-a-time python UDFs
+    assert classes.count("ArrowEvalPythonExec") == 1
+    assert "BatchEvalPythonExec" not in classes  # no row-at-a-time python UDFs
+
+
+def test_extract_pipeline_runs_each_regex_once(spark):
+    """Every (pattern, group) the battery extracts appears once in the
+    executed plan: the shared match arrays are hidden columns one
+    projection ahead of the battery, so no column re-runs another's regex
+    (169 RegExpExtractAll for 59 distinct pairs before they were shared)."""
+    pages = generate_pages(spark, 10, seed=1, partitions=2)
+    pairs = Counter()
+    for e in expressions(extract_pipeline(pages)):
+        if class_name(e) == "RegExpExtractAll":
+            _, regexp, group = (e.children().apply(i) for i in range(3))
+            pairs[(regexp.toString(), group.toString())] += 1
+    repeated = {pair: n for pair, n in pairs.items() if n > 1}
+    assert not repeated
+    assert sum(pairs.values()) <= 54
 
 
 def test_ann_topk_broadcasts_query_side(spark):
