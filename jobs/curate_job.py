@@ -190,6 +190,24 @@ def run_curation(
         F.col(text_col).isNotNull() & (F.length(text_col) > 0)
     )
 
+    def counted(df):
+        """``df`` and its token-count column under ``tokenizer`` (None: the
+        whitespace count the operators default to)."""
+        if tokenizer == "whitespace":
+            return df, None
+        if tokenizer != "exact":
+            raise ValueError(f"unknown tokenizer: {tokenizer!r}")
+        from llm_document_parser_spark.operators.tokenizers import (
+            exact_token_counts,
+        )
+
+        # raises RuntimeError when tiktoken is absent and no
+        # encoder_factory is injected — by design (see docstring)
+        return exact_token_counts(
+            df, text_col=text_col, out_col="bpe_tokens",
+            encoder_factory=encoder_factory,
+        ), F.col("bpe_tokens")
+
     # phase 1: the global dedup/gate computation, materialized ONCE as the
     # tiny (id, verdict) table. Deterministic (CC fixpoint is unique), so a
     # committed table from a killed prior attempt is safe to reuse.
@@ -204,22 +222,9 @@ def run_curation(
                     sample_to_token_budget,
                 )
 
-                kept_docs = labeled.filter(F.col("verdict") == "kept")
-                tokens_col = None
-                if tokenizer == "exact":
-                    from llm_document_parser_spark.operators.tokenizers import (
-                        exact_token_counts,
-                    )
-
-                    # raises RuntimeError when tiktoken is absent and no
-                    # encoder_factory is injected — by design (see docstring)
-                    kept_docs = exact_token_counts(
-                        kept_docs, text_col=text_col, out_col="bpe_tokens",
-                        encoder_factory=encoder_factory,
-                    )
-                    tokens_col = F.col("bpe_tokens")
-                elif tokenizer != "whitespace":
-                    raise ValueError(f"unknown tokenizer: {tokenizer!r}")
+                kept_docs, tokens_col = counted(
+                    labeled.filter(F.col("verdict") == "kept")
+                )
                 in_budget = sample_to_token_budget(
                     kept_docs,
                     budget_tokens, group_col=budget_group,
@@ -271,18 +276,7 @@ def run_curation(
             packing_stats,
         )
 
-        kept_corpus = spark.read.parquet(output)
-        tokens_col = None
-        if tokenizer == "exact":
-            from llm_document_parser_spark.operators.tokenizers import (
-                exact_token_counts,
-            )
-
-            kept_corpus = exact_token_counts(
-                kept_corpus, text_col=text_col, out_col="bpe_tokens",
-                encoder_factory=encoder_factory,
-            )
-            tokens_col = F.col("bpe_tokens")
+        kept_corpus, tokens_col = counted(spark.read.parquet(output))
         plan = pack_concat_split(
             kept_corpus, seq_len=pack_seq_len, n_shards=pack_shards,
             id_col=id_col, text_col=text_col, tokens_col=tokens_col,

@@ -61,11 +61,7 @@ def _block_text(fragment: str) -> str:
     return _WS_RE.sub(" ", _decode_entities(_TAG_RE.sub(" ", fragment))).strip()
 
 
-def extract_main_text(
-    html: str,
-    min_block_chars: int = MIN_BLOCK_CHARS,
-    max_link_density: float = MAX_LINK_DENSITY,
-) -> str:
+def extract_main_text(html: str) -> str:
     """Extract main content from an HTML string per spec v1 above."""
     if not html:
         return ""
@@ -77,10 +73,10 @@ def extract_main_text(
         if not fragment or fragment.isspace():
             continue
         text = _block_text(fragment)
-        if len(text) < min_block_chars:
+        if len(text) < MIN_BLOCK_CHARS:
             continue
         link_text = sum(len(_block_text(m)) for m in _ANCHOR_RE.findall(fragment))
-        if link_text / len(text) > max_link_density:
+        if link_text / len(text) > MAX_LINK_DENSITY:
             continue
         kept.append(text)
     return "\n".join(kept)

@@ -78,13 +78,13 @@ def _append_lineage(
     job_id: str,
     bucket_rows: dict[int, int],
     started_at: _dt.datetime,
-    attempt: int,
 ) -> None:
     # One JVM-side VALUES relation: no pickled Python RDD, no Python
     # workers. Integers are inlined; the job id and timestamps go in as
-    # parameters, converted like createDataFrame converts them.
+    # parameters, converted like createDataFrame converts them. Every row
+    # is attempt 1: a resumed job appends rows for the buckets it commits.
     rows = ", ".join(
-        f"(:job_id, {int(b)}L, 'completed', {int(n)}L, :started_at, :finished_at, {int(attempt)}L)"
+        f"(:job_id, {int(b)}L, 'completed', {int(n)}L, :started_at, :finished_at, 1L)"
         for b, n in sorted(bucket_rows.items())
     )
     names = ", ".join(LINEAGE_SCHEMA.names)
@@ -147,7 +147,7 @@ def run_with_lineage(
         )
         observed = obs.get
         bucket_rows = {int(b): int(observed[str(b)]) for b in group}
-        _append_lineage(spark, lineage_path, job_id, bucket_rows, started, attempt=1)
+        _append_lineage(spark, lineage_path, job_id, bucket_rows, started)
     return job_id
 
 

@@ -49,17 +49,14 @@ def align_sentences(
     id_col: str = "pair_id",
     a_col: str = "text_a",
     b_col: str = "text_b",
-    ratio_num: int = 2,
-    ratio_den: int = 1,
-    short_len: int = 15,
 ) -> DataFrame:
     """Positionally aligned sentence pairs with the length-ratio verdict.
 
     Output: ``(pair_id, idx, sent_a, sent_b, len_a, len_b, aligned)`` for
     every index present in BOTH texts (the shorter side truncates).
-    ``aligned`` = 1 when ``max(len)*ratio_den <= min(len)*ratio_num`` or
-    both sentences are ≤ ``short_len`` chars (short UI strings pair
-    loosely — the standard Gale-Church small-segment exemption)."""
+    ``aligned`` = 1 when ``max(len) <= 2 * min(len)`` or both sentences
+    are ≤ 15 chars (short UI strings pair loosely — the standard
+    Gale-Church small-segment exemption)."""
     sa, sb = sentences(F.col(a_col)), sentences(F.col(b_col))
     z = F.zip_with(sa, sb, lambda x, y: F.struct(x.alias("sa"), y.alias("sb")))
     rows = (
@@ -75,7 +72,7 @@ def align_sentences(
     la = F.length("sent_a").cast("long")
     lb = F.length("sent_b").cast("long")
     big, small = F.greatest(la, lb), F.least(la, lb)
-    ok = (big * ratio_den <= small * ratio_num) | (big <= short_len)
+    ok = (big <= small * 2) | (big <= 15)
     return rows.select(
         "pair_id",
         "idx",

@@ -81,17 +81,12 @@ def _positions(url: Column, num_bits: int, num_hashes: int) -> list[Column]:
 def build_seen_bloom(
     seen: DataFrame,
     url_col: str = "url",
-    expected_items: int | None = None,
     fpp: float = 0.01,
 ) -> SeenBloom:
-    """Aggregate ``seen[url_col]`` into a Bloom filter.
-
-    ``expected_items`` defaults to the actual count (one extra cheap
-    count job) — undersizing a Bloom filter silently raises its
-    false-positive rate, so the default is exact."""
-    if expected_items is None:
-        expected_items = seen.count()
-    m, k = _geometry(expected_items, fpp)
+    """Aggregate ``seen[url_col]`` into a Bloom filter, sized for the
+    actual count (one extra cheap count job) — undersizing a Bloom
+    filter silently raises its false-positive rate."""
+    m, k = _geometry(seen.count(), fpp)
     pos = F.explode(F.array(*_positions(F.col(url_col), m, k))).alias("pos")
     words = (
         seen.select(pos)

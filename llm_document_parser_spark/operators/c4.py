@@ -5,14 +5,14 @@ second canonical web-corpus filter family next to Gopher
 
 line rules (drop the line):
   L1 terminal punctuation — keep only lines ending in . ! ? or "
-  L2 short lines — keep only lines with >= ``min_line_words`` words
+  L2 short lines — keep only lines with >= 3 words
   L3 the word "javascript" (case-insensitive) anywhere in the line
 
 page rules (drop the page):
   P1 "lorem ipsum" anywhere (case-insensitive, pre-filter text)
   P2 a curly brace '{' anywhere (code markers, pre-filter text)
   P3 any token on the blocked-word list (case-insensitive token match,
-     pre-filter text; C4 uses the LDNOOBW list — injectable here)
+     pre-filter text; C4 uses the LDNOOBW list)
   P4 fewer than ``min_sentences`` sentences AFTER line filtering
      (sentence ~ terminal-punctuation occurrence, C4's proxy)
 
@@ -31,7 +31,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-# deterministic placeholder for the LDNOOBW blocklist (injectable)
+# deterministic placeholder for the LDNOOBW blocklist
 C4_BLOCKED_WORDS: tuple[str, ...] = ("viagra", "casino", "bet365")
 
 _TERMINALS = (".", "!", "?", '"')
@@ -45,9 +45,7 @@ def c4_clean(
     df: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    min_line_words: int = 3,
     min_sentences: int = 3,
-    blocked_words: tuple[str, ...] = C4_BLOCKED_WORDS,
 ) -> DataFrame:
     """Per-document C4 verdict: ``(id, clean_text, n_lines, n_kept,
     has_lorem_ipsum, has_brace, has_blocked_word, n_sentences, passes)``.
@@ -64,7 +62,7 @@ def c4_clean(
         ends_ok = F.lit(False)
         for term in _TERMINALS:
             ends_ok = ends_ok | F.endswith(trimmed, F.lit(term))
-        long_enough = F.size(_line_words(x)) >= min_line_words
+        long_enough = F.size(_line_words(x)) >= 3
         no_js = ~F.lower(x).contains("javascript")
         return ends_ok & long_enough & no_js
 
@@ -72,7 +70,7 @@ def c4_clean(
     clean_text = F.array_join(kept, "\n")
     words_lower = F.filter(F.split(F.lower(t), r"\s+"), lambda x: x != "")
     has_blocked = F.arrays_overlap(
-        words_lower, F.array(*[F.lit(w) for w in blocked_words])
+        words_lower, F.array(*[F.lit(w) for w in C4_BLOCKED_WORDS])
     )
     has_lorem = F.lower(t).contains("lorem ipsum")
     has_brace = t.contains("{")

@@ -13,9 +13,7 @@ Scale shape (the asymmetry is the whole design): the corpus side is
 n-grams are exploded per-partition (one generator, no shuffle until the
 join); the benchmark n-gram table is DISTINCT, tiny, and broadcast, so
 the contamination check is a map-side hash join — zero shuffle of corpus
-text — followed by one groupBy on doc id. Set ``broadcast_bench=False``
-for a pathologically large benchmark to fall back to a shuffle equi-join
-(AQE handles the skew of stopword-heavy n-grams).
+text — followed by one groupBy on doc id.
 
 All native column expressions; n-grams come from the same tokenizer as
 the dedup shingles (``dedup.shingles_col``), so decontamination and
@@ -66,8 +64,6 @@ def contamination_report(
     bench_text_col: str = "text",
     n: int = 13,
     min_hits: int = 1,
-    broadcast_bench: bool = True,
-    join_on_hash: bool = False,
     bloom_fpp: float | None = None,
 ) -> DataFrame:
     """(doc id, overlap_ngrams, n_benchmarks) for every document sharing
@@ -75,16 +71,6 @@ def contamination_report(
     are absent (the common case at 10^12 rows — emitting them would be a
     full-corpus write for a near-empty signal); callers needing a flag
     column left-join this back on the id.
-
-    ``join_on_hash`` joins on ``xxhash64(ngram)`` longs instead of the
-    ~100-byte gram strings. MEASURED at the 50k-doc / 500-item bench
-    leg: NO win — interleaved trials gave string 6.2-8.5 s vs hash
-    6.9-11.4 s (the gram string must be built either way, so hashing is
-    pure added compute, and a 500-item broadcast is small regardless) —
-    hence default False. The knob exists for 10^5-10^6-item benchmarks,
-    where shrinking the broadcast table ~10x is what keeps it
-    broadcastable; collision odds (~corpus-grams×bench-grams / 2^64)
-    are immaterial against the filter's own heuristic semantics.
 
     ``bloom_fpp`` (e.g. 0.001) inserts a Bloom pre-filter (operators/
     bloom.py) between the corpus gram explode and the join: a filter is
@@ -94,14 +80,9 @@ def contamination_report(
     survives to the exact join and the report is IDENTICAL to the
     unfiltered path (tested); false positives only add back a bloom_fpp
     fraction of join volume. This is the 10^5-10^6-item-benchmark scale
-    path: the bitmap (~1.8 MB per 10^6 grams at 0.1% fpp) broadcasts
-    even when the gram TABLE no longer should, and with
-    ``broadcast_bench=False`` the shuffle then moves only the ~fpp
-    fraction of corpus grams instead of all of them."""
+    path: the bitmap (~1.8 MB per 10^6 grams at 0.1% fpp) is far
+    smaller than the gram table it stands for."""
     bench = benchmark_ngrams(benchmark, bench_id_col, bench_text_col, n)
-    key = "gkey" if join_on_hash else "ngram"
-    if join_on_hash:
-        bench = bench.select(F.xxhash64("ngram").alias("gkey"), "bench_id")
     # corpus grams via the codegen occurrence explode (dedup._exploded_
     # shingles): identical contamination report — both count_distinct
     # aggregates are insensitive to intra-doc gram repeats — with zero
@@ -109,8 +90,6 @@ def contamination_report(
     doc_ngrams = _exploded_shingles(docs, id_col, text_col, n).select(
         F.col("id").alias(id_col), F.col("s").alias("ngram")
     )
-    if join_on_hash:
-        doc_ngrams = doc_ngrams.select(id_col, F.xxhash64("ngram").alias("gkey"))
     if bloom_fpp is not None:
         from .bloom import build_seen_bloom, filter_might_contain
 
@@ -118,16 +97,14 @@ def contamination_report(
         # (sizing count, bitmap aggregation, final join) — materialize it
         # once; it is benchmark-sized (small by contract), never corpus
         bench = checkpoint(bench)
-        bench_keys = bench.select(key).distinct()
-        bloom = build_seen_bloom(bench_keys, url_col=key, fpp=bloom_fpp)
-        doc_ngrams = filter_might_contain(doc_ngrams, bloom, col=key)
-    if broadcast_bench:
-        bench = F.broadcast(bench)
+        bench_keys = bench.select("ngram").distinct()
+        bloom = build_seen_bloom(bench_keys, url_col="ngram", fpp=bloom_fpp)
+        doc_ngrams = filter_might_contain(doc_ngrams, bloom, col="ngram")
     return (
-        doc_ngrams.join(bench, key)
+        doc_ngrams.join(F.broadcast(bench), "ngram")
         .groupBy(id_col)
         .agg(
-            F.count_distinct(key).cast("long").alias("overlap_ngrams"),
+            F.count_distinct("ngram").cast("long").alias("overlap_ngrams"),
             F.count_distinct("bench_id").cast("long").alias("n_benchmarks"),
         )
         .filter(F.col("overlap_ngrams") >= min_hits)

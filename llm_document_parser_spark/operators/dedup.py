@@ -62,19 +62,19 @@ def exact_dup_groups(df: DataFrame, id_col: str = "doc_id", text_col: str = "tex
 # ---------------------------------------------------------------------------
 
 
-def shingles_col(text: Column, k: int = 3) -> Column:
-    """Distinct k-word shingles (space-joined) of lowercased text."""
+def shingles_col(text: Column) -> Column:
+    """Distinct 3-word shingles (space-joined) of lowercased text."""
     toks = tokens_col(text)
     n = F.size(toks)
     # guard: sequence(1, 0) would produce a DESCENDING [1, 0] in Spark
-    idx = F.when(n >= k, F.sequence(F.lit(1), n - (k - 1))).otherwise(
+    idx = F.when(n >= 3, F.sequence(F.lit(1), n - 2)).otherwise(
         F.array().cast("array<int>")
     )
     return F.array_distinct(
         F.transform(
             idx,
             lambda i: F.concat_ws(
-                " ", *[F.try_element_at(toks, i + j) for j in range(k)]
+                " ", *[F.try_element_at(toks, i + j) for j in range(3)]
             ),
         )
     )
@@ -117,12 +117,12 @@ def minhash_candidate_pairs(
     df: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    shingle_k: int = 3,
     num_hashes: int = 8,
     bands: int = 4,
     hash_fn: str = "md5",
 ) -> DataFrame:
-    """Distinct candidate near-dup pairs (id_a < id_b) sharing ≥1 LSH band.
+    """Distinct candidate near-dup pairs (id_a < id_b) sharing ≥1 LSH band
+    of the documents' 3-shingle signatures.
 
     Plan shape at scale: narrow per-row signature compute → explode bands
     (×bands rows) → shuffle by (band, key) → within-bucket self-join →
@@ -150,7 +150,7 @@ def minhash_candidate_pairs(
     # num_hashes times — codegen blowup and redundant work; exploding a
     # distinct ARRAY via the HOF transform is interpreted per element —
     # min over the raw occurrence multiset is identical and all codegen.)
-    sh = _exploded_shingles(df, id_col, text_col, shingle_k)
+    sh = _exploded_shingles(df, id_col, text_col, 3)
     return _pairs_from_exploded_shingles(sh, num_hashes, bands, hash_fn)
 
 
@@ -251,13 +251,11 @@ def incremental_near_dups(
     index: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    shingle_k: int = 3,
     num_hashes: int = 8,
     bands: int = 4,
-    hash_fn: str = "md5",
 ) -> DataFrame:
     """Near-dup candidates of a NEW batch against an existing corpus index
-    (from ``minhash_band_index``, SAME geometry): distinct
+    (from ``minhash_band_index``, SAME geometry: 3-shingles, md5): distinct
     ``(new_id, corpus_id)``. Only the increment is shingled/hashed; the
     join runs on (band, key) — equi-join, broadcastable when the increment
     is small relative to the corpus (Catalyst/AQE decides; the new side's
@@ -267,7 +265,7 @@ def incremental_near_dups(
     ``minhash_candidate_pairs`` on the increment itself, then append the
     increment's band table to the index for the next cycle."""
     new_bands = minhash_band_index(
-        new_df, id_col, text_col, shingle_k, num_hashes, bands, hash_fn
+        new_df, id_col, text_col, 3, num_hashes, bands, "md5"
     )
     idx = index.select(
         F.col("id").alias("corpus_id"),
@@ -331,7 +329,6 @@ def verified_near_dup_pairs(
     df: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    shingle_k: int = 3,
     num_hashes: int = 8,
     bands: int = 4,
     threshold: float = 0.5,
@@ -358,7 +355,7 @@ def verified_near_dup_pairs(
     index never materializes shingle sets, and verification touches only
     the candidate neighborhood."""
     cands = checkpoint(_pairs_from_exploded_shingles(
-        _exploded_shingles(df, id_col, text_col, shingle_k),
+        _exploded_shingles(df, id_col, text_col, 3),
         num_hashes, bands, hash_fn,
     ))
     cand_ids = (
@@ -376,7 +373,7 @@ def verified_near_dup_pairs(
         cand_ids, df[id_col] == cand_ids["_vid"], "left_semi"
     ).select(
         F.col(id_col).alias("_vid"),
-        shingles_col(F.col(text_col), shingle_k).alias("_sh"),
+        shingles_col(F.col(text_col)).alias("_sh"),
     )
     joined = cands.join(
         sh.withColumnsRenamed({"_vid": "id_a", "_sh": "sh_a"}), "id_a"
@@ -395,24 +392,20 @@ def jaccard_pairs(
     df: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    shingle_k: int = 3,
-    threshold: float = 0.0,
 ) -> DataFrame:
-    """Exact pairwise Jaccard over distinct shingle sets — O(n²); intended
-    for LSH candidate verification or small slices."""
+    """Exact pairwise Jaccard over distinct 3-shingle sets, every pair —
+    O(n²); intended for LSH candidate verification or small slices."""
     s = df.select(
         F.col(id_col).alias("id"),
-        shingles_col(F.col(text_col), shingle_k).alias("sh"),
+        shingles_col(F.col(text_col)).alias("sh"),
     ).filter(F.size("sh") > 0)
     a = s.select(F.col("id").alias("id_a"), F.col("sh").alias("sh_a"))
     b = s.select(F.col("id").alias("id_b"), F.col("sh").alias("sh_b"))
     inter = F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
     union = (F.size("sh_a") + F.size("sh_b")).cast("double") - inter
     jac = F.round(inter / union, 6)
-    return (
-        a.join(b, F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b", jac.alias("jaccard"))
-        .filter(F.col("jaccard") >= threshold)
+    return a.join(b, F.col("id_a") < F.col("id_b")).select(
+        "id_a", "id_b", jac.alias("jaccard")
     )
 
 
@@ -425,14 +418,13 @@ def dedup_paragraphs(
     df: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    sep: str = "\n",
 ) -> DataFrame:
     """Corpus-wide paragraph-level exact dedup with document reassembly
     (the C4/RefinedWeb-style sub-document pass: a boilerplate paragraph
     repeated across thousands of pages is kept exactly once, in its
     first-occurring position).
 
-    Explode paragraphs (split on ``sep``, trimmed, empties dropped), keep
+    Explode paragraphs (split on newlines, trimmed, empties dropped), keep
     the first occurrence of each md5 digest corpus-wide (first = lowest
     (id, position) — deterministic), and reassemble each document from its
     surviving paragraphs in original order. Documents whose every
@@ -446,13 +438,11 @@ def dedup_paragraphs(
     compared to a partition), one groupBy(id) to reassemble. No cross
     products, no Python.
     """
-    import re as _re
-
     base = df.select(F.col(id_col).alias("_pid"), F.col(text_col).alias("_text"))
     paras = (
         base.select(
             "_pid",
-            F.posexplode(F.split("_text", _re.escape(sep))).alias("idx", "raw"),
+            F.posexplode(F.split("_text", "\n")).alias("idx", "raw"),
         )
         .select("_pid", "idx", F.trim("raw").alias("para"))
         .filter(F.col("para") != "")
@@ -470,7 +460,7 @@ def dedup_paragraphs(
                 F.array_sort(F.collect_list(F.struct("idx", "para"))),
                 lambda s: s["para"],
             ),
-            sep,
+            "\n",
         ).alias("deduped_text"),
         F.count("*").cast("long").alias("n_kept"),
     )
@@ -563,19 +553,15 @@ def near_dup_clusters(
     df: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    shingle_k: int = 3,
     num_hashes: int = 8,
     bands: int = 4,
-    hash_fn: str = "md5",
 ) -> DataFrame:
     """The corpus dedup DECISION: every document labeled with its near-dup
     cluster's canonical keep-id (its own id when unique). Composition:
     banded MinHash candidates → connected components → left join back so
     singletons label themselves. Downstream keeps ``id == component``."""
     pairs = minhash_candidate_pairs(
-        df, id_col=id_col, text_col=text_col,
-        shingle_k=shingle_k, num_hashes=num_hashes, bands=bands,
-        hash_fn=hash_fn,
+        df, id_col=id_col, text_col=text_col, num_hashes=num_hashes, bands=bands
     )
     comp = connected_components(pairs)
     return (
@@ -597,7 +583,6 @@ def latest_captures(
     df: DataFrame,
     id_col: str = "url",
     ts_col: str = "warc_ts",
-    tiebreak: Column | None = None,
 ) -> DataFrame:
     """One row per ``id_col``: the capture with the greatest ``ts_col``,
     plus ``n_captures`` (how many snapshots were collapsed).
@@ -605,10 +590,9 @@ def latest_captures(
     Common Crawl re-captures the same url across dumps; training corpora
     keep the newest snapshot (CCNet/RefinedWeb convention) BEFORE any
     content dedup, or identical re-captures inflate exact-dup groups and
-    per-host counts. Captures sharing the exact same timestamp need a
-    caller-supplied ``tiebreak`` column (e.g. ``F.md5("html")``) for a
-    deterministic pick; without one, equal-timestamp rows are chosen
-    arbitrarily (fine when such rows are byte-identical re-captures).
+    per-host counts. Among captures sharing the exact same timestamp one
+    is chosen arbitrarily (fine when such rows are byte-identical
+    re-captures).
 
     Scale shape: a single shuffle on the url key (row_number window +
     count over the same partition — one Exchange, both window functions
@@ -618,10 +602,7 @@ def latest_captures(
     from pyspark.sql.window import Window
 
     w = Window.partitionBy(id_col)
-    order_cols = [F.col(ts_col).desc()]
-    if tiebreak is not None:
-        order_cols.append(tiebreak)
-    ordered = w.orderBy(*order_cols)
+    ordered = w.orderBy(F.col(ts_col).desc())
     return (
         df.withColumn("_rn", F.row_number().over(ordered))
         .withColumn("n_captures", F.count("*").over(w).cast("long"))
@@ -775,10 +756,9 @@ def duplicate_ngram_fraction(
     df: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    n: int = 3,
 ) -> DataFrame:
     """Per-document exact-substring duplication signal: the fraction of
-    the document's DISTINCT word n-grams that also occur in at least one
+    the document's DISTINCT word 3-grams that also occur in at least one
     OTHER document. The scalable stand-in for suffix-array substring
     dedup (Lee et al. 2022): rather than rewriting documents around
     duplicated spans, it scores how much of each document is corpus-
@@ -786,7 +766,7 @@ def duplicate_ngram_fraction(
     other gate.
 
     Returns ``(id, n_grams, dup_grams, dup_frac)`` for EVERY input row
-    (documents shorter than ``n`` tokens report 0 grams, fraction 0.0).
+    (documents shorter than 3 tokens report 0 grams, fraction 0.0).
 
     Scale shape: one explode of per-doc-distinct grams, one count agg on
     the gram digest, one join back on the same key, one per-doc agg —
@@ -795,7 +775,7 @@ def duplicate_ngram_fraction(
     """
     grams = df.select(
         F.col(id_col).alias("_gid"),
-        F.explode(shingles_col(F.col(text_col), n)).alias("s"),
+        F.explode(shingles_col(F.col(text_col))).alias("s"),
     ).withColumn("_dig", F.md5("s")).drop("s")
     counts = grams.groupBy("_dig").agg(F.count("*").alias("_docs"))
     per_doc = (
@@ -980,10 +960,9 @@ def containment_pairs(
     df: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    shingle_k: int = 3,
     threshold: float = 0.5,
 ) -> DataFrame:
-    """Directed shingle containment c(A->B) = |A ∩ B| / |A| (Broder 1997's
+    """Directed 3-shingle containment c(A->B) = |A ∩ B| / |A| (Broder 1997's
     containment, the asymmetric companion of resemblance/Jaccard): how much
     of document A's shingle set appears inside B. A short quote wholly
     embedded in a long page scores c ≈ 1.0 while its Jaccard is tiny —
@@ -1002,7 +981,7 @@ def containment_pairs(
     """
     s = df.select(
         F.col(id_col).alias("id"),
-        shingles_col(F.col(text_col), shingle_k).alias("sh"),
+        shingles_col(F.col(text_col)).alias("sh"),
     ).filter(F.size("sh") > 0)
     a = s.select(F.col("id").alias("id_a"), F.col("sh").alias("sh_a"))
     b = s.select(F.col("id").alias("id_b"), F.col("sh").alias("sh_b"))

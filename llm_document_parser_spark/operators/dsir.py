@@ -54,10 +54,9 @@ def token_log_ratios(
     target: DataFrame,
     text_col: str = "text",
     target_text_col: str | None = None,
-    smoothing_k: float = 1.0,
 ) -> DataFrame:
     """(token, log_ratio) over the union vocabulary of both corpora:
-    ``ln p_target − ln p_raw`` with add-k smoothed counts,
+    ``ln p_target − ln p_raw`` with add-k smoothed counts (k = 1),
     ``p(tok) = (c + k) / (total + k·V)``. Smoothing guarantees a finite
     ratio for every union-vocab token; scoring a corpus disjoint from
     both (not the DSIR setting) would need an OOV coalesce caller-side."""
@@ -78,7 +77,7 @@ def token_log_ratios(
         F.sum("c_tgt").alias("t_tgt"),
         F.count("*").cast("double").alias("v"),
     )
-    k = float(smoothing_k)
+    k = 1.0
     return vocab.crossJoin(F.broadcast(totals)).select(
         "token",
         (
@@ -94,20 +93,15 @@ def importance_weights(
     id_col: str = "doc_id",
     text_col: str = "text",
     target_text_col: str | None = None,
-    smoothing_k: float = 1.0,
-    broadcast_ratios: bool = True,
 ) -> DataFrame:
-    """(id, n_tokens, logw) per document: the summed unigram log-ratio of
-    target vs raw likelihood. ``docs`` is both the raw corpus and the
-    scored set (the DSIR setting); positive logw = more target-like.
-    Every doc token is in the union vocab by construction, so the join
-    is inner and total n_tokens is exact."""
-    ratios = token_log_ratios(
-        docs, target, text_col=text_col, target_text_col=target_text_col,
-        smoothing_k=smoothing_k,
-    )
-    if broadcast_ratios:
-        ratios = F.broadcast(ratios)
+    """(id, n_tokens, logw) per document: the summed add-1 smoothed
+    unigram log-ratio of target vs raw likelihood. ``docs`` is both the
+    raw corpus and the scored set (the DSIR setting); positive logw =
+    more target-like. Every doc token is in the union vocab by
+    construction, so the join is inner and total n_tokens is exact."""
+    ratios = F.broadcast(token_log_ratios(
+        docs, target, text_col=text_col, target_text_col=target_text_col
+    ))
     toks = (
         docs.select(
             F.col(id_col), F.explode(tokens_col(F.col(text_col))).alias("token")
@@ -120,15 +114,15 @@ def importance_weights(
     )
 
 
-def _hash_unit(col: Column, digits: int = 6) -> Column:
-    """Deterministic u ∈ (0,1) from the md5 hex of a column — computed
-    digit-by-digit (strpos arithmetic), so the SAME value is reproducible
-    in any engine with md5 + substring, with no hex-cast or RNG builtins.
-    Adds 16^-(digits+1) so u is never exactly 0."""
+def _hash_unit(col: Column) -> Column:
+    """Deterministic u ∈ (0,1) from the first 6 md5 hex digits of a
+    column — computed digit-by-digit (strpos arithmetic), so the SAME
+    value is reproducible in any engine with md5 + substring, with no
+    hex-cast or RNG builtins. Adds 16^-7 so u is never exactly 0."""
     hexd = F.lit("0123456789abcdef")
     h = F.md5(col.cast("string"))
-    u: Column = F.lit(16.0 ** -(digits + 1))
-    for i in range(1, digits + 1):
+    u: Column = F.lit(16.0 ** -7)
+    for i in range(1, 7):
         digit = F.position(F.substring(h, i, 1), hexd) - F.lit(1)
         u = u + digit.cast("double") * F.lit(16.0 ** -i)
     return u

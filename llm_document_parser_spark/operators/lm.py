@@ -15,11 +15,10 @@ Two stages:
   ``(token, logp)`` with ``logp = ln(count/total)``. The total arrives by
   broadcast cross-join of the 1-row sum — no second shuffle, no collect.
 * ``score_unigram_logprob``: explode + join tokens→lm + per-doc agg.
-  The lm table is BROADCAST by default: a capped vocabulary fits in
-  executor memory (``vocab_limit`` keeps the top-K tokens; everything
-  else scores at a floor), so the scoring pass is map-side only — the
-  token join would otherwise shuffle on Zipf-skewed keys ('the'
-  dominates), the classic skew trap at 10^12 rows.
+  The lm table is BROADCAST: a corpus vocabulary fits in executor
+  memory, so the scoring pass is map-side only — the token join would
+  otherwise shuffle on Zipf-skewed keys ('the' dominates), the classic
+  skew trap at 10^12 rows.
 
 Determinism: integer counts → one ln per vocab row → avg of doubles;
 round(6) absorbs libm-ulp and summation-order noise (same policy as
@@ -60,27 +59,15 @@ def score_unigram_logprob(
     lm: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    broadcast_lm: bool = True,
-    floor_logp: float | None = None,
 ) -> DataFrame:
     """Per-document mean negative log-probability under ``lm``:
     ``(id, n_tokens, avg_neg_logp)``. Lower = more typical of the corpus.
-
-    ``floor_logp`` scores out-of-vocabulary tokens (left join + coalesce)
-    — required when the lm was trained elsewhere or capped with
-    ``vocab_limit``; None keeps the inner join (every token in-vocab,
-    the self-scoring case)."""
-    toks = _doc_tokens(df, id_col, text_col)
-    lm_side = F.broadcast(lm) if broadcast_lm else lm
-    if floor_logp is None:
-        joined = toks.join(lm_side, "token")
-        logp = F.col("logp")
-    else:
-        joined = toks.join(lm_side, "token", "left")
-        logp = F.coalesce(F.col("logp"), F.lit(float(floor_logp)))
+    The join is inner, the self-scoring case (every token in-vocab):
+    out-of-vocabulary tokens drop out of both the count and the mean."""
+    joined = _doc_tokens(df, id_col, text_col).join(F.broadcast(lm), "token")
     return joined.groupBy(id_col).agg(
         F.count("*").cast("long").alias("n_tokens"),
-        F.round(F.avg(-logp), 6).alias("avg_neg_logp"),
+        F.round(F.avg(-F.col("logp")), 6).alias("avg_neg_logp"),
     )
 
 
@@ -132,7 +119,6 @@ def score_interpolated_logprob(
     text_col: str = "text",
     lam: float = 0.9,
     floor_p: float = 1e-9,
-    broadcast_lm: bool = True,
 ) -> DataFrame:
     """Per-document mean negative log-probability under the interpolated
     model ``p = lam * P(w2|w1) + (1-lam) * P(w2)`` — the CCNet scoring
@@ -146,8 +132,7 @@ def score_interpolated_logprob(
     probability mass only from the unigram term; unseen unigrams fall to
     ``floor_p``."""
     pairs = _pairs(df, id_col, text_col)
-    big = F.broadcast(bigram_lm) if broadcast_lm else bigram_lm
-    uni = F.broadcast(unigram_lm) if broadcast_lm else unigram_lm
+    big, uni = F.broadcast(bigram_lm), F.broadcast(unigram_lm)
     p_big = F.coalesce(F.exp(F.col("logp")), F.lit(0.0))
     p_uni = F.coalesce(F.exp(F.col("u_logp")), F.lit(float(floor_p)))
     scored = (
@@ -171,10 +156,9 @@ def perplexity_buckets(
     id_col: str = "doc_id",
     lang_col: str = "lang",
     score_col: str = "avg_neg_logp",
-    n_buckets: int = 3,
 ) -> DataFrame:
     """CCNet's head/middle/tail split: within each language, rank documents
-    by LM score and cut into ``n_buckets`` equal tiles (1 = most fluent).
+    by LM score and cut into 3 equal tiles (1 = most fluent).
     One window per language partition — languages are the parallelism
     unit, exactly how CCNet shards the corpus. Deterministic tie-break on
     the id keeps the tiling stable across engines and runs."""
@@ -185,14 +169,8 @@ def perplexity_buckets(
         Window.partitionBy(lang_col)
         .orderBy(F.col(score_col), F.col(id_col).cast("string"))
     )
-    tile = F.ntile(n_buckets).over(w)
-    label = (
-        F.when(tile == 1, "head")
-        .when(tile == n_buckets, "tail")
-        .otherwise("middle")
-        if n_buckets == 3
-        else tile.cast("string")
-    )
+    tile = F.ntile(3).over(w)
+    label = F.when(tile == 1, "head").when(tile == 3, "tail").otherwise("middle")
     return labeled.select(
         id_col,
         lang_col,

@@ -14,25 +14,19 @@ from pyspark.sql import functions as F
 
 def dhash_near_dup_pairs(
     hashes: DataFrame,
-    max_hamming: int = 3,
     id_col: str = "url",
     hash_col: str = "dhash",
 ) -> DataFrame:
-    """(id_a, id_b, hamming) pairs with Hamming distance <= ``max_hamming``.
+    """(id_a, id_b, hamming) pairs with Hamming distance <= 3.
 
     Banded exact matching: the 64-bit hash splits into 4 16-bit bands;
     a pair within Hamming distance d < 4 differs in at most d bands, so
     it MATCHES on >= 4-d >= 1 band — the band equi-join is a complete
-    candidate generator for ``max_hamming`` <= 3 (raise bands for looser
-    thresholds). Verification is one native bit_count(xor). Scale shape:
+    candidate generator for distance <= 3 (looser thresholds need more
+    bands). Verification is one native bit_count(xor). Scale shape:
     explode x4 -> shuffle on (band, key) -> bucket self-join -> distinct,
     identical geometry to the MinHash LSH path; no Python, no cross
     product."""
-    if max_hamming > 3:
-        raise ValueError(
-            "4-band matching is only complete for max_hamming <= 3; "
-            "split into more bands for looser thresholds"
-        )
     h = hashes.filter(F.col(hash_col).isNotNull()).select(
         F.col(id_col).alias("id"), F.col(hash_col).alias("h")
     )
@@ -68,6 +62,6 @@ def dhash_near_dup_pairs(
             "hamming",
             F.bit_count(F.col("h_a").bitwiseXOR(F.col("h_b"))).cast("long"),
         )
-        .filter(F.col("hamming") <= max_hamming)
+        .filter(F.col("hamming") <= 3)
         .select("id_a", "id_b", "hamming")
     )

@@ -168,7 +168,6 @@ def spacy_entities_stage(
     text_col: str = "extracted_text",
     out_col: str = "entities",
     model: str = "en_core_web_sm",
-    batch_size: int = 64,
     nlp_factory: Callable[[], object] | None = None,
 ) -> DataFrame:
     """Real-NER path (reference: src/document_parser.py:443-460) as ONE
@@ -200,7 +199,7 @@ def spacy_entities_stage(
         for pdf in batches:
             texts = pdf[text_col].fillna("").tolist()
             ents_col = []
-            for doc in nlp.pipe(texts, batch_size=batch_size):
+            for doc in nlp.pipe(texts, batch_size=64):
                 ents: dict[str, list[str]] = {lbl: [] for lbl in labels}
                 for ent in doc.ents:
                     label = ent.label_

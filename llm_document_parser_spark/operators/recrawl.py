@@ -30,14 +30,17 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 
+# revisit-gap clamp, and the gap given to a single-capture url
+MIN_SECS = 3600
+MAX_SECS = 30 * 86400
+DEFAULT_SECS = 86400
+
+
 def recrawl_schedule(
     caps: DataFrame,
     url_col: str = "url",
     ts_col: str = "ts",
     digest_col: str = "digest",
-    min_secs: int = 3600,
-    max_secs: int = 30 * 86400,
-    default_secs: int = 86400,
 ) -> DataFrame:
     """Per-url revisit plan from a capture log.
 
@@ -48,8 +51,8 @@ def recrawl_schedule(
     * ``change_rate`` — changes / intervals, 6dp (null when single-capture),
     * ``avg_gap_secs`` — observed mean inter-capture gap (integer div),
     * ``next_gap_secs`` — the schedule: ``span // (2 * changes)`` (revisit
-      twice per expected change) clamped to [min_secs, max_secs]; 4× the
-      observed gap (capped) when the page never changed; ``default_secs``
+      twice per expected change) clamped to [MIN_SECS, MAX_SECS]; 4× the
+      observed gap (capped) when the page never changed; ``DEFAULT_SECS``
       for single-capture urls,
     * ``next_fetch_ts`` — last capture ts + next_gap_secs.
     """
@@ -73,18 +76,18 @@ def recrawl_schedule(
         intervals > 0, F.expr("span_secs div (n_caps - 1)")
     ).cast("long")
     raw_gap = (
-        F.when(intervals == 0, F.lit(default_secs))
+        F.when(intervals == 0, F.lit(DEFAULT_SECS))
         .when(
             F.col("changes") == 0,
-            F.least(avg_gap * 4, F.lit(max_secs).cast("long")),
+            F.least(avg_gap * 4, F.lit(MAX_SECS).cast("long")),
         )
         .otherwise(
             F.greatest(
                 F.least(
                     F.expr("span_secs div (2 * changes)"),
-                    F.lit(max_secs).cast("long"),
+                    F.lit(MAX_SECS).cast("long"),
                 ),
-                F.lit(min_secs).cast("long"),
+                F.lit(MIN_SECS).cast("long"),
             )
         )
     )

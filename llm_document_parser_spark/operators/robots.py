@@ -114,7 +114,6 @@ def robots_allowed(
     rules: DataFrame,
     agent: str = "*",
     url_col: str = "url",
-    broadcast_rules: bool = True,
     wildcards: bool = False,
 ) -> DataFrame:
     """Append ``host`` and boolean ``allowed`` to ``urls`` under the
@@ -127,8 +126,7 @@ def robots_allowed(
     )
     if wildcards:
         r = r.withColumn("_rx", wildcard_regex(F.col("prefix")))
-    if broadcast_rules:
-        r = F.broadcast(r)
+    r = F.broadcast(r)
     # verdicts are computed over the slim DISTINCT url projection and
     # joined back — wide document rows never ride through the rule join,
     # and the join itself is a plain host-equi hash join (the prefix test
@@ -200,20 +198,19 @@ def crawl_delays(
     df: DataFrame,
     host_col: str = "host",
     body_col: str = "body",
-    default_delay: int = 1,
 ) -> DataFrame:
     """(host, delay_secs) from robots.txt — the FIRST ``Crawl-delay:``
     value in the file (global reading: the politeness scheduler applies
     one cadence per host regardless of which agent group declared it —
-    the conservative interpretation), ``default_delay`` when absent or
-    non-numeric. Pure regexp_extract, no shuffle."""
+    the conservative interpretation), 1 when absent or non-numeric. Pure
+    regexp_extract, no shuffle."""
     raw = F.regexp_extract(
         F.col(body_col), r"(?im)^[ \t]*crawl-delay[ \t]*:[ \t]*(\d+)", 1
     )
     return df.select(
         F.col(host_col).alias("host"),
         F.when(raw != "", raw.cast("long"))
-        .otherwise(F.lit(default_delay).cast("long"))
+        .otherwise(F.lit(1).cast("long"))
         .alias("delay_secs"),
     )
 

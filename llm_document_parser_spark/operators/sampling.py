@@ -33,7 +33,6 @@ def sample_to_token_budget(
     id_col: str = "doc_id",
     text_col: str = "text",
     tokens_col: Column | None = None,
-    global_shards: int = 1,
 ) -> DataFrame:
     """Keep a deterministic ~``budget_tokens``-token sample per group
     (whole corpus when ``group_col`` is None). Adds ``ws_tokens`` and
@@ -44,37 +43,14 @@ def sample_to_token_budget(
     exact-BPE count column) — the default is the portable whitespace
     count, matching ``curation_funnel.kept_tokens``.
 
-    Scale note: an UNGROUPED budget with ``global_shards=1`` is a
-    single-partition window — exact, but serial; fine up to ~10^8 rows,
-    wrong at 10^12. Set ``global_shards=K`` (256 is a good default at
-    corpus scale) to split the corpus into K deterministic md5 shards
-    with ``budget/K`` each: fully parallel, same unbiased hash order,
-    and the only error is ≤1 straddler document per shard (the budget is
-    met to within K documents, still deterministic). Grouped budgets
-    parallelize across groups already and ignore ``global_shards``.
+    Scale note: an UNGROUPED budget is a single-partition window — exact,
+    but serial; fine up to ~10^8 rows. Grouped budgets parallelize across
+    groups.
     """
     toks = tokens_col if tokens_col is not None else token_count(F.col(text_col))
-    budget: float = float(budget_tokens)
-    shard_col = None
-    if group_col is None and global_shards > 1:
-        # md5-derived shard — portable (same bytes feed the order key),
-        # independent of the ORDER position within the shard (different
-        # substring of the digest)
-        shard_col = F.conv(
-            F.substring(F.md5(F.col(id_col).cast("string")), 29, 4), 16, 10
-        ).cast("long") % global_shards
-        budget = budget / global_shards
-    if group_col is not None:
-        part = Window.partitionBy(group_col)
-    elif shard_col is not None:
-        part = Window.partitionBy("_budget_shard")
-    else:
-        part = Window.partitionBy()
+    part = Window.partitionBy(group_col) if group_col is not None else Window.partitionBy()
     order = part.orderBy(F.md5(F.col(id_col).cast("string")), F.col(id_col))
-    with_cum = docs
-    if shard_col is not None:
-        with_cum = with_cum.withColumn("_budget_shard", shard_col)
-    with_cum = with_cum.withColumn("ws_tokens", toks).withColumn(
+    with_cum = docs.withColumn("ws_tokens", toks).withColumn(
         "cum_tokens",
         F.sum("ws_tokens").over(
             order.rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -83,8 +59,9 @@ def sample_to_token_budget(
     # keep rows fully inside the budget, plus the first straddler:
     # cum - ws < budget ⇔ the budget was not yet exhausted when this row
     # started, so it is taken (possibly overshooting once per group)
-    out = with_cum.filter(F.col("cum_tokens") - F.col("ws_tokens") < budget)
-    return out.drop("_budget_shard") if shard_col is not None else out
+    return with_cum.filter(
+        F.col("cum_tokens") - F.col("ws_tokens") < float(budget_tokens)
+    )
 
 
 def cap_per_group(
@@ -116,7 +93,6 @@ def assign_token_shards(
     id_col: str = "doc_id",
     text_col: str = "text",
     tokens_col: Column | None = None,
-    num_buckets: int = 256,
 ) -> DataFrame:
     """Assign every document a ``shard_id`` such that consecutive shards
     (in the deterministic md5-of-id order) each hold ~``shard_tokens``
@@ -142,13 +118,10 @@ def assign_token_shards(
     """
     toks = tokens_col if tokens_col is not None else token_count(F.col(text_col))
     ordk = F.md5(F.col(id_col).cast("string"))
-    if num_buckets not in (16, 256, 4096):
-        raise ValueError("num_buckets must be a power-of-16 prefix: 16/256/4096")
-    prefix_len = {16: 1, 256: 2, 4096: 3}[num_buckets]
     d = (
         docs.withColumn("ws_tokens", toks)
         .withColumn("_ord", ordk)
-        .withColumn("_bkt", F.substring(ordk, 1, prefix_len))
+        .withColumn("_bkt", F.substring(ordk, 1, 2))
     )
     bucket_offsets = (
         d.groupBy("_bkt")
@@ -235,15 +208,12 @@ def domain_temperature_sample(
     ).select(id_col, group_col, "dom_rank")
 
 
+SPLIT_FRACTIONS = (("train", 0.9), ("val", 0.05), ("test", 0.05))
+
+
 def leakage_safe_split(
     df: DataFrame,
     host_col: str = "host",
-    fractions: tuple[tuple[str, float], ...] = (
-        ("train", 0.9),
-        ("val", 0.05),
-        ("test", 0.05),
-    ),
-    salt: str = "",
     out_col: str = "split",
 ) -> DataFrame:
     """Train/val/test assignment with NO domain leakage: every document of
@@ -255,9 +225,9 @@ def leakage_safe_split(
     (urls.with_registrable_domain; hosts that resolve to NULL — bare
     labels, IPs, public suffixes themselves — fall back to the raw host
     so they still group consistently). Assignment is a deterministic hash,
-    not an RNG: bucket = first 4 md5 hex digits of (salt + key) / 65536,
-    mapped onto the cumulative ``fractions`` boundaries — stable across
-    runs, engines and cluster sizes, re-saltable for a fresh split.
+    not an RNG: bucket = first 4 md5 hex digits of the key / 65536, mapped
+    onto the cumulative ``SPLIT_FRACTIONS`` boundaries — stable across
+    runs, engines and cluster sizes.
 
     Scale shape: domain resolution is the existing distinct-host join
     (bounded by |hosts|, not |docs|); the split itself is pure
@@ -265,25 +235,18 @@ def leakage_safe_split(
     over DOMAINS (not documents: one huge domain lands wholly in one
     split by design — that is the point).
     """
-    total = sum(f for _, f in fractions)
-    if abs(total - 1.0) > 1e-9:
-        raise ValueError(f"fractions must sum to 1, got {total}")
     from .urls import with_registrable_domain
 
     out = with_registrable_domain(df, host_col=host_col)
     key = F.coalesce(F.col("registrable_domain"), F.col(host_col))
-    bucket = F.conv(
-        F.substring(F.md5(F.concat(F.lit(salt), key)), 1, 4), 16, 10
-    ).cast("int")
+    bucket = F.conv(F.substring(F.md5(key), 1, 4), 16, 10).cast("int")
     expr = None
     cum = 0.0
-    for name, frac in fractions[:-1]:
+    for name, frac in SPLIT_FRACTIONS[:-1]:
         cum += frac
         cond = bucket < int(round(cum * 65536))
         expr = F.when(cond, name) if expr is None else expr.when(cond, name)
-    last = fractions[-1][0]
-    expr = F.lit(last) if expr is None else expr.otherwise(last)
-    return out.withColumn(out_col, expr)
+    return out.withColumn(out_col, expr.otherwise(SPLIT_FRACTIONS[-1][0]))
 
 
 def weighted_sample(
@@ -291,7 +254,6 @@ def weighted_sample(
     k: int,
     weight_col: str,
     id_col: str = "doc_id",
-    salt: str = "",
 ) -> DataFrame:
     """Weighted sampling WITHOUT replacement in one pass
     (Efraimidis-Spirakis 2006): each row gets key = u**(1/w) with u an
@@ -301,9 +263,8 @@ def weighted_sample(
 
     The standard reservoir generalization for "sample 10M docs
     proportional to token count" over a corpus too large to draw from
-    sequentially. Deterministic: u is a hash, not an RNG (same
-    salt → same sample; vary ``salt`` per epoch), the same trick as
-    leakage_safe_split's bucket hash.
+    sequentially. Deterministic: u is a hash, not an RNG, the same trick
+    as leakage_safe_split's bucket hash.
 
     Scale shape: one narrow map (hash + pow) and a top-k — Spark plans
     orderBy().limit(k) as TakeOrderedAndProject, a per-partition heap +
@@ -312,7 +273,7 @@ def weighted_sample(
     """
     idc = F.col(id_col).cast("string")
     u = (
-        F.conv(F.substring(F.md5(F.concat(F.lit(salt), idc)), 1, 8), 16, 10)
+        F.conv(F.substring(F.md5(idc), 1, 8), 16, 10)
         .cast("double")
         + 0.5
     ) / F.lit(4294967296.0)

@@ -61,10 +61,8 @@ def build_token_index(
     """O2 — the inverted token index: (token, doc_id, tf) posting rows.
 
     The Spark-native analog of Mongo's text_search_index (reference:
-    src/search_engine.py:50-54): explode tokens → one groupBy. At corpus
-    scale this table is materialized once and written partitioned/bucketed
-    by token, so a query's `token IN (...)` filter prunes to the handful of
-    posting partitions it touches instead of scanning documents."""
+    src/search_engine.py:50-54): explode tokens → one groupBy, built inline
+    by each search operator."""
     # explode the raw split and apply the analyzer predicate as a ROW
     # filter (whole-stage codegen) rather than exploding the interpreted
     # tokenize_col HOF — identical token multiset, no per-element
@@ -88,18 +86,13 @@ def quick_search(
     limit: int = 10,
     id_col: str = "url",
     text_col: str = "extracted_text",
-    index: DataFrame | None = None,
-    snippet_chars: int = 100,
 ) -> DataFrame:
     """O2 — quick_search (reference: src/search_engine.py:365-410): OR-match
     the query terms against the token index, score = Σ tf over matched terms
     (the textScore analog), top-``limit`` with deterministic url tie-break,
-    then a broadcast join back to the corpus for display fields.
-
-    Pass a pre-built ``index`` in production; building it inline is the
-    small-corpus convenience path."""
-    if index is None:
-        index = build_token_index(results, id_col=id_col, text_col=text_col)
+    then a broadcast join back to the corpus for display fields (a
+    100-char snippet)."""
+    index = build_token_index(results, id_col=id_col, text_col=text_col)
     terms = tokenize_query(query)
     if not terms:
         terms = ["--no-terms--"]  # tokens are [a-z0-9]+, can never equal this
@@ -113,8 +106,8 @@ def quick_search(
     )
     top = scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(limit)
     snippet = F.when(
-        F.length(text_col) > snippet_chars,
-        F.concat(F.substring(text_col, 1, snippet_chars), F.lit("...")),
+        F.length(text_col) > 100,
+        F.concat(F.substring(text_col, 1, 100), F.lit("...")),
     ).otherwise(F.col(text_col))
     display = results.select(
         F.col(id_col).alias("doc_id"),
@@ -227,15 +220,15 @@ def date_range(results: DataFrame) -> DataFrame:
     )
 
 
+BM25_K1, BM25_B = 1.2, 0.75  # the Lucene/Elasticsearch defaults
+
+
 def bm25_scores(
     df: DataFrame,
     query: str,
     k: int | None = None,
-    k1: float = 1.2,
-    b: float = 0.75,
     id_col: str = "url",
     text_col: str = "extracted_text",
-    index: DataFrame | None = None,
 ) -> DataFrame:
     """Okapi BM25 ranked retrieval over the inverted token index — the
     length-normalized upgrade of ``quick_search``'s raw-tf scoring (the
@@ -249,32 +242,26 @@ def bm25_scores(
     idf = ln(1 + (N - df + 0.5)/(df + 0.5))  (Lucene's non-negative form)
     w   = idf · tf·(k1+1) / (tf + k1·(1 - b + b·dl/avgdl))
 
-    Scale shape: doc lengths are one groupBy of the index (or reuse a
-    materialized lengths table); (N, avgdl) is a broadcast 1-row corpus
-    aggregate; per-term document frequencies are a broadcast agg of the
-    term-pruned postings only. The corpus-wide work is index construction
-    — scoring touches only the query terms' posting lists, exactly the
-    partitions a token-partitioned index layout prunes to.
+    Scale shape: doc lengths are one narrow projection of the text;
+    (N, avgdl) is a broadcast 1-row corpus aggregate; per-term document
+    frequencies are a broadcast agg of the term-pruned postings only. The
+    corpus-wide work is index construction — scoring touches only the
+    query terms' posting lists.
     """
     terms = tokenize_query(query)
     if not terms:
         terms = ["--no-terms--"]  # analyzer tokens are [a-z0-9]+; never equal
-    if index is None:
-        index = build_token_index(df, id_col=id_col, text_col=text_col)
-        # doc length = analyzer-token count, computed NARROWLY from the
-        # text (size of the filtered token array per row) instead of
-        # re-aggregating the posting index — sum(tf) per doc and the
-        # array size are the same number by construction, and this
-        # removes the second full-corpus explode+groupBy pass
-        dl = df.select(
-            F.col(id_col).alias("doc_id"),
-            F.size(tokenize_col(F.col(text_col))).cast("long").alias("dl"),
-        ).filter(F.col("dl") > 0)  # index-absent (token-less) docs carry
-        # no posting rows, so they must not count toward N or avgdl
-    else:
-        # a caller-supplied index may use a different analyzer — derive
-        # lengths from the index itself, as before
-        dl = index.groupBy("doc_id").agg(F.sum("tf").alias("dl"))
+    index = build_token_index(df, id_col=id_col, text_col=text_col)
+    # doc length = analyzer-token count, computed NARROWLY from the text
+    # (size of the filtered token array per row) instead of re-aggregating
+    # the posting index — sum(tf) per doc and the array size are the same
+    # number by construction, and this removes the second full-corpus
+    # explode+groupBy pass
+    dl = df.select(
+        F.col(id_col).alias("doc_id"),
+        F.size(tokenize_col(F.col(text_col))).cast("long").alias("dl"),
+    ).filter(F.col("dl") > 0)  # index-absent (token-less) docs carry
+    # no posting rows, so they must not count toward N or avgdl
     corpus = dl.agg(
         F.count("*").alias("n_docs_total"), F.avg("dl").alias("avgdl")
     )
@@ -297,10 +284,10 @@ def bm25_scores(
         .withColumn(
             "_w",
             F.col("_idf")
-            * (F.col("tf") * (k1 + 1.0))
+            * (F.col("tf") * (BM25_K1 + 1.0))
             / (
                 F.col("tf")
-                + k1 * (1.0 - b + b * F.col("dl") / F.col("avgdl"))
+                + BM25_K1 * (1.0 - BM25_B + BM25_B * F.col("dl") / F.col("avgdl"))
             ),
         )
         .groupBy("doc_id")
@@ -349,10 +336,8 @@ def _phrase_occurrences(toks: Column, phrase: list[str]) -> Column:
 def phrase_search(
     df: DataFrame,
     query: str,
-    limit: int | None = None,
     id_col: str = "url",
     text_col: str = "extracted_text",
-    index: DataFrame | None = None,
 ) -> DataFrame:
     """Full Mongo ``$text`` query semantics over the corpus — the part of
     the reference's search surface ``quick_search``/``bm25_scores`` don't
@@ -377,12 +362,10 @@ def phrase_search(
     contiguity verify (Mongo's own index-then-verify strategy). Every join
     keys on doc_id; phrase verification is HOF-only.
 
-    Returns ``(doc_id, score, n_phrase_hits)`` ordered by score desc,
-    doc_id asc; ``limit=None`` returns all matches (the oracle-stable
-    configuration).
+    Returns every match as ``(doc_id, score, n_phrase_hits)`` ordered by
+    score desc, doc_id asc.
     """
-    if index is None:
-        index = build_token_index(df, id_col=id_col, text_col=text_col)
+    index = build_token_index(df, id_col=id_col, text_col=text_col)
     loose, phrases, negated = parse_text_query(query)
 
     toks_needed = sorted(
@@ -468,9 +451,8 @@ def phrase_search(
         scored = scored.join(loose_scores, "doc_id", "left")
     else:
         scored = scored.withColumn("loose_score", F.lit(None).cast("long"))
-    out = scored.select(
+    return scored.select(
         "doc_id",
         (F.col("_ps") + F.coalesce("loose_score", F.lit(0))).alias("score"),
         "n_phrase_hits",
     ).orderBy(F.desc("score"), F.asc("doc_id"))
-    return out.limit(limit) if limit is not None else out

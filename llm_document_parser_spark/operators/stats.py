@@ -102,27 +102,25 @@ def with_derived(stats: DataFrame) -> DataFrame:
 N_LOG_BINS = 40  # 2^40 covers any practical length/size column
 
 
-def logbin_of(value, n_bins: int = N_LOG_BINS):
+def logbin_of(value):
     """floor(log2(value+1)) via chained integer comparisons (exact;
     negative values clamp to bin 0)."""
     v = value + F.lit(1).cast("long")
     b = F.lit(0)
-    for k in range(1, n_bins):
+    for k in range(1, N_LOG_BINS):
         b = b + (v >= F.lit(2 ** k)).cast("int")
     return b
 
 
-def value_histogram(
-    df: DataFrame, group_col: str, value_col: str, n_bins: int = N_LOG_BINS
-) -> DataFrame:
+def value_histogram(df: DataFrame, group_col: str, value_col: str) -> DataFrame:
     """Per-(group, bin) monoid rows: (group, bin, cnt, mn, mx). One
-    map-side-combining aggregation; at most ``n_bins`` rows per group
+    map-side-combining aggregation; at most ``N_LOG_BINS`` rows per group
     regardless of corpus size."""
     v = F.col(value_col).cast("long")
     return (
         df.select(
             F.col(group_col).alias("group"),
-            logbin_of(v, n_bins).alias("bin"),
+            logbin_of(v).alias("bin"),
             v.alias("v"),
         )
         .groupBy("group", "bin")

@@ -108,18 +108,11 @@ def gopher_quality(
     id_col: str = "doc_id",
     text_col: str = "text",
     min_words: int = 50,
-    max_words: int = 100_000,
-    min_mean_word: float = 3.0,
-    max_mean_word: float = 10.0,
-    max_symbol_ratio: float = 0.1,
-    max_bullet_frac: float = 0.9,
-    max_ellipsis_frac: float = 0.3,
-    min_alpha_word_frac: float = 0.8,
-    min_stopword_hits: int = 2,
 ) -> DataFrame:
     """Per-document Gopher rule metrics + the combined ``passes`` verdict.
-    Thresholds default to the paper's; callers tune per corpus. Fractions
-    round(6) for cross-engine comparison (same policy as quality_score)."""
+    Thresholds are the paper's; callers tune ``min_words`` per corpus.
+    Fractions round(6) for cross-engine comparison (same policy as
+    quality_score)."""
     t = F.col(text_col)
     words = F.filter(F.split(t, r"\s+"), lambda x: x != "")
     n_words = F.size(words).cast("long")
@@ -193,14 +186,14 @@ def gopher_quality(
     )
     passes = (
         (F.col("n_words") >= min_words)
-        & (F.col("n_words") <= max_words)
-        & (F.col("mean_word_len") >= min_mean_word)
-        & (F.col("mean_word_len") <= max_mean_word)
-        & (F.col("symbol_word_ratio") <= max_symbol_ratio)
-        & (F.col("bullet_line_frac") <= max_bullet_frac)
-        & (F.col("ellipsis_line_frac") <= max_ellipsis_frac)
-        & (F.col("alpha_word_frac") >= min_alpha_word_frac)
-        & (F.col("stopword_hits") >= min_stopword_hits)
+        & (F.col("n_words") <= 100_000)
+        & (F.col("mean_word_len") >= 3.0)
+        & (F.col("mean_word_len") <= 10.0)
+        & (F.col("symbol_word_ratio") <= 0.1)
+        & (F.col("bullet_line_frac") <= 0.9)
+        & (F.col("ellipsis_line_frac") <= 0.3)
+        & (F.col("alpha_word_frac") >= 0.8)
+        & (F.col("stopword_hits") >= 2)
     )
     return out.withColumn("passes", passes)
 
@@ -366,13 +359,14 @@ def repetition_stats(
     )
 
 
-def zipf_fit(
-    df: DataFrame, text_col: str = "text", top_n: int = 500
-) -> DataFrame:
+ZIPF_TOP_N = 500
+
+
+def zipf_fit(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Corpus-level Zipf rank-frequency fit — one summary row:
 
     ``n_types``, ``n_tokens``, ``zipf_slope`` / ``zipf_intercept`` /
-    ``zipf_r2`` (OLS of ln(freq) on ln(rank) over the ``top_n`` most
+    ``zipf_r2`` (OLS of ln(freq) on ln(rank) over the ``ZIPF_TOP_N`` most
     frequent types), and ``top_coverage`` (token share of those types).
 
     Natural text follows slope ≈ -1 with high r²; machine-generated spam,
@@ -385,9 +379,9 @@ def zipf_fit(
 
     Scale shape: explode → ONE token-keyed count shuffle → top-N via
     orderBy+limit (TakeOrdered: per-partition heaps, no global sort) →
-    rank window and regression over ``top_n`` rows (bounded by the
-    parameter, NOT the corpus — the single-partition window holds ≤top_n
-    rows by construction) → one-row cross joins. Corpus-sized data never
+    rank window and regression over ``ZIPF_TOP_N`` rows (bounded by the
+    constant, NOT the corpus — the single-partition window holds
+    ≤ZIPF_TOP_N rows by construction) → one-row cross joins. Corpus-sized data never
     passes through an unpartitioned stage."""
     from pyspark.sql.window import Window
 
@@ -401,7 +395,7 @@ def zipf_fit(
         F.sum("n").cast("long").alias("n_tokens"),
         F.count(F.lit(1)).cast("long").alias("n_types"),
     )
-    top = counts.orderBy(F.desc("n"), "tok").limit(top_n)
+    top = counts.orderBy(F.desc("n"), "tok").limit(ZIPF_TOP_N)
     ranked = top.withColumn(
         "r", F.row_number().over(Window.orderBy(F.desc("n"), "tok"))
     )

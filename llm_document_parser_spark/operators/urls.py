@@ -127,7 +127,6 @@ def mark_blocked_hosts(
     blocklist: DataFrame,
     url_col: str = "url",
     domain_col: str = "domain",
-    broadcast_blocklist: bool = True,
 ) -> DataFrame:
     """Append ``host`` and boolean ``blocked``: true iff any dot-suffix of
     the url's host appears in ``blocklist[domain_col]``.
@@ -136,12 +135,10 @@ def mark_blocked_hosts(
     only (10^8 hosts, not 10^12 rows), and the verdict joins back to the
     data on the host key — the wide document text is never shuffled or
     compared. The blocked-host table is bounded by the blocklist's match
-    count, so it broadcasts whenever the blocklist itself does."""
-    bl = blocklist.select(F.col(domain_col).alias("_bl_domain")).distinct()
-    if broadcast_blocklist:
-        bl = F.broadcast(bl)
+    count, so it broadcasts with the blocklist itself."""
+    bl = F.broadcast(blocklist.select(F.col(domain_col).alias("_bl_domain")).distinct())
     with_host = df.withColumn("host", host_of(F.col(url_col)))
-    blocked_hosts = (
+    blocked_hosts = F.broadcast(
         with_host.select("host")
         .distinct()
         .withColumn("_sfx", F.explode(host_suffixes(F.col("host"))))
@@ -150,8 +147,6 @@ def mark_blocked_hosts(
         .distinct()
         .withColumn("_blocked", F.lit(True))
     )
-    if broadcast_blocklist:
-        blocked_hosts = F.broadcast(blocked_hosts)
     return (
         with_host.join(blocked_hosts, "host", "left")
         .withColumn("blocked", F.coalesce(F.col("_blocked"), F.lit(False)))
@@ -285,7 +280,6 @@ BITEXT_LANGS = ("en", "fr", "de", "es", "it", "pt", "nl", "pl", "ru", "tr")
 def bitext_url_pairs(
     df: DataFrame,
     url_col: str = "url",
-    langs: tuple[str, ...] = BITEXT_LANGS,
 ) -> DataFrame:
     """Candidate translation pairs from URL structure: sites publish
     parallel pages under language path prefixes (``/en/pricing`` ↔
@@ -294,11 +288,11 @@ def bitext_url_pairs(
     mining prelude (alignment scoring happens downstream on content).
 
     Returns ``(skeleton, lang_a, lang_b, url_a, url_b)`` with
-    ``lang_a < lang_b``; ``skeleton`` is the url with the language
+    ``lang_a < lang_b``, both in ``BITEXT_LANGS``; ``skeleton`` is the url with the language
     segment replaced by ``{lang}``.
 
     Scale shape: one anchored regexp per url, then a self equi-join on
-    the skeleton key — fan-out per skeleton is bounded by |langs| (a
+    the skeleton key — fan-out per skeleton is bounded by |BITEXT_LANGS| (a
     page has at most one url per language), so the join cannot blow up
     on popular pages the way content-keyed self-joins can.
     """
@@ -313,7 +307,7 @@ def bitext_url_pairs(
                 F.regexp_extract(u, _LANG_SEG_RE, 3),
             ).alias("skeleton"),
         )
-        .filter(F.col("lang").isin(*langs))
+        .filter(F.col("lang").isin(*BITEXT_LANGS))
     )
     a = s.select(
         "skeleton", F.col("lang").alias("lang_a"), F.col("url").alias("url_a")

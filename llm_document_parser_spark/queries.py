@@ -7375,11 +7375,11 @@ def embedding_int8_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     return quantization_report(e)
 
 
-def _logbin_sql(expr: str, n_bins: int = 40) -> str:
-    """Integer-comparison floor(log2(expr+1)) — the same
+def _logbin_sql(expr: str) -> str:
+    """Integer-comparison floor(log2(expr+1)) over 40 bins — the same
     never-use-float-log discipline as operators/stats.logbin_of."""
     return "(" + " + ".join(
-        f"CAST(({expr} + 1 >= {2 ** k}) AS INT)" for k in range(1, n_bins)
+        f"CAST(({expr} + 1 >= {2 ** k}) AS INT)" for k in range(1, 40)
     ) + ")"
 
 

@@ -24,14 +24,16 @@ def _below(node) -> list:
     return kids
 
 
-def plan_nodes(df) -> list:
+def plan_nodes(df, stop: str | None = None) -> list:
     """Every physical node of ``df``'s executed plan, descending into the
-    adaptive plan, its query stages and reused exchanges."""
+    adaptive plan, its query stages and reused exchanges, but not below a
+    node of class ``stop``."""
     out, todo = [], [df._jdf.queryExecution().executedPlan()]
     while todo:
         node = todo.pop()
         out.append(node)
-        todo += _below(node)
+        if class_name(node) != stop:
+            todo += _below(node)
     return out
 
 

@@ -7,10 +7,12 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from llm_document_parser_spark.operators import bloom as bl
 from llm_document_parser_spark.operators.bloom import (
     build_seen_bloom,
     filter_might_contain,
 )
+from plan_nodes import node_classes
 
 
 def _urls(spark, lo, hi, name="url"):
@@ -52,30 +54,27 @@ def test_prefilter_superset_of_exact_antijoin(spark):
 def test_probe_is_map_side(spark):
     seen = _urls(spark, 0, 1000)
     bf = build_seen_bloom(seen)
-    plan = (
-        filter_might_contain(_urls(spark, 0, 100), bf)
-        ._jdf.queryExecution().executedPlan().toString()
-    )
+    nodes = node_classes(filter_might_contain(_urls(spark, 0, 100), bf))
     # zero SHUFFLE on the probe side; the small-bitmap path adds a
     # BroadcastExchange for the one-row bitmap relation, which moves the
     # bitmap once per executor, never the candidates
-    assert "Exchange hashpartitioning" not in plan
-    assert "Exchange rangepartitioning" not in plan
-    assert "Exchange RoundRobin" not in plan
+    assert "ShuffleExchangeExec" not in nodes
+    assert "BroadcastExchangeExec" in nodes
 
 
 def test_large_bitmap_arrow_path_no_false_negatives(spark):
-    # oversizing expected_items pushes the bitmap past the inline
-    # threshold, exercising the Arrow+broadcast probe path (the
-    # crawl-scale configuration); membership semantics must be identical
+    # a bitmap past the inline threshold takes the Arrow+broadcast probe
+    # path (the crawl-scale configuration); membership semantics must be
+    # identical
     seen = _urls(spark, 0, 500)
-    bf = build_seen_bloom(seen, expected_items=5_000_000, fpp=0.01)
-    from llm_document_parser_spark.operators.bloom import (
-        _INLINE_BITMAP_MAX_BYTES,
-    )
-
-    assert bf.nbytes() > _INLINE_BITMAP_MAX_BYTES
-    kept = filter_might_contain(_urls(spark, 0, 500), bf).count()
+    bf = build_seen_bloom(seen, fpp=0.01)
+    orig = bl._INLINE_BITMAP_MAX_BYTES
+    bl._INLINE_BITMAP_MAX_BYTES = 0  # the bitmap is now "large"
+    try:
+        assert bf.nbytes() > bl._INLINE_BITMAP_MAX_BYTES
+        kept = filter_might_contain(_urls(spark, 0, 500), bf).count()
+    finally:
+        bl._INLINE_BITMAP_MAX_BYTES = orig
     assert kept == 500  # every seen url probes true -> all kept
 
 
@@ -84,8 +83,6 @@ def test_inline_and_arrow_probes_agree(spark):
     # implementations of one bit layout: forcing each over the same
     # filter geometry must keep every member (false negatives are
     # impossible in both)
-    from llm_document_parser_spark.operators import bloom as bl
-
     seen = _urls(spark, 0, 800)
     cands = _urls(spark, 0, 2000)
     bf = build_seen_bloom(seen, fpp=0.01)

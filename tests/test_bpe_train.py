@@ -90,11 +90,6 @@ def test_tiebreak_is_lexicographic(spark):
     assert got == [("b", "a", 3)]
 
 
-def test_min_pair_count_stops_early(spark):
-    docs = spark.createDataFrame([("ab ab",)], "text string")
-    assert learn_bpe(word_counts(docs), 5, min_pair_count=3) == []
-
-
 def test_single_char_words_learn_nothing(spark):
     docs = spark.createDataFrame([("a b c a b",)], "text string")
     assert learn_bpe(word_counts(docs), 5) == []

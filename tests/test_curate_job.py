@@ -4,15 +4,10 @@ semantics: near-dup keep-id wins, gates produce disjoint verdicts)."""
 
 from __future__ import annotations
 
-import sys
-
+import pytest
 from pyspark.sql import functions as F
 
-sys.path.insert(0, "/root/repo")
-
-import pytest  # noqa: E402
-
-from jobs.curate_job import curate, run_curation  # noqa: E402
+from jobs.curate_job import curate, run_curation
 
 
 def test_curate_cascade(spark):
@@ -283,3 +278,13 @@ def test_curation_pack_plan(spark, tmp_path):
         per_shard[r["shard"]] = per_shard.get(r["shard"], 0) + r["n_tokens"]
     assert pk["sequences"] == sum(-(-t // 64) for t in per_shard.values())
     assert 0.0 <= pk["boundary_cross_frac"] <= 1.0
+
+
+def test_curation_pack_plan_rejects_unknown_tokenizer(spark, tmp_path):
+    """The packing plan counts tokens like the budget does: an unknown
+    ``tokenizer`` raises instead of silently counting whitespace tokens."""
+    with pytest.raises(ValueError, match="unknown tokenizer"):
+        run_curation(
+            spark, _corpus(spark), str(tmp_path / "packed"), num_buckets=4,
+            min_quality=0.0, threshold=0.9, tokenizer="bpe", pack_seq_len=64,
+        )

@@ -5,9 +5,8 @@ broadcast join (map-side, no corpus shuffle before the agg)."""
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
-
 from llm_document_parser_spark.operators import decontaminate as dc
+from plan_nodes import class_name, node_classes, plan_nodes
 
 
 def _bench(spark):
@@ -60,31 +59,16 @@ def test_min_hits_threshold(spark):
 
 def test_benchmark_is_broadcast(spark):
     out = dc.contamination_report(_docs(spark), _bench(spark), n=8)
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in plan
-
-    shuffled = dc.contamination_report(
-        _docs(spark), _bench(spark), n=8, broadcast_bench=False
-    )
-    plan2 = shuffled._jdf.queryExecution().executedPlan().toString()
-    assert "SortMergeJoin" in plan2 or "ShuffledHashJoin" in plan2
+    assert "BroadcastHashJoinExec" in node_classes(out)
 
 
 def test_bloom_prefilter_report_identical(spark):
     # Bloom pre-filter has no false negatives, so the verified report must
-    # equal the exact path's report exactly — for both join key modes
+    # equal the exact path's report exactly
     docs, bench = _docs(spark), _bench(spark)
     exact = sorted(map(tuple, dc.contamination_report(docs, bench, n=8).collect()))
-    for join_on_hash in (False, True):
-        got = sorted(
-            map(
-                tuple,
-                dc.contamination_report(
-                    docs, bench, n=8, join_on_hash=join_on_hash, bloom_fpp=0.001
-                ).collect(),
-            )
-        )
-        assert got == exact, f"join_on_hash={join_on_hash}"
+    got = dc.contamination_report(docs, bench, n=8, bloom_fpp=0.001).collect()
+    assert sorted(map(tuple, got)) == exact
 
 
 def test_bloom_prefilter_cuts_probe_volume(spark):
@@ -97,11 +81,8 @@ def test_bloom_prefilter_cuts_probe_volume(spark):
     )
 
     docs, bench = _docs(spark), _bench(spark)
-    from llm_document_parser_spark.operators.dedup import shingles_col
-
-    doc_ngrams = docs.select(
-        "doc_id", F.explode(shingles_col(F.col("text"), k=8)).alias("ngram")
-    )
+    # distinct 8-grams per document
+    doc_ngrams = dc.benchmark_ngrams(docs, id_col="doc_id", n=8)
     bench_keys = dc.benchmark_ngrams(bench, n=8).select("ngram").distinct()
     bloom = build_seen_bloom(bench_keys, url_col="ngram", fpp=0.001)
     total = doc_ngrams.count()
@@ -114,6 +95,14 @@ def test_bloom_prefilter_cuts_probe_volume(spark):
     assert n_survived - true_hits <= max(5, int(total * 0.01))
 
 
+def _hash_exchanges(df) -> int:
+    return sum(
+        class_name(n) == "ShuffleExchangeExec"
+        and class_name(n.outputPartitioning()) == "HashPartitioning"
+        for n in plan_nodes(df)
+    )
+
+
 def test_bloom_prefilter_keeps_broadcast_join_shape(spark):
     # the pre-filter must not change the join strategy: corpus grams still
     # meet the benchmark via a broadcast hash join, and the Bloom probe is
@@ -121,27 +110,22 @@ def test_bloom_prefilter_keeps_broadcast_join_shape(spark):
     out = dc.contamination_report(
         _docs(spark), _bench(spark), n=8, bloom_fpp=0.001
     )
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in plan and "SortMergeJoin" not in plan
+    nodes = node_classes(out)
+    assert "BroadcastHashJoinExec" in nodes and "SortMergeJoinExec" not in nodes
     # small bitmaps probe as pure codegen expressions against an inlined
     # word array (round-6 optimization): NO Python stage in the plan at
     # all — the JVM↔Python boundary only appears for bitmaps too big to
     # inline (> _INLINE_BITMAP_MAX_BYTES), which this 500-gram filter is
     # far below
-    assert plan.count("ArrowEvalPython") == 0
-    assert plan.count("BatchEvalPython") == 0
+    assert "ArrowEvalPythonExec" not in nodes
+    assert "BatchEvalPythonExec" not in nodes
     # and the pre-filter adds ZERO shuffles vs the exact path: the corpus
     # stream still reaches the join exchange-free (the bloom plan can show
     # FEWER exchanges — its benchmark gram table is checkpointed before
     # the bitmap build, so that side's distinct is materialized outside
     # this plan)
-    exact_plan = (
-        dc.contamination_report(_docs(spark), _bench(spark), n=8)
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    assert plan.count("Exchange hashpartitioning") <= exact_plan.count(
-        "Exchange hashpartitioning"
-    )
+    exact = dc.contamination_report(_docs(spark), _bench(spark), n=8)
+    assert _hash_exchanges(out) <= _hash_exchanges(exact)
 
 
 def test_short_docs_and_benchmarks_yield_no_ngrams(spark):

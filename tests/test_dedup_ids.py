@@ -80,7 +80,7 @@ def test_simhash_and_jaccard_keep_native_ids(spark):
     docs = _docs(spark, lambda i: f"url-{i}")
     sims = dedup.simhash16(docs).collect()
     assert {r["doc_id"] for r in sims} == {"url-1", "url-2", "url-3"}
-    jac = dedup.jaccard_pairs(docs, threshold=0.3).collect()
+    jac = dedup.jaccard_pairs(docs).collect()
     assert any(
         (r["id_a"], r["id_b"]) == ("url-1", "url-2") and r["jaccard"] > 0.3
         for r in jac

@@ -14,6 +14,7 @@ import pyspark.sql.functions as F
 import pytest
 
 from llm_document_parser_spark.operators import dsir
+from plan_nodes import node_classes
 
 DOCS = [
     (0, "the cat sat on the mat"),
@@ -104,8 +105,8 @@ def test_gumbel_keys_deterministic_across_runs(spark):
 def test_scoring_join_is_broadcast_and_topk_has_no_global_sort(spark):
     docs, target = _frames(spark)
     weighted = dsir.importance_weights(docs, target)
-    plan = weighted._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in plan  # ratio table ships, corpus stays put
+    # ratio table ships, corpus stays put
+    assert "BroadcastHashJoinExec" in node_classes(weighted)
     sample = dsir.importance_resample(weighted, 3)
-    splan = sample._jdf.queryExecution().executedPlan().toString()
-    assert "TakeOrderedAndProject" in splan  # top-k, not a global Sort
+    # top-k, not a global Sort
+    assert "TakeOrderedAndProjectExec" in node_classes(sample)

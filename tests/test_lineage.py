@@ -272,7 +272,7 @@ def test_single_group_commit_runs_one_job_fewer(spark, tmp_path, jobs_in_group):
     def append():
         bucket_rows = {b: 0 for b in group}
         bucket_rows.update({r["bucket"]: r["count"] for r in counted})
-        _append_lineage(spark, lin, "b", bucket_rows, dt.datetime.now(), attempt=1)
+        _append_lineage(spark, lin, "b", bucket_rows, dt.datetime.now())
 
     write_jobs = jobs_in_group("lineage-write", write)
     recount_jobs = jobs_in_group("lineage-recount", recount)
@@ -297,7 +297,7 @@ def test_append_lineage_matches_create_dataframe(spark, tmp_path, monkeypatch):
     monkeypatch.setattr(lineage, "_dt", types.SimpleNamespace(datetime=_Frozen))
     bucket_rows = {5: 12, 0: 0, 9: 2**40}
     recs = [
-        ("job'1", b, "completed", n, started, finished, 2)
+        ("job'1", b, "completed", n, started, finished, 1)
         for b, n in sorted(bucket_rows.items())
     ]
     key = "spark.sql.session.timeZone"
@@ -308,7 +308,7 @@ def test_append_lineage_matches_create_dataframe(spark, tmp_path, monkeypatch):
         spark.createDataFrame(recs, LINEAGE_SCHEMA).write.parquet(ref)
         want = spark.read.parquet(ref)
         for appends in (1, 2):
-            _append_lineage(spark, str(lin), "job'1", bucket_rows, started, attempt=2)
+            _append_lineage(spark, str(lin), "job'1", bucket_rows, started)
             assert len(list(lin.glob("*.parquet"))) == appends
         got = spark.read.parquet(str(lin))
         assert got.schema == want.schema

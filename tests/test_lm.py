@@ -1,4 +1,4 @@
-"""Unigram LM scoring: hand-computed values, OOV floor semantics, and the
+"""Unigram LM scoring: hand-computed values, OOV tokens, and the
 broadcast (map-side scoring) plan shape.
 Cross-engine value parity on the corpus lives in the ``doc_unigram_logprob``
 catalog oracle."""
@@ -13,6 +13,7 @@ from llm_document_parser_spark.operators.lm import (
     score_unigram_logprob,
     train_unigram_lm,
 )
+from plan_nodes import class_name, node_classes, plan_nodes
 
 
 def _corpus(spark):
@@ -41,35 +42,20 @@ def test_train_and_score_hand_values(spark):
 def test_oov_floor(spark):
     df = _corpus(spark)
     lm = train_unigram_lm(df.filter(F.col("doc_id") == "d1"), "text")  # no 'c'
-    floor = math.log(1e-9)
     scored = {
-        r["doc_id"]: r
-        for r in score_unigram_logprob(
-            df, lm, "doc_id", "text", floor_logp=floor
-        ).collect()
-    }
-    # d2 = [a, c]; c is OOV → floor
-    want = round(-(math.log(2 / 3) + floor) / 2, 6)
-    assert scored["d2"]["avg_neg_logp"] == want
-    assert scored["d2"]["n_tokens"] == 2
-    # without a floor, OOV tokens silently drop via the inner join
-    no_floor = {
         r["doc_id"]: r
         for r in score_unigram_logprob(df, lm, "doc_id", "text").collect()
     }
-    assert no_floor["d2"]["n_tokens"] == 1
+    # d2 = [a, c]; c is OOV: no floor score, it drops via the inner join
+    assert scored["d2"]["n_tokens"] == 1
+    assert scored["d2"]["avg_neg_logp"] == round(-math.log(2 / 3), 6)
 
 
 def test_scoring_is_broadcast(spark):
     df = _corpus(spark)
     lm = train_unigram_lm(df, "text")
-    plan = (
-        score_unigram_logprob(df, lm, "doc_id", "text")
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "BroadcastHashJoin" in plan, plan
+    nodes = node_classes(score_unigram_logprob(df, lm, "doc_id", "text"))
+    assert "BroadcastHashJoinExec" in nodes, nodes
 
 
 # ---------------------------------------------------------------------------
@@ -181,12 +167,9 @@ def test_interpolated_scoring_is_map_side(spark):
     plan = score_interpolated_logprob(
         df, train_bigram_lm(df, "text"), train_unigram_lm(df, "text")
     )
-    physical = plan._jdf.queryExecution().executedPlan().toString()
-    assert physical.count("BroadcastHashJoin") == 2, physical
-    # the scoring side above the broadcast builds is shuffle-free: the only
-    # non-broadcast exchange touching doc_id is the final per-doc agg's own
-    scoring_exchanges = [
-        ln for ln in physical.splitlines()
-        if "Exchange hashpartitioning(doc_id" in ln
-    ]
-    assert len(scoring_exchanges) == 1, physical
+    joins = [class_name(n) for n in plan_nodes(plan)].count("BroadcastHashJoinExec")
+    assert joins == 2
+    # the scoring side above the broadcast builds is shuffle-free: its only
+    # exchange is the final per-doc agg's own
+    scoring = [class_name(n) for n in plan_nodes(plan, stop="BroadcastExchangeExec")]
+    assert scoring.count("ShuffleExchangeExec") == 1, scoring

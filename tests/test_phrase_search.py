@@ -112,7 +112,7 @@ def test_limit_orders_by_score_then_id(spark):
     df = spark.createDataFrame(
         list(CORPUS.items()), ["url", "extracted_text"]
     )
-    rows = phrase_search(df, '"brown fox"', limit=2).collect()
+    rows = phrase_search(df, '"brown fox"').limit(2).collect()
     exp = sorted(
         _replay(CORPUS, '"brown fox"').items(),
         key=lambda kv: (-kv[1][0], kv[0]),

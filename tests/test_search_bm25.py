@@ -9,11 +9,8 @@ import re
 
 from pyspark.sql import functions as F
 
-from llm_document_parser_spark.operators.search import (
-    STOPWORDS,
-    bm25_scores,
-    build_token_index,
-)
+from llm_document_parser_spark.operators.search import STOPWORDS, bm25_scores
+from plan_nodes import node_classes
 
 
 def _replay(
@@ -117,27 +114,12 @@ def test_no_match_and_stopword_only_query(spark):
     assert _run(spark, CORPUS, "the and of") == {}
 
 
-def test_accepts_prebuilt_index(spark):
-    df = spark.createDataFrame(
-        list(CORPUS.items()), ["url", "extracted_text"]
-    )
-    idx = build_token_index(df)
-    assert _run(spark, CORPUS, "spark", index=idx) == _replay(
-        CORPUS, "spark"
-    )
-
-
 def test_plan_broadcasts_corpus_stats_and_dfreq(spark):
     df = spark.createDataFrame(
         list(CORPUS.items()), ["url", "extracted_text"]
     )
-    plan = (
-        bm25_scores(df, "spark hash")
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
+    nodes = node_classes(bm25_scores(df, "spark hash"))
     # the 1-row corpus aggregate and per-term dfreq join broadcast; the
     # only non-broadcast joins key on doc_id/token (no cartesian blowup)
-    assert "BroadcastNestedLoopJoin" in plan or "BroadcastExchange" in plan
-    assert "CartesianProduct" not in plan
+    assert {"BroadcastNestedLoopJoinExec", "BroadcastExchangeExec"} & nodes
+    assert "CartesianProductExec" not in nodes

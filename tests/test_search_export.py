@@ -96,7 +96,6 @@ def test_quick_search_relevance_ranking(spark):
     """O2 — tf ranking, OR semantics, stopword drop, deterministic
     tie-break, and snippet truncation."""
     from llm_document_parser_spark.operators.search import (
-        build_token_index,
         quick_search,
         tokenize_query,
     )
@@ -122,11 +121,6 @@ def test_quick_search_relevance_ranking(spark):
     assert got[1]["n_terms_matched"] == 2
     assert got[1]["text_snippet"].endswith("...")
     assert len(got[1]["text_snippet"]) == 103
-
-    # pre-built index path returns the same thing
-    idx = build_token_index(df)
-    got2 = quick_search(df, "alpha beta", limit=3, index=idx).collect()
-    assert [r["doc_id"] for r in got2] == ["u3", "u1", "u0"]
 
     # empty-after-stopwords query matches nothing
     assert quick_search(df, "the and", limit=3).count() == 0

@@ -95,7 +95,7 @@ def test_zipf_fit_exact_small_corpus(spark):
     df = spark.createDataFrame(
         [("the cat the cat the sat the!",)], "text string"
     )
-    r = zipf_fit(df, top_n=10).first()
+    r = zipf_fit(df).first()
     assert r["n_types"] == 3 and r["n_tokens"] == 7
     xs = [math.log(i) for i in (1, 2, 3)]
     ys = [math.log(n) for n in (4, 2, 1)]
@@ -110,15 +110,15 @@ def test_zipf_fit_exact_small_corpus(spark):
 
 
 def test_zipf_fit_top_n_bounds_window(spark):
-    from llm_document_parser_spark.operators.textstats import zipf_fit
+    from llm_document_parser_spark.operators.textstats import ZIPF_TOP_N, zipf_fit
 
-    df = spark.createDataFrame(
-        [("a a a b b c",), ("d e f g",)], "text string"
-    )
-    r = zipf_fit(df, top_n=2).first()
-    assert r["n_types"] == 7 and r["n_tokens"] == 10
-    # top-2 types are a(3), b(2) → coverage 5/10
-    assert r["top_coverage"] == 0.5
+    singles = " ".join(f"t{i}" for i in range(ZIPF_TOP_N))
+    df = spark.createDataFrame([("a a a b b",), (singles,)], "text string")
+    r = zipf_fit(df).first()
+    n_tokens = 5 + ZIPF_TOP_N
+    assert r["n_types"] == 2 + ZIPF_TOP_N and r["n_tokens"] == n_tokens
+    # the top types are a(3), b(2) and all but two singles
+    assert r["top_coverage"] == round((n_tokens - 2) / n_tokens, 6)
 
 
 # ---------------------------------------------------------------------------

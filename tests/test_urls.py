@@ -6,6 +6,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from llm_document_parser_spark.operators import urls as U
+from plan_nodes import node_classes
 
 
 def _canon(spark, url):
@@ -118,14 +119,9 @@ def test_mark_blocked_subdomain_semantics(spark):
 
 def test_blocklist_join_is_broadcast(spark):
     pages = spark.createDataFrame([("https://a.com/x",)], "url string")
-    plan = (
-        mark_blocked_hosts(pages, _bl(spark, ["a.com"]))
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "BroadcastHashJoin" in plan
-    assert "SortMergeJoin" not in plan
+    nodes = node_classes(mark_blocked_hosts(pages, _bl(spark, ["a.com"])))
+    assert "BroadcastHashJoinExec" in nodes
+    assert "SortMergeJoinExec" not in nodes
 
 
 # ---------------------------------------------------------------------------
@@ -231,14 +227,3 @@ def test_bitext_pairs_basic_and_ordering(spark):
         r["skeleton"] for r in bitext_url_pairs(df).collect()
     }
     assert skels == {"https://site.example/{lang}/pricing"}
-
-
-def test_bitext_lang_set_is_configurable(spark):
-    from llm_document_parser_spark.operators.urls import bitext_url_pairs
-
-    df = spark.createDataFrame(
-        [("https://s.example/xx/p",), ("https://s.example/yy/p",)],
-        "url string",
-    )
-    assert bitext_url_pairs(df).count() == 0
-    assert bitext_url_pairs(df, langs=("xx", "yy")).count() == 1
