@@ -184,6 +184,8 @@ def run_curation(
     committed output, so it is deterministic and safe to recompute on a
     resumed job; uses the same token definition selected by
     ``tokenizer``."""
+    if tokenizer not in ("whitespace", "exact"):
+        raise ValueError(f"unknown tokenizer: {tokenizer!r}")
     verdicts_path = output.rstrip("/") + "_verdicts"
     lineage_path = lineage_path or output.rstrip("/") + "_lineage"
     docs = results.filter(
@@ -195,8 +197,6 @@ def run_curation(
         whitespace count the operators default to)."""
         if tokenizer == "whitespace":
             return df, None
-        if tokenizer != "exact":
-            raise ValueError(f"unknown tokenizer: {tokenizer!r}")
         from llm_document_parser_spark.operators.tokenizers import (
             exact_token_counts,
         )

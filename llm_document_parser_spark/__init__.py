@@ -11,6 +11,7 @@ reference repo Swarup-Ingale/LLM-Document-Parser, re-expressed Spark-first:
 
 Package map:
   session       SparkSession factory (AQE / Arrow / shuffle tuning)
+  zipcache      keeps a Spark Python worker's zip directories across tasks
   schemas       explicit StructType schemas (pages, results, lineage)
   minipdf       deterministic minimal PDF writer + content-stream text extractor
   html_extract  boilerplate-strip spec (text-density / link-density block scoring)
@@ -22,4 +23,13 @@ Package map:
   streaming.*   Structured Streaming ingest (readStream + foreachBatch)
 """
 
+from pyspark import TaskContext
+
 __version__ = "0.1.0"
+
+if TaskContext.get() is not None:
+    # a Spark Python worker unpickling a UDF: stop every later task
+    # re-reading Spark's zip archives (zipcache.py)
+    from .zipcache import keep_zip_directories
+
+    keep_zip_directories()

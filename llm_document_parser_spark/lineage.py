@@ -41,8 +41,12 @@ def success_marker_exists(spark: SparkSession, path: str) -> bool:
     cluster can write (s3a://, hdfs://, file paths), not just local disk;
     a crashed writer leaves files but no marker, and reusing such a
     partial directory silently corrupts whatever consumes it."""
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path.rstrip("/") + "/_SUCCESS")
+    return _path_exists(spark, path.rstrip("/") + "/_SUCCESS")
+
+
+def _path_exists(spark: SparkSession, path: str) -> bool:
+    """``path`` exists, asked of the Hadoop FileSystem for its scheme."""
+    hpath = spark._jvm.org.apache.hadoop.fs.Path(path)
     fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
     return bool(fs.exists(hpath))
 
@@ -54,6 +58,10 @@ def with_bucket(df: DataFrame, num_buckets: int, key: str = "url") -> DataFrame:
 
 
 def completed_buckets(spark: SparkSession, lineage_path: str, job_id: str) -> set[int]:
+    # a fresh job has no lineage table: ask the FileSystem rather than pay
+    # for (and log) the failed read
+    if not _path_exists(spark, lineage_path):
+        return set()
     try:
         rows = (
             spark.read.parquet(lineage_path)
@@ -64,9 +72,10 @@ def completed_buckets(spark: SparkSession, lineage_path: str, job_id: str) -> se
         )
         return {r["bucket"] for r in rows}
     except AnalysisException as e:
-        # Only a missing lineage table means "fresh job"; any other read
-        # failure (corrupt footer, permissions, storage blip) must surface —
-        # swallowing it would silently trigger a full recompute.
+        # Only a missing lineage table (removed since the check above)
+        # means "fresh job"; any other read failure (corrupt footer,
+        # permissions, storage blip) must surface — swallowing it would
+        # silently trigger a full recompute.
         if e.getCondition() == "PATH_NOT_FOUND":
             return set()
         raise

@@ -282,9 +282,11 @@ def test_curation_pack_plan(spark, tmp_path):
 
 def test_curation_pack_plan_rejects_unknown_tokenizer(spark, tmp_path):
     """The packing plan counts tokens like the budget does: an unknown
-    ``tokenizer`` raises instead of silently counting whitespace tokens."""
+    ``tokenizer`` raises instead of silently counting whitespace tokens,
+    and it raises before phase 1 writes anything."""
     with pytest.raises(ValueError, match="unknown tokenizer"):
         run_curation(
             spark, _corpus(spark), str(tmp_path / "packed"), num_buckets=4,
             min_quality=0.0, threshold=0.9, tokenizer="bpe", pack_seq_len=64,
         )
+    assert not (tmp_path / "packed_verdicts").exists()

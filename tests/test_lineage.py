@@ -157,6 +157,23 @@ def test_completed_buckets_propagates_non_missing_errors(spark, tmp_path):
     assert not isinstance(ei.value, AnalysisException) or "PATH_NOT_FOUND" not in str(ei.value)
 
 
+def test_completed_buckets_fresh_job_reads_nothing(spark, tmp_path, monkeypatch):
+    """A missing lineage table is found by the FileSystem check, with no
+    failed read; one removed between that check and the read still means
+    a fresh job."""
+    missing = str(tmp_path / "never_written")
+
+    def no_read(self):
+        raise AssertionError("read a missing lineage table")
+
+    with monkeypatch.context() as m:
+        m.setattr(type(spark), "read", property(no_read))
+        assert completed_buckets(spark, missing, "j") == set()
+
+    monkeypatch.setattr(lineage, "_path_exists", lambda spark, path: True)
+    assert completed_buckets(spark, missing, "j") == set()
+
+
 def test_committed_row_total_latest_commit_wins(spark, tmp_path):
     """A bucket re-committed on resume with FEWER rows (input shrank) was
     partition-overwritten — the latest lineage row is the truth, not the max."""
